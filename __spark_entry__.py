@@ -45,4 +45,4 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     registry.load_all()
-    return registry.ORACLES.resolve()
+    return dict(registry.ORACLES)

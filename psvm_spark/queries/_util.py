@@ -104,6 +104,16 @@ def lit_double_matrix(rows) -> Column:
     )
 
 
+def _has_nan(v) -> bool:
+    if isinstance(v, float):
+        return v != v
+    if isinstance(v, dict):
+        return any(_has_nan(x) for x in v.values())
+    if isinstance(v, (list, tuple)):
+        return any(_has_nan(x) for x in v)
+    return False
+
+
 def local_df(spark, rows, schema: str):
     """Small driver-side result -> DataFrame via the Arrow path.
 
@@ -121,17 +131,18 @@ def local_df(spark, rows, schema: str):
     NULL — a float64 column would coerce None to NaN) and are cast per
     the explicit ``schema``.  The ONE value the Arrow path cannot
     represent faithfully is a literal float NaN (Arrow's from_pandas
-    masks NaN to null on object columns — verified in this env), so
-    rows containing NaN take the plain list path, which preserves it.
-    Falls back to the plain list path on any conversion error
-    (correctness first; the fast path is an optimization)."""
+    masks NaN to null on object columns), so rows containing NaN at any
+    depth (inside arrays, structs and maps too) take the plain list
+    path, which preserves it.  ``rows`` may be any iterable; it is
+    materialized once.  Falls back to the plain list path on any
+    conversion error (correctness first; the fast path is an
+    optimization)."""
+    rows = list(rows)
     try:
         import pandas as pd
         from pyspark.sql.types import StructType
 
-        if any(
-            isinstance(v, float) and v != v for r in rows for v in r
-        ):  # NaN: only the pickled path round-trips it as NaN, not NULL
+        if any(_has_nan(v) for r in rows for v in r):
             return spark.createDataFrame(rows, schema)
         # DDL parser handles nested/parameterized types (decimal(12,2),
         # map<string,int>, ...) that naive comma-splitting would break on

@@ -1443,7 +1443,7 @@ def agg_median_two_pass(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.sum("cnt").over(wcum) - F.col("cnt")).alias("before"),
         F.sum("cnt").over(wcum).alias("through"),
     )
-    targets = local_df(spark, 
+    targets = local_df(spark,
         [(p, (n - 1) * p // 100 + 1) for p in _Q2P_PCTS], "p int, k bigint"
     )
     tb = F.broadcast(targets).join(

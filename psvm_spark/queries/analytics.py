@@ -1341,9 +1341,7 @@ def window_period_over_period(spark: SparkSession, sf_dir: str) -> DataFrame:
 # in a total (ts, event_id) order, so in the one-file -> one-batch
 # replay (see queries/streaming.py B41) the update-mode final is the
 # exact batch computation — prefix sum, seeded running min, peak, and
-# strict alarm count all reproduce as layered window functions.  Lives
-# here rather than queries/streaming.py because that module registers
-# inside the pinned first-50 driver-sample window.
+# strict alarm count all reproduce as layered window functions.
 
 
 @query(
@@ -2105,9 +2103,7 @@ def ts_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exact rolling MEDIAN needs the frame's values materialized).  The
 # frame collects at most 5 values — constant state per row — sorts
 # them, and indexes the middle; values are 2-dp doubles so the sort
-# and pick are deterministic in both engines.  Lives in the analytics
-# module because queries/windows.py sits inside the pinned first-50
-# driver-sample window.
+# and pick are deterministic in both engines.
 
 
 @query(
@@ -2578,7 +2574,7 @@ def agg_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         (t, round(pi[idx[t]], 9), obs.get(t, 0), obs.get(t, 0) / total)
         for t in types
     ]
-    return local_df(spark, 
+    return local_df(spark,
         rows, "event_type string, stationary_prob double, n_observed long, observed_freq double"
     )
 
@@ -3493,7 +3489,7 @@ def join_point_in_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("py").cast("double") / _PIP_CELL).cast("bigint").alias("cy"),
     )
     cells = local_df(spark, _pip_cells(), "poly_id int, cx bigint, cy bigint")
-    edges = local_df(spark, 
+    edges = local_df(spark,
         _pip_edges(), "poly_id int, x1 long, y1 long, x2 long, y2 long"
     )
     cand = (
@@ -4241,7 +4237,7 @@ def ts_haar_wavelet(spark: SparkSession, sf_dir: str) -> DataFrame:
             (level, len(s), sum(v * v for v in d), max(abs(v) for v in d), s[0])
         )
         a = s
-    return local_df(spark, 
+    return local_df(spark,
         out,
         "level int, n_coeffs int, energy bigint, max_abs_d bigint,"
         " first_approx bigint",
@@ -6890,7 +6886,7 @@ def ml_quantile_pinball(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).over(Window.partitionBy("wd")).alias("n"),
         )
     )
-    qs = local_df(spark, 
+    qs = local_df(spark,
         [("0.25",), ("0.50",), ("0.75",)], "qs string"
     ).select(F.col("qs").cast("decimal(3,2)").alias("q"))
     fc = train.join(

@@ -271,7 +271,7 @@ def svm_train_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     train, test, _ = binary_train_test(spark, sf_dir)
     _, acc = fit_eval_linear_svc(train, test, "embedding")
-    return local_df(spark, 
+    return local_df(spark,
         [("linear_svc_binary", float(train.count()), float(test.count()), acc)],
         "model string, n_train double, n_test double, accuracy double",
     )
@@ -300,7 +300,7 @@ def svm_multiclass_train_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         res = eval_multiclass(test, "embedding", "y", W).collect()[0]
     finally:
         train.unpersist()
-    return local_df(spark, 
+    return local_df(spark,
         [
             (
                 "multiclass_hinge_10class",
@@ -330,7 +330,7 @@ def svm_nystrom_train_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     tr = nystrom_map(train, "embedding", landmarks, GAMMA)
     te = nystrom_map(test, "embedding", landmarks, GAMMA)
     _, acc = fit_eval_linear_svc(tr, te, "phi")
-    return local_df(spark, 
+    return local_df(spark,
         [("nystrom_rbf_svc", float(len(landmarks)), acc)],
         "model string, n_landmarks double, accuracy double",
     )
@@ -441,7 +441,7 @@ def svm_rff_train_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     tr = rff_map(train, "embedding", dim, GAMMA, n_features=256)
     te = rff_map(test, "embedding", dim, GAMMA, n_features=256)
     _, acc = fit_eval_linear_svc(tr, te, "phi")
-    return local_df(spark, 
+    return local_df(spark,
         [("rff_rbf_svc", 256.0, acc)],
         "model string, n_features double, accuracy double",
     )
@@ -462,7 +462,7 @@ def svm_failsafe_power_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     state = FailsafeState(scratch_dir("psvm_failsafe_"))
     v, lam = power_iteration(e, "embedding", dim, n_iter=6, state=state, checkpoint_every=2)
     step, _ = state.load_latest()
-    return local_df(spark, 
+    return local_df(spark,
         [(float(lam), float(v[0]), float(step))],
         "rayleigh double, v0 double, last_checkpoint_step double",
     )
@@ -1080,7 +1080,7 @@ def ml_boosting_two_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("y"),
     )
     s2, a2, b2, ml2, mr2, g2 = _gbm_best(res, "disc")
-    return local_df(spark, 
+    return local_df(spark,
         [
             (1, "l_quantity", s1, a1, b1, ml1, mr1, g1),
             (2, "l_discount", s2, a2, b2, ml2, mr2, g2),
@@ -1228,7 +1228,7 @@ def ml_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         mx = max(abs(x) for x in u)
         # Python // floors (matching the oracle's positivity-bias floor)
         v = [(x * _PCA_VSCALE) // mx for x in u]
-    vdf = local_df(spark, 
+    vdf = local_df(spark,
         [(d + 1, int(v[d])) for d in range(dim)], "dim int, v_fp long"
     )
     diag = pairs.filter(F.col("d") == F.col("e")).select(
@@ -1460,7 +1460,7 @@ def ml_isotonic_pav(spark: SparkSession, sf_dir: str) -> DataFrame:
                 round(float(ys[k - 1]) / ns[k - 1], 9),
             )
         )
-    return local_df(spark, 
+    return local_df(spark,
         out,
         "bin int, n bigint, y_pos bigint, blk_n bigint, blk_y bigint,"
         " fitted double",
@@ -1715,7 +1715,7 @@ def ml_gmm_em(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         pi1 = int(math.floor(float(n1s) / (n1s + n2s) * _GMM_RSC + 0.5))
         out.append((k, mu1, mu2, v1, v2, pi1))
-    return local_df(spark, 
+    return local_df(spark,
         out, "iter int, mu1_fp bigint, mu2_fp bigint, var1 bigint,"
         " var2 bigint, pi1_fp bigint"
     )
@@ -1846,7 +1846,7 @@ def svm_hinge_fixed_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         out.append((k, w0, w1, nv, ne))
-    return local_df(spark, 
+    return local_df(spark,
         out,
         "iter int, w0_fp bigint, w1_fp bigint, n_viol bigint, n_err bigint",
     )

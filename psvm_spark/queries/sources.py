@@ -366,7 +366,7 @@ def scan_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one real pass (noop materialization) populates the observation
     observed.write.format("noop").mode("overwrite").save()
     m = obs.get
-    return local_df(spark, 
+    return local_df(spark,
         [(int(m["n_rows"]), float(m["value_mass"]), int(m["n_errors"]))],
         "n_rows long, value_mass double, n_errors long",
     )
@@ -528,7 +528,7 @@ def scan_aggregate_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = lambda v: int(  # noqa: E731
         (decimal.Decimal(str(v)).quantize(decimal.Decimal("0.01"))) * 100
     )
-    return local_df(spark, 
+    return local_df(spark,
         [
             (
                 row.n_rows,

@@ -535,7 +535,7 @@ def stream_file_sink_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame
     n_first = run_once()
     n_second = run_once()  # same checkpoint, nothing new -> no-op commit
     n_batch = load_table(spark, sf_dir, "events").count()
-    return local_df(spark, 
+    return local_df(spark,
         [
             (
                 int(n_first),
@@ -1615,6 +1615,6 @@ def stream_progress_listener(spark: SparkSession, sf_dir: str) -> DataFrame:
     mine = [p for p in seen["progress"] if p[0] == qid]
     rows_total = sum(p[2] for p in mine)
     n_state = max(mine, key=lambda p: p[1])[3] if mine else 0
-    return local_df(spark, 
+    return local_df(spark,
         [(rows_total, n_state)], "rows_total bigint, n_state_groups bigint"
     )

@@ -1931,7 +1931,7 @@ def warehouse_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame
         ),
     )
     b_audit, b_pass, b_pub = stage_audit_publish(corrupt, "corrupt", "priority")
-    return local_df(spark, 
+    return local_df(spark,
         [
             ("clean", g_audit.n_rows, g_audit.n_src_rows, g_audit.checksum, g_pass, g_pub),
             ("corrupt", g_audit.n_rows, g_audit.n_src_rows, g_audit.checksum, b_pass, b_pub),
@@ -2036,7 +2036,7 @@ def warehouse_manifest_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFram
             .alias("total"),
         )
     )
-    meta = local_df(spark, 
+    meta = local_df(spark,
         [(len(entries), len(keep))], "files_total long, files_scanned long"
     )
     return F.broadcast(meta).crossJoin(pruned).select(
@@ -2257,7 +2257,7 @@ def warehouse_vacuum_unreferenced(spark: SparkSession, sf_dir: str) -> DataFrame
             .alias("total_c"),
         )
     )
-    meta = local_df(spark, 
+    meta = local_df(spark,
         [(len(on_disk), len(removed), len(live))],
         "files_before long, files_removed long, files_live long",
     )
@@ -2411,7 +2411,7 @@ def warehouse_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
             .alias("total_c"),
         )
     )
-    meta = local_df(spark, 
+    meta = local_df(spark,
         [(len(entries), len(keep1), len(keep2))],
         "files_total long, files_scanned_spec1 long, files_scanned_spec2 long",
     )
@@ -2744,7 +2744,7 @@ def warehouse_merge_cow_vs_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
         cow_f, mor_f = pool.submit(_agg_cow), pool.submit(_agg_mor)
         cow, mor = cow_f.result(), mor_f.result()
 
-    return local_df(spark, 
+    return local_df(spark,
         [
             (
                 n_files_touched,

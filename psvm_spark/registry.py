@@ -23,69 +23,11 @@ from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
-
-class _OracleDict(dict):
-    """Oracle SQL by query key.
-
-    A value may be registered as a zero-arg CALLABLE (deferred builder)
-    when constructing the SQL is expensive — e.g. the
-    ``text_compression_ratio`` digest table zlib-compresses the gate
-    fixtures, which must not run at module import (ADVICE r8).  Builders
-    execute, and memoize their result, on first read.  Membership is
-    eager, so register a builder only after a cheap availability probe
-    (fixture-file existence); a builder that then returns ``None`` is a
-    loud error, never a silent downgrade to rows-only.
-
-    get/values/items/copy are overridden to force builders (ADVICE r9).
-    The one access this cannot intercept is ``dict(ORACLES)`` — CPython
-    copies dict subclasses via the C slots, bypassing __getitem__ — so
-    never construct a plain dict from this object; use ``resolve()``.
-    """
-
-    def __getitem__(self, key: str) -> str:
-        val = super().__getitem__(key)
-        if callable(val):
-            val = val()
-            if not isinstance(val, str):
-                raise RuntimeError(
-                    f"deferred oracle builder for {key!r} returned "
-                    f"{type(val).__name__}; fixtures vanished after probe?"
-                )
-            super().__setitem__(key, val)
-        return val
-
-    def resolve(self) -> dict[str, str]:
-        """Plain dict with every deferred builder forced (driver copy)."""
-        return {k: self[k] for k in self}
-
-    # dict's native get/values/items/copy read the stored value directly
-    # and would hand an unresolved BUILDER to a caller expecting SQL
-    # (ADVICE r9).  Route every value-returning access through
-    # __getitem__ so builders always force + memoize.
-
-    def get(self, key, default=None):
-        try:
-            return self[key]
-        except KeyError:
-            return default
-
-    def values(self):
-        return [self[k] for k in self]
-
-    def items(self):
-        return [(k, self[k]) for k in self]
-
-    def copy(self) -> dict[str, str]:
-        return self.resolve()
-
-
 QUERIES: dict[str, QueryFn] = {}
-ORACLES: _OracleDict = _OracleDict()
+ORACLES: dict[str, str] = {}
 
 
-def query(
-    name: str, oracle: str | Callable[[], str | None] | None = None
-) -> Callable[[QueryFn], QueryFn]:
+def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate query key: {name}")
@@ -97,293 +39,11 @@ def query(
     return deco
 
 
-# Keys the driver's 50-key/round correctness sample has already covered
-# (union of CORRECTNESS_r01..r10.json).  load_all() fronts everything NOT
-# in this set so each round's sample lands on fresh keys.  Append each
-# round's newly sampled keys here when rotating.
-_DRIVER_SAMPLED_R1_R10: frozenset[str] = frozenset({
-    "agg_approx_distinct", "agg_approx_percentile", "agg_bitmap_distinct",
-    "agg_chi2_independence", "agg_cms_heavy_hitters", "agg_collect",
-    "agg_cube", "agg_distinct", "agg_equidepth_bins", "agg_filtered",
-    "agg_grouping_sets", "agg_histogram", "agg_hll_sketch",
-    "agg_kll_quantiles", "agg_percentile", "agg_pivot",
-    "agg_pricing_summary", "agg_q11_shape", "agg_q16_shape",
-    "agg_q18_shape", "agg_rollup", "agg_salted_skew", "agg_skew_kurtosis",
-    "agg_stats", "agg_string_agg", "agg_theta_sketch", "agg_weighted",
-    "agg_weighted_percentile", "anomaly_mad", "case_when",
-    "cdc_merge_apply", "cogroup_reconcile", "cohort_retention",
-    # dedup_minhash was sampled rows-only in r1-r5; round 7 converted it
-    # to an oracle-exact Carter-Wegman hash family, so it is deliberately
-    # left out of this ledger for the driver to re-verify hash-green.
-    "dedup_embedding", "dedup_exact",
-    "dedup_ngram_jaccard", "dedup_simhash", "doc_fingerprint",
-    "doc_rolling_hash", "dq_benford_first_digit", "dq_expectations",
-    "dq_gdpr_erasure", "dq_join_cardinality_estimate", "dq_merkle_ranges",
-    "dq_profile_drift", "eval_accuracy", "filter_predicates",
-    "funnel_steps", "fuzzy_blocked_match", "grouped_map_zscore",
-    "ids_snowflake", "incremental_rollup", "join_asof", "join_broadcast",
-    "join_bucketed", "join_cross", "join_left_count", "join_not_in_nulls",
-    "join_outer", "join_q10_shape", "join_q12_shape", "join_q13_shape",
-    "join_q14_shape", "join_q15_shape", "join_q20_shape", "join_q21_shape",
-    "join_q22_shape", "join_q2_shape", "join_q4_shape", "join_q5_shape",
-    "join_q7_shape", "join_q8_shape", "join_q9_shape", "join_range",
-    "join_salted_skew", "join_semi_anti", "join_sortmerge", "join_theta",
-    "join_three_way_topn", "kernel_laplacian", "kernel_linear",
-    "kernel_poly", "kernel_rbf", "map_in_arrow_quantize",
-    "map_in_pandas_tokens", "metric_wau", "ml_kmeans_cluster",
-    "mm_decode_features", "mm_frame_sample", "mm_metadata_stats",
-    "mm_phash_dedup", "profile_columns", "project_compute",
-    "reshape_unpivot", "scalar_array", "scalar_datetime", "scalar_json",
-    "scalar_map", "scalar_math", "scalar_regex", "scalar_string",
-    "scalar_variant", "scan_csv_json", "scan_csv_multiline_roundtrip",
-    "scan_jsonl_corrupt_recovery", "scan_libsvm", "scan_libsvm_pyds",
-    "scan_lineitem", "scan_q19_shape", "scan_q6_shape",
-    "scan_schema_evolution", "scan_struct_pruning", "scan_time_range",
-    "scd2_intervals", "scd2_point_in_time", "setops",
-    # sim_ann_lsh was sampled rows-only in r1-r5; round 7 converted it to
-    # a deterministic oracle-exact E2LSH, so it is deliberately left out
-    # of this ledger for the driver to re-verify hash-green.
-    "sim_ivf", "sim_topk_cosine", "sink_bloom_point_lookup",
-    "sink_compact_small_files", "sink_dynamic_partition_overwrite",
-    "sink_libsvm_pyds", "sink_orc_roundtrip", "sink_partitioned",
-    "sink_sorted_clustered", "sink_zorder_cluster", "snapshot_diff",
-    "sort_multi", "stream_dedup", "stream_ohlc", "stream_pyds_replay",
-    "stream_session", "stream_sliding", "stream_stateful",
-    "stream_static_join", "stream_stream_join", "stream_tumbling",
-    "stream_upsert_foreachbatch", "stream_watermark",
-    "subquery_exists_scalar", "subquery_q17_shape",
-    "svm_failsafe_power_iter", "svm_model_roundtrip",
-    "svm_multiclass_train_eval", "svm_nystrom_train_eval",
-    "svm_predict_score", "svm_rff_train_eval", "svm_train_eval",
-    "text_quality_filter", "text_term_freq", "text_tfidf_top",
-    "text_token_count", "topk_orders", "topk_per_group",
-    "ts_concurrency_peak", "ts_gapfill", "udaf_grouped", "udf_scalar",
-    "udtf_explode_taxes", "upsert_latest", "vec_reductions",
-    "warehouse_accumulating_snapshot", "warehouse_late_arriving_dim",
-    "warehouse_proration", "window_distribution", "window_frames",
-    "window_lag_lead", "window_rank", "window_ratio_to_report",
-    "window_sessionize", "window_sliding_distinct", "window_time_range",
-    # -- round 6 sample (CORRECTNESS_r06.json; 49 green, mm_resize_avgpool
-    #    errored and intentionally stays fresh) --
-    "ab_test_proportions", "agg_association_rules",
-    "agg_boolean_aggregates", "agg_conversion_delay",
-    "agg_generalized_means", "agg_gini_spend", "agg_hhi_concentration",
-    "agg_markov_stationary", "agg_mode", "agg_pareto_coverage",
-    "agg_regression_trend", "agg_rollup_grouping_id", "agg_skyline_2d",
-    "attribution_multi_touch", "dq_pk_uniqueness",
-    "dq_referential_integrity", "event_transitions", "funnel_time_bounded",
-    "geo_nearest_site", "graph_bfs_distance", "graph_copurchase_pairs",
-    "graph_degree_stats", "graph_jaccard_neighbors", "graph_pagerank",
-    "graph_triangle_count", "hierarchy_closure", "metric_adoption_curve",
-    "metric_stickiness", "sample_poisson_bootstrap",
-    "sample_rate_limit", "scd2_merge_update", "seq_pattern_match",
-    "seq_pattern_negation", "stream_cusum", "topk_per_group_ties",
-    "ts_autocorrelation", "ts_cusum_drift", "ts_downsample_ohlc", "ts_ewma",
-    "ts_holt_linear", "ts_interpolate_linear", "ts_m4_downsample",
-    "ts_peak_detection", "ts_runs_test", "ts_seasonal_baseline",
-    "ts_time_weighted_avg", "window_period_over_period",
-    "window_rolling_median", "window_streaks",
-    # -- round 7 sample (CORRECTNESS_r07.json; 50/50 hash-green, including
-    #    the re-verified mm_resize_avgpool fix and the dedup_minhash /
-    #    sim_ann_lsh oracle-exact conversions) --
-    "ab_test_welch_t2", "agg_hll_exact_twin", "agg_kmv_exact_twin",
-    "agg_median_two_pass", "agg_raking_ipf", "decontaminate_ngram",
-    "dedup_components", "dedup_incremental", "dedup_minhash",
-    "doc_chunk_overlap", "export_jsonl", "export_webdataset_shards",
-    "feat_hashing_trick", "geo_geohash_cells", "graph_hits", "graph_kcore",
-    "graph_label_propagation", "graph_random_walks", "ids_contiguous",
-    "join_point_in_polygon", "ml_kmeans_assign_first", "ml_survival_km",
-    "mm_audio_vad_frames", "mm_resize_avgpool", "pack_sequences",
-    "pipeline_curation", "sample_mixture", "sample_per_group_cap",
-    "sample_stratified", "sample_upsample_epochs",
-    "sample_weighted_reservoir", "scan_webdataset_pyds", "scrub_pii",
-    "sim_ann_lsh", "split_stable_hash", "text_bigram_lm",
-    "text_blocklist_scrub", "text_entropy", "text_lang_id",
-    "text_normalize", "text_pmi_top", "text_repetition",
-    "ts_changepoint_sse", "ts_periodogram", "ts_theil_sen",
-    "vec_centroid_dist", "vec_group_stats", "vocab_encode",
-    "warehouse_bitemporal_asof", "warehouse_write_audit_publish",
-    # -- round 8 sample (CORRECTNESS_r08.json; 50/50 hash-green, all drawn
-    #    from the never-before-sampled pool after the r7 rotation) --
-    "ab_test_cuped", "ab_test_diff_in_diff", "ab_test_sprt",
-    "agg_hdr_histogram", "agg_lorenz_curve", "agg_mutual_information",
-    "decontaminate_containment", "dedup_chunk_corpus",
-    "feat_target_encode_loo", "graph_adamic_adar",
-    "graph_degree_assortativity", "graph_edge_triangle_support",
-    "graph_local_clustering", "ml_boosting_two_rounds",
-    "ml_calibration_bins", "ml_confusion_matrix",
-    "ml_feature_ttest_screen", "ml_gmm_em", "ml_icf_factor",
-    "ml_isotonic_pav", "ml_kmeans_lloyd_exact", "ml_logistic_irls",
-    "ml_pca_power_iteration", "ml_roc_auc", "ml_stump_split",
-    "mm_audio_downsample", "mm_image_patch_embed", "mm_shot_boundary",
-    "seq_path_trigrams", "sim_ivf_kmeans", "sim_pq_adc_topk",
-    "sim_pq_encode", "text_bm25_rank", "text_inverted_index",
-    "ts_bollinger_bands", "ts_control_rules",
-    "ts_croston_intermittent", "ts_decompose_classical",
-    "ts_dtw_distance", "ts_esd_outliers", "ts_ewma_irregular",
-    "ts_haar_wavelet", "ts_holt_winters_seasonal", "ts_kalman_filter",
-    "ts_sax_symbols", "warehouse_equality_deletes",
-    "warehouse_manifest_pruned_scan", "warehouse_partition_evolution",
-    "warehouse_snapshot_time_travel", "warehouse_vacuum_unreferenced",
-    # -- round 9 sample (CORRECTNESS_r09.json; 50/50 hash-green, all drawn
-    #    from the never-before-sampled pool after the r8 rotation) --
-    "dedup_boundary_overlap", "dedup_components_incremental",
-    "dedup_keep_best", "dedup_minhash_exact", "dedup_prefix_filter_join",
-    "dedup_substring_corpus", "dedup_substring_run",
-    "dq_duplicate_rate_by_source", "dq_split_leakage",
-    "feat_quantile_normalize", "feat_winsorize", "graph_louvain_round",
-    "graph_rich_club", "ml_auc_by_group", "ml_ece_calibration",
-    "ml_ks_statistic", "ml_lift_deciles", "ml_pr_curve", "ml_psi_drift",
-    "ml_retrieval_metrics", "ml_ridge_closed_form", "ml_threshold_f1max",
-    "mm_image_channel_hist", "pack_nextfit",
-    "pipeline_incremental_curation", "sample_class_balance",
-    "sample_negatives", "sample_temperature_mixture",
-    "sample_unimax_budget", "select_dsir", "shard_rendezvous",
-    "sim_binary_hamming_topk", "sim_matryoshka_topk", "sim_mmr_select",
-    "sim_rrf_fusion", "sim_semdedup", "sim_two_stage_rerank",
-    "text_compression_ratio", "text_gopher_rules", "text_langid_confusion",
-    "text_novelty_ratio", "text_perplexity_lm", "ts_cross_correlation",
-    "ts_granger_lag1", "ts_ljung_box", "ts_pacf", "vec_norm_histogram",
-    "vocab_bpe_merges", "warehouse_compaction_planner",
-    "warehouse_deletion_vectors",
-    # -- round 10 sample (CORRECTNESS_r10.json; 49 hash-green + the
-    #    by-design rows-only stream_file_sink_exactly_once): the final
-    #    47 never-sampled-as-of-r9 keys.  The 3 stale re-serves also in
-    #    that sample (scan_libsvm, svm_model_roundtrip,
-    #    mm_decode_features) were already members above. --
-    "dedup_bloom_prefilter", "dedup_url_canonical", "doc_winnowing",
-    "feat_robust_scaler", "feat_woe_encode", "join_asof_nearest",
-    "join_asof_tolerance", "join_bloom_prune", "join_edit_distance_blocked",
-    "join_interval_overlap", "join_null_safe_eq", "ml_agreement_stats",
-    "ml_brier_decomposition", "ml_knn_classify", "ml_lof_outlier",
-    "ml_naive_bayes_lang", "ml_spearman_rho", "sample_exact_k",
-    "sample_neyman_allocation", "scalar_bitwise", "scalar_interval_math",
-    "scalar_null_semantics", "scalar_url_parse", "scan_binary_files",
-    "scan_observed_metrics", "scan_xml_roundtrip",
-    "select_curriculum_order", "select_doremi_weights",
-    "select_facility_location", "select_kcenter_coreset",
-    "select_rho_excess_loss", "sim_ivfpq_topk", "split_time_embargo",
-    "stream_file_sink_exactly_once", "stream_sliding_topk",
-    "stream_state_recovery", "text_burstiness", "text_distinct_ngrams",
-    "text_kneser_ney_bigram", "text_knn_graph", "text_rake_keywords",
-    "text_readability", "text_textrank_keywords", "text_zipf_fit",
-    "udtf_polymorphic_json", "vocab_bpe_encode", "vocab_wordpiece_encode",
-})
-
-# The 69 round-10 additions that had never been driver-sampled as of the
-# round-10 close (verdict r10 item 1).  Pinned explicitly so keys ADDED
-# in round 11+ queue BEHIND this pool and the stale-converted tier —
-# round 11's 50-key sample serves 50 of these; the remaining 19 plus the
-# 5 stale re-serves fill round 12, finishing the full-registry sweep.
-_NEVER_SAMPLED_AS_OF_R10: frozenset[str] = frozenset({
-    "ab_test_bayesian_beta", "ab_test_ipw_estimate", "ab_test_ratio_delta",
-    "agg_approx_top_k_exact_twin", "agg_aqe_coalesced_shuffle",
-    "dedup_minhash_recall", "dq_fact_detail_reconcile", "dq_freshness_lag",
-    "dq_iqr_fences", "geo_dbscan_core", "graph_katz_centrality",
-    "graph_leiden_aggregate", "graph_leiden_refine", "graph_mst_boruvka",
-    "graph_personalized_pagerank", "graph_transitivity",
-    "join_dynamic_partition_pruning", "join_lateral_topn",
-    "join_runtime_bloom_filter", "ml_auc_delong_ci",
-    "ml_conformal_coverage", "ml_fairness_gaps", "ml_hosmer_lemeshow",
-    "ml_kendall_tau", "ml_kfold_cv_ridge", "ml_label_permutation_test",
-    "ml_learning_curve", "ml_mcnemar_test", "ml_permutation_importance",
-    "ml_quantile_pinball", "ml_ridge_lambda_path", "ml_shapley_two_feature",
-    "ml_tree_depth2", "pack_padding_waste", "scalar_collation_group",
-    "scalar_lateral_column_alias", "scalar_parameterized_sql",
-    "scalar_try_arithmetic", "scan_aggregate_pushdown",
-    "scan_state_store_reader", "select_preference_pairs",
-    "seq_skipgram_pairs", "setops_union_by_name", "sim_sq8_topk",
-    "sink_pyds_stream_sink", "stream_dedup_digest",
-    "stream_dedup_windowed_agg", "stream_full_outer_interval_join",
-    "stream_interval_join", "stream_outer_interval_join",
-    "stream_progress_listener", "stream_rocksdb_state_store",
-    "stream_session_dynamic_gap", "subquery_recursive_cte",
-    "text_quality_composite", "text_stem_porter_lite", "ts_hampel_filter",
-    "ts_mann_kendall", "ts_rolling_origin_backtest", "ts_seasonal_strength",
-    "ts_ses_optimal_alpha", "ts_sma_crossover", "ts_spectral_entropy",
-    "ts_unit_root_df", "ts_weekday_anova", "udf_sql_function",
-    "warehouse_clustering_depth", "warehouse_incremental_join_mv",
-    "warehouse_row_lineage",
-})
-
-# The 50 keys the round-11 driver sample covered (CORRECTNESS_r11.json,
-# 50/50 hash-green) — all drawn from the never-sampled round-10 pool.
-# Rotated out of the fresh tier so round 12's sample completes
-# first-party driver evidence for the whole registry: 19 pool
-# remainders + 5 stale re-serves + 15 round-11 additions + the 9
-# round-12 additions (B586-B594, which register as fresh new_oracle
-# keys and sort ahead of the refreshers) = 48 sweep keys, leaving 2
-# spare slots for the oldest-evidence refreshers (_R12_REFRESHERS).
-_DRIVER_SAMPLED_R11: frozenset[str] = frozenset({
-    "ab_test_bayesian_beta", "ab_test_ipw_estimate",
-    "ab_test_ratio_delta", "agg_approx_top_k_exact_twin",
-    "agg_aqe_coalesced_shuffle", "dedup_minhash_recall",
-    "dq_fact_detail_reconcile", "dq_freshness_lag", "dq_iqr_fences",
-    "geo_dbscan_core", "graph_katz_centrality",
-    "graph_leiden_aggregate", "graph_leiden_refine",
-    "graph_mst_boruvka", "graph_personalized_pagerank",
-    "graph_transitivity", "join_dynamic_partition_pruning",
-    "ml_auc_delong_ci", "ml_conformal_coverage", "ml_fairness_gaps",
-    "ml_hosmer_lemeshow", "ml_kendall_tau", "ml_kfold_cv_ridge",
-    "ml_label_permutation_test", "ml_learning_curve", "ml_mcnemar_test",
-    "ml_permutation_importance", "ml_quantile_pinball",
-    "ml_ridge_lambda_path", "ml_shapley_two_feature", "ml_tree_depth2",
-    "pack_padding_waste", "select_preference_pairs",
-    "seq_skipgram_pairs", "sim_sq8_topk", "stream_interval_join",
-    "text_quality_composite", "text_stem_porter_lite",
-    "ts_hampel_filter", "ts_mann_kendall", "ts_rolling_origin_backtest",
-    "ts_seasonal_strength", "ts_ses_optimal_alpha", "ts_sma_crossover",
-    "ts_spectral_entropy", "ts_unit_root_df", "ts_weekday_anova",
-    "warehouse_clustering_depth", "warehouse_incremental_join_mv",
-    "warehouse_row_lineage",
-})
-
-# Round-12 spare-slot refreshers: oracle-backed keys with the OLDEST
-# driver evidence (last sampled in round 2, per the CORRECTNESS_r01..r11
-# ledgers).  Queued after every fresh (never-sampled) key; with 48
-# sweep keys ahead of them only the first 2 fit round 12's 50-key
-# sample — the remainder of the round-2 cohort (dedup_embedding,
-# dedup_exact, dedup_ngram_jaccard, dedup_simhash, doc_fingerprint,
-# doc_rolling_hash, funnel_steps, fuzzy_blocked_match, metric_wau)
-# queues for round 13's spare slots.
-_R12_REFRESHERS: tuple[str, ...] = (
-    "anomaly_mad", "cohort_retention",
-)
-
-# Keys last driver-sampled while still rows-only (r4 ``no_oracle``)
-# whose oracles landed in later rounds; the never-sampled-first ordering
-# would otherwise never re-serve them.  Ordered right after the
-# never-sampled pool so spare sample slots refresh their evidence to
-# hash-green (verdict r9 item 2; the first 3 re-served green in r10).
-_STALE_CONVERTED: tuple[str, ...] = (
-    "mm_frame_sample", "stream_watermark", "stream_dedup",
-    "stream_stateful", "map_in_pandas_tokens",
-)
-
-
 def load_all() -> None:
-    """Import every query module so decorators run (idempotent).
+    """Import every query module so its decorators run (idempotent).
 
-    The driver's correctness sample is the FIRST 50 registered keys per
-    round, so after importing, the registry is reordered to front keys
-    with no driver evidence yet (bench still executes ALL queries, so
-    errors anywhere stay visible every round).  Ordering:
-
-      1. never-driver-sampled keys WITH an exact DuckDB oracle (these
-         yield the strongest evidence: hash-green rows),
-      2. never-driver-sampled rows-only keys,
-      3. everything already sampled in earlier rounds (registration order).
-
-    Rotation ledger:
-      round 3 (done, 50/50 green): relational(31) + joins(11) +
-        scalars(8 of 9).
-      round 4 (done, 50/50 green): windows(10) + streaming(11) +
-        sources(7) + udfs(7) + ml(15).
-      round 5 (done, 43 green + 7 declared rows-only): multimodal(4) +
-        warehouse(23) + first 23 aggregates keys.
-      rounds 6+ (this mechanism): 118 keys had never been sampled as of
-        r5 close; the explicit reorder below fronts the 112 oracle-backed
-        ones first (~2.2 rounds to full coverage), then the 6 rows-only.
+    ``QUERIES`` keeps registration order: the order in which these
+    modules (and the query modules they import) run their decorators.
     """
     from psvm_spark.queries import (  # noqa: F401
         multimodal,
@@ -401,41 +61,3 @@ def load_all() -> None:
         joins,
         scalars,
     )
-
-    def _fresh(k: str) -> bool:
-        return (k not in _DRIVER_SAMPLED_R1_R10
-                and k not in _DRIVER_SAMPLED_R11)
-
-    pool_oracle = [
-        k for k in QUERIES
-        if k in _NEVER_SAMPLED_AS_OF_R10 and _fresh(k) and k in ORACLES
-    ]
-    pool_rows = [
-        k for k in QUERIES
-        if k in _NEVER_SAMPLED_AS_OF_R10 and _fresh(k) and k not in ORACLES
-    ]
-    stale = [k for k in _STALE_CONVERTED if k in QUERIES]
-    new_oracle = [
-        k for k in QUERIES
-        if _fresh(k) and k not in _NEVER_SAMPLED_AS_OF_R10 and k in ORACLES
-    ]
-    new_rows = [
-        k for k in QUERIES
-        if _fresh(k) and k not in _NEVER_SAMPLED_AS_OF_R10 and k not in ORACLES
-    ]
-    refreshers = [
-        k for k in _R12_REFRESHERS
-        if k in QUERIES and k not in _STALE_CONVERTED
-    ]
-    front = pool_oracle + pool_rows + stale + new_oracle + new_rows + refreshers
-    placed = set(front)
-    seen = [
-        k for k in QUERIES
-        if not _fresh(k) and k not in placed
-    ]
-    ordered = {
-        k: QUERIES[k]
-        for k in front + seen
-    }
-    QUERIES.clear()
-    QUERIES.update(ordered)

@@ -18,7 +18,7 @@ state stores shard by the grouping key across executors.
 from __future__ import annotations
 
 import itertools
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,26 +44,19 @@ def _raw_schema(spark: SparkSession, path: str):
 
 
 @contextmanager
-def state_partitions_ctx(spark: SparkSession, n: int | None = None):
+def state_partitions_ctx(spark: SparkSession, n: int = 4):
     """Run a streaming query with its state sized to key cardinality.
 
     A stateful operator creates one state-store instance per shuffle
     partition, FIXED at the query's first run; store instances dominate
     the cost of low-cardinality demos (RocksDB native init, HDFS-backed
-    delta files per store per batch).  `psvm.stream.state_partitions`
-    (default 4 — measured r13: 8 -> 4 saves ~1.7 s on the staged-restart
-    interval joins and 0.2-0.4 s on memory-sink keys, results
-    partitioning-invariant) parameterizes it: at 100 TB the same knob is set to
-    match key cardinality / throughput, exactly as run_to_table already
-    does for its callers.  Restores the session conf afterwards; only
-    the streaming run inside the context is affected, so batch results
-    are unchanged (values never depend on partitioning).
+    delta files per store per batch).  The default of 4 was measured in
+    r13: 8 -> 4 saves ~1.7 s on the staged-restart interval joins and
+    0.2-0.4 s on memory-sink keys, results partitioning-invariant.
+    Restores the session conf afterwards; only the streaming run inside
+    the context is affected, so batch results are unchanged (values
+    never depend on partitioning).
     """
-    if n is None:
-        try:
-            n = int(spark.conf.get("psvm.stream.state_partitions", "4"))
-        except Exception:  # noqa: BLE001
-            n = 4
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
@@ -72,32 +65,32 @@ def state_partitions_ctx(spark: SparkSession, n: int | None = None):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
-def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events as a stream: same schema + ts semantics as the batch table.
+def _read_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """``<sf_dir>/<table>.parquet`` as a stream, in either parquet layout.
 
-    Handles BOTH parquet layouts: the driver fixtures ship events.parquet
-    as a single FILE (watch the parent dir, glob the one file), while
-    engine-written tables — every production deployment, and the
-    amplified scale fixtures — are DIRECTORIES of part files (watch the
-    table dir itself).  The glob form alone silently matched ZERO leaf
-    files on the directory layout, so every streaming query read an
-    empty stream at the sf1 whole-surface run (round-8 finding).
+    The driver fixtures ship each table as a single FILE (watch the
+    parent dir, glob the one file), while engine-written tables — every
+    production deployment, and the amplified scale fixtures — are
+    DIRECTORIES of part files (watch the table dir itself).  The glob
+    form alone silently matched ZERO leaf files on the directory
+    layout, so every streaming query read an empty stream at the sf1
+    whole-surface run (round-8 finding).
     """
     import os
 
     ensure_session_invariants(spark)
-    path = f"{sf_dir.rstrip('/')}/events.parquet"
-    raw_schema = _raw_schema(spark, path)
+    root = sf_dir.rstrip("/")
+    path = f"{root}/{table}.parquet"
+    reader = spark.readStream.schema(_raw_schema(spark, path))
     if os.path.isdir(path):
-        df = spark.readStream.schema(raw_schema).parquet(path)
-    else:
-        # the file source watches a directory; select just events.parquet
-        df = (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir.rstrip("/"))
-        )
-    return normalize_event_ts(df)
+        return reader.parquet(path)
+    # the file source watches a directory; select just the one file
+    return reader.option("pathGlobFilter", f"{table}.parquet").parquet(root)
+
+
+def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events as a stream: same schema + ts semantics as the batch table."""
+    return normalize_event_ts(_read_stream(spark, sf_dir, "events"))
 
 
 def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -106,23 +99,9 @@ def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     The batch table has no timestamp; streaming dedup/join operators
     need one for watermarking, so ingestion time is modeled as a fixed
     epoch plus ``doc_id`` seconds — deterministic, monotone in doc_id,
-    and identical in the batch-replay oracle.  Same file/directory
-    layout handling as ``stream_events``.
+    and identical in the batch-replay oracle.
     """
-    import os
-
-    ensure_session_invariants(spark)
-    path = f"{sf_dir.rstrip('/')}/documents.parquet"
-    raw_schema = _raw_schema(spark, path)
-    if os.path.isdir(path):
-        df = spark.readStream.schema(raw_schema).parquet(path)
-    else:
-        df = (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "documents.parquet")
-            .parquet(sf_dir.rstrip("/"))
-        )
-    return df.withColumn(
+    return _read_stream(spark, sf_dir, "documents").withColumn(
         "ingest_ts",
         F.timestamp_seconds(F.lit(1704067200) + F.col("doc_id")),
     )
@@ -152,10 +131,12 @@ def run_to_table(
     spark = df.sparkSession
     name = f"psvm_stream_{next(_counter)}"
     ckpt = scratch_dir("psvm_ckpt_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    sized = (
+        nullcontext()
+        if state_partitions is None
+        else state_partitions_ctx(spark, state_partitions)
+    )
+    with sized:
         writer = (
             df.writeStream.outputMode(mode)
             .format("memory")
@@ -170,6 +151,4 @@ def run_to_table(
         else:
             q = writer.trigger(availableNow=True).start()
             q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name)

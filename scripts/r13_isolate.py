@@ -54,7 +54,7 @@ def main() -> int:
     if mode == "time":
         out_path, keys = sys.argv[2], sys.argv[3:]
         rec: dict[str, dict] = {}
-        n_runs = int(os.environ.get("R13_ISO_RUNS", os.environ.get("R12_ISO_RUNS", "3")))
+        n_runs = int(os.environ.get("R13_ISO_RUNS", "3"))
         for k in keys:
             runs = []
             for _ in range(n_runs):

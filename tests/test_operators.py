@@ -2266,3 +2266,22 @@ class TestAvroOcfSpecEdges:
         shutil.rmtree(str(d / "two"))
         with pytest.raises(Exception, match="schema mismatch"):
             spark.read.format("avro_ocf").option("path", str(d)).load().collect()
+
+
+class TestLocalDf:
+    def test_generator_rows_round_trip(self, spark):
+        from psvm_spark.queries._util import local_df
+
+        rows = [(i, f"r{i}", i / 4) for i in range(5)]
+        df = local_df(spark, (r for r in rows), "k bigint, s string, x double")
+        assert sorted(map(tuple, df.collect())) == rows
+
+    def test_nested_nan_survives_as_nan(self, spark):
+        import math
+
+        from psvm_spark.queries._util import local_df
+
+        rows = [(1, [0.5, float("nan")]), (2, [1.0, None])]
+        got = dict(local_df(spark, rows, "k bigint, xs array<double>").collect())
+        assert got[1][0] == 0.5 and math.isnan(got[1][1])
+        assert got[2] == [1.0, None]

@@ -40,53 +40,6 @@ class TestHostileSessionConfs:
 
 
 class TestRegistrationRotation:
-    def test_first_50_keys_complete_the_registry_sweep(self):
-        """The driver's correctness sample is the FIRST 50 registered
-        keys; the round-12 rotation pins the ordering as: every
-        never-driver-sampled key (19 round-10 pool remainders,
-        oracle-backed first, then the round-11/12 additions), then the
-        5 stale-converted re-serves, then the 3 spare-slot refreshers
-        — so round 12's sample grants first-party driver evidence to
-        EVERY remaining key (the full-registry sweep).  Pin that so an
-        innocent import reorder or an early-module addition can't
-        displace it."""
-        from psvm_spark import registry
-
-        registry.load_all()
-        keys = list(registry.QUERIES)
-        first50 = set(keys[:50])
-        sampled = (
-            registry._DRIVER_SAMPLED_R1_R10 | registry._DRIVER_SAMPLED_R11
-        )
-        never = [k for k in keys if k not in sampled]
-        # the sweep completes: every never-sampled key + the stale
-        # re-serves + the refreshers all fit in the 50-key window
-        assert (
-            len(never)
-            + len(registry._STALE_CONVERTED)
-            + len(registry._R12_REFRESHERS)
-            == 50
-        )
-        assert all(k in first50 for k in never)
-        assert all(k in first50 for k in registry._STALE_CONVERTED)
-        assert all(k in first50 for k in registry._R12_REFRESHERS)
-
-        # group order is total: pool(oracle, rows), stale, new,
-        # refreshers, long-sampled
-        def rank(k):
-            if k in registry._NEVER_SAMPLED_AS_OF_R10 and k not in sampled:
-                return 0 if k in registry.ORACLES else 1
-            if k in registry._STALE_CONVERTED:
-                return 2
-            if k not in sampled:
-                return 3
-            if k in registry._R12_REFRESHERS:
-                return 4
-            return 5
-
-        ranks = [rank(k) for k in keys]
-        assert ranks == sorted(ranks)
-
     def test_every_registry_key_traces_to_survey_section_2(self):
         """The driver contract (__spark_entry__) defines queries() as
         one callable per SURVEY.md §2 operator; §2 (with its 2.2a/2.2b
@@ -110,45 +63,41 @@ class TestRegistrationRotation:
         assert not missing, sorted(missing)
 
 
-class TestLazyOracles:
-    """Round-9 ADVICE fixes: deferred oracle builders + probe-mod guard."""
+class TestRegistryTable:
+    """The registry is a plain table: callables and oracle SQL strings,
+    in registration order."""
 
-    def test_zlib_oracle_is_lazy_and_memoized(self):
-        from psvm_spark import registry
+    def test_registry_is_a_plain_table_in_stable_order(self):
+        import __spark_entry__
 
         registry.load_all()
+        keys = list(registry.QUERIES)
+        assert type(registry.ORACLES) is dict
+        oracles = __spark_entry__.oracle_sql()
+        assert len(oracles) == 499
+        assert all(isinstance(v, str) for v in oracles.values())
+        registry.load_all()
+        assert list(registry.QUERIES) == keys
+
+
+class TestLazyOracles:
+    """The text_compression_ratio oracle is plain SQL built once at
+    import; parity compares refuse non-default probe and model-slice
+    moduli."""
+
+    def test_zlib_oracle_is_lazy_and_memoized(self):
+        """The registered oracle is resolved SQL (no zlib left for
+        DuckDB to call), and every read returns the same string."""
         key = "text_compression_ratio"
-        assert key in registry.ORACLES  # membership is eager (cheap probe)
+        assert key in registry.ORACLES
         sql1 = registry.ORACLES[key]
-        assert isinstance(sql1, str) and "zlib" not in sql1  # resolved SQL
-        assert "VALUES" in sql1
-        # memoized: second read returns the identical resolved object
+        assert isinstance(sql1, str) and "zlib" not in sql1
+        assert "VALUES" in sql1 and "md5(d.text)" in sql1
         assert registry.ORACLES[key] is sql1
 
-    def test_oracle_dict_accessors_force_builders(self):
-        """get/values/items/copy must never hand a caller an unresolved
-        builder callable (ADVICE r9 — dict's native accessors bypass
-        __getitem__)."""
-        from psvm_spark.registry import _OracleDict
-
-        d = _OracleDict()
-        d["k"] = lambda: "SELECT 1"
-        assert d.get("k") == "SELECT 1"
-        assert d.get("missing", "dflt") == "dflt"
-        d["k2"] = lambda: "SELECT 2"
-        assert all(isinstance(v, str) for v in d.values())
-        assert all(isinstance(v, str) for _, v in d.items())
-        d["k3"] = lambda: "SELECT 3"
-        assert all(isinstance(v, str) for v in d.copy().values())
-        # resolve() hands the driver only plain strings
-        resolved = registry.ORACLES.resolve()
-        assert all(isinstance(v, str) for v in resolved.values())
-
     def test_llm_import_does_not_precompute_zlib_table(self):
-        """The digest table must not be built at module import (ADVICE
-        r8): a fresh interpreter importing the module stores a CALLABLE
-        until first oracle read.  Simulated here by re-running the
-        builder registration logic rather than forking a process."""
+        """The import-time build reads both correctness-gate fixtures,
+        and a fresh build gives the registered SQL."""
         from psvm_spark.queries.llm import (
             _zlib_fixture_parquets,
             _zlib_oracle_available,
@@ -160,7 +109,8 @@ class TestLazyOracles:
         assert any("sf0.001" in p for p in paths)
         assert any("sf0.01" in p for p in paths)
         sql = _zlib_oracle_sql()
-        assert sql is not None and "md5(d.text)" in sql
+        assert "md5(d.text)" in sql
+        assert sql == registry.ORACLES["text_compression_ratio"]
 
     def test_probe_modulo_guard_blocks_parity_compare(self, spark, sf_dir):
         import pytest

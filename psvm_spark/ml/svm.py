@@ -13,8 +13,11 @@ approach, we do NOT port that solver: the equivalent capability is
     wrapped in ``OneVsRest`` for multiclass.
 
 Driver-side p x p eigen-solves mirror psvm's rank-0 serial Cholesky.
-Scale: landmarks/W are broadcast (p ~ sqrt(n) stays small by design);
-the feature map is one Arrow-batched pandas_udf pass, no shuffle.
+Scale: landmarks and W are broadcast, and p grows with n:
+``pick_landmarks(every=10)`` gives p = n/10 (500 landmarks on 5,000
+rows).  The driver ``eigh`` is p x p and the broadcast W is 8 p^2 bytes:
+2 MB at p = 500, 200 MB at p = 5,000.  The feature map is one
+Arrow-batched pandas_udf pass, no shuffle.
 """
 
 from __future__ import annotations
@@ -117,9 +120,10 @@ def fit_eval_linear_svc(
     test: DataFrame,
     feature_col: str,
     label_col: str = "y",
-    # 15 iterations: the fixture's random labels put every model at its
-    # chance-level ceiling well before this (measured: acc identical at
-    # 10/15/30); real deployments pass their own budget.
+    # 15 iterations.  Measured on the 5,000-row amplified benchmark
+    # fixture with Nystrom features: accuracy 0.972 at 15 (36 Spark
+    # jobs), 0.980 at 30 (66 jobs), 0.978 at 100 (206 jobs).  Real
+    # deployments pass their own budget.
     max_iter: int = 15,
     reg_param: float = 0.01,
     class_weights: tuple[float, float] | None = None,

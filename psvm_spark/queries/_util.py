@@ -87,14 +87,10 @@ def lit_long_matrix(rows) -> Column:
     )
 
 
-def lit_double_array(vals) -> Column:
-    """Literal ARRAY<DOUBLE> as one expression string.  The ``D`` suffix
-    parses via Double.parseDouble, and repr() round-trips exactly, so the
-    literal is bit-identical to the Python float."""
-    return F.expr("array(" + ",".join(f"{float(v)!r}D" for v in vals) + ")")
-
-
 def lit_double_matrix(rows) -> Column:
+    """Literal ARRAY<ARRAY<DOUBLE>> as one expression string.  The ``D``
+    suffix parses via Double.parseDouble, and repr() round-trips exactly,
+    so each literal is bit-identical to the Python float."""
     return F.expr(
         "array("
         + ",".join(

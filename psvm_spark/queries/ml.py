@@ -23,10 +23,9 @@ from pyspark.sql import functions as F
 
 from psvm_spark.catalog import load_table
 from psvm_spark.ml import kernels as K
+from psvm_spark.ml.icf import icf_pivots
 from psvm_spark.registry import query
 from psvm_spark.queries._util import (
-    lit_double_array,
-    lit_long_array,
     lit_long_matrix,
     local_df,
     scratch_dir,
@@ -652,11 +651,10 @@ def ml_stump_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 # NIPS'07 section 3]: factor the linear-kernel Gram matrix K ~= H H^T
 # by greedily pivoting on the largest residual diagonal.  This is the
 # reference-FAITHFUL demo the Nystrom/RFF production path
-# (svm_nystrom_train_eval) substitutes for at scale: here the exact
-# psvm pivot rule (argmax residual diag, deterministic vec_id
-# tie-break) runs as a driver loop of _ICF_RANK steps, each step one
-# broadcast of the pivot row + one map over the partitioned sample —
-# the same per-iteration communication shape as psvm's MPI column
+# (svm_nystrom_train_eval) substitutes for at scale.  The loop is
+# psvm_spark.ml.icf.icf_pivots: one barrier stage whose tasks are psvm
+# ranks holding their rows of Q and H in executor memory, with one
+# allGather per step doing the argmax-AllReduce and the pivot-row
 # broadcast.  Parity is bit-exact by construction: embeddings are
 # quantized to integer thousandths, so every Gram entry is an exact
 # integer; the only floats are hnew = (K[i,p] - <h_i, h_p>) / sqrt(d_p)
@@ -723,63 +721,8 @@ FROM it WHERE step >= 1 GROUP BY step
 """,
 )
 def ml_icf_factor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import math
-
     e = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < _ICF_CAP)
-    base = (
-        e.select(
-            "vec_id",
-            F.expr(
-                "transform(embedding, "
-                "x -> CAST(floor(CAST(x AS DOUBLE) * 1000.0 + 0.5) AS BIGINT))"
-            ).alias("q"),
-        )
-        .select(
-            "vec_id",
-            "q",
-            F.expr(
-                "CAST(aggregate(transform(q, x -> x * x), 0L, (a, x) -> a + x)"
-                " AS DOUBLE)"
-            ).alias("resid"),
-            F.expr("CAST(array() AS ARRAY<DOUBLE>)").alias("h"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    out = []
-    for step in range(_ICF_RANK):
-        p = base.orderBy(F.desc("resid"), "vec_id").limit(1).collect()[0]
-        pid, presid = int(p.vec_id), float(p.resid)
-        pq, ph = list(p.q), list(p.h)
-        out.append((step + 1, pid, int(math.floor(presid * 1e6))))
-        # math.sqrt and the engines' sqrt are all correctly-rounded IEEE
-        # doubles of the SAME presid, so embedding it as a literal is safe
-        sq = math.sqrt(presid)
-        pq_lit = lit_long_array(pq)
-        kip = F.aggregate(
-            F.zip_with(F.col("q"), pq_lit, lambda x, y: x * y),
-            F.lit(0).cast("long"),
-            lambda a, x: a + x,
-        ).cast("double")
-        if ph:
-            ph_lit = lit_double_array(ph)
-            hdot = F.aggregate(
-                F.zip_with(F.col("h"), ph_lit, lambda x, y: x * y),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            )
-        else:
-            hdot = F.lit(0.0)
-        base = (
-            base.withColumn("hnew", (kip - hdot) / F.lit(sq))
-            .select(
-                "vec_id",
-                "q",
-                (F.col("resid") - F.col("hnew") * F.col("hnew")).alias("resid"),
-                F.concat("h", F.array(F.col("hnew"))).alias("h"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return local_df(spark, out, "step int, pivot_vec_id bigint, resid_fp bigint")
+    return icf_pivots(e, _ICF_RANK)
 
 
 # --------------------------------------------------------------------------

@@ -33,7 +33,18 @@ _RUNTIME_CONFS = {
 
 
 def _cpus() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """``SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+
+
+def _driver_mem() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else min(16g, 3/4 of ``MemTotal``): the
+    other quarter is room for the Python workers."""
+    if "SPARK_GRAFT_DRIVER_MEM" in os.environ:
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    with open("/proc/meminfo") as fh:
+        total_kb = next(int(l.split()[1]) for l in fh if l.startswith("MemTotal:"))
+    return f"{min(16 * 1024, total_kb * 3 // 4 // 1024)}m"
 
 
 def ensure_session_invariants(spark: SparkSession) -> SparkSession:
@@ -67,7 +78,7 @@ def get_spark(app_name: str = "psvm_spark", cpus: int | None = None) -> SparkSes
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(n))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", _driver_mem())
         # A multi-hundred-query session generates one codegen class set
         # per plan; the JDK default 240 MB reserved code cache fills and
         # the JIT silently stops compiling, after which HOF/hash-heavy

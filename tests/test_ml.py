@@ -11,6 +11,8 @@ chance by a wide margin — the data ceiling, not the model, binds.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -342,14 +344,58 @@ class TestStumpSplit:
             assert r.gain >= 0
 
 
+def _numpy_icf(rows, rank):
+    """Dense NumPy ICF on the quantized Gram matrix of (vec_id,
+    embedding) rows: [(step, pivot_vec_id, resid_fp)] per step."""
+    import math
+
+    ids = np.array([r.vec_id for r in rows])
+    order = np.argsort(ids)
+    ids = ids[order]
+    q = np.array(
+        [
+            [math.floor(float(x) * 1000.0 + 0.5) for x in rows[i].embedding]
+            for i in order
+        ],
+        dtype=np.float64,
+    )
+    gram = q @ q.T
+    n = len(ids)
+    resid = np.diag(gram).astype(np.float64).copy()
+    h = np.zeros((n, rank))
+    want = []
+    for j in range(rank):
+        p = int(np.lexsort((ids, -resid))[0])
+        want.append((j + 1, int(ids[p]), math.floor(resid[p] * 1e6)))
+        col = (gram[:, p] - h[:, :j] @ h[p, :j]) / math.sqrt(resid[p])
+        h[:, j] = col
+        resid = resid - col * col
+    return want
+
+
+@contextmanager
+def _scoped_conf(spark, key, value):
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+
+def _trace(df):
+    return sorted((r.step, r.pivot_vec_id, r.resid_fp) for r in df.collect())
+
+
 class TestICF:
     def test_matches_numpy_reference(self, spark, sf_dir):
         """The distributed ICF pivot trace must equal an independent
         dense NumPy ICF on the same quantized Gram matrix: same pivots,
         same residual magnitudes, residuals strictly positive and
         non-increasing (greedy argmax property)."""
-        import math
-
         from psvm_spark.queries.ml import _ICF_CAP, _ICF_RANK
 
         rows = sorted(
@@ -364,32 +410,46 @@ class TestICF:
             .select("vec_id", "embedding")
             .collect()
         )
-        ids = np.array([r.vec_id for r in emb])
-        order = np.argsort(ids)
-        ids = ids[order]
-        q = np.array(
-            [
-                [math.floor(float(x) * 1000.0 + 0.5) for x in emb[i].embedding]
-                for i in order
-            ],
-            dtype=np.float64,
-        )
-        gram = q @ q.T
-        n = len(ids)
-        resid = np.diag(gram).astype(np.float64).copy()
-        h = np.zeros((n, _ICF_RANK))
-        want = []
-        for j in range(_ICF_RANK):
-            p = int(np.lexsort((ids, -resid))[0])
-            want.append((j + 1, int(ids[p]), math.floor(resid[p] * 1e6)))
-            col = (gram[:, p] - h[:, :j] @ h[p, :j]) / math.sqrt(resid[p])
-            h[:, j] = col
-            resid = resid - col * col
         got = [(r.step, r.pivot_vec_id, r.resid_fp) for r in rows]
-        assert got == want
+        assert got == _numpy_icf(emb, _ICF_RANK)
         resids = [r.resid_fp for r in rows]
         assert all(v > 0 for v in resids)
         assert resids == sorted(resids, reverse=True)
+
+    def test_multi_rank_matches_single_rank(self, spark, sf_dir):
+        """Lowering maxPartitionBytes makes the sizing rule pick >= 3
+        ranks; the allGather exchange must reproduce the one-rank run."""
+        from psvm_spark.ml.icf import icf_pivots, n_ranks
+        from psvm_spark.queries.ml import _ICF_CAP, _ICF_RANK
+
+        e = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < _ICF_CAP)
+        assert n_ranks(e) == 1
+        single = _trace(icf_pivots(e, _ICF_RANK))
+        before = spark.conf.get("spark.sql.files.maxPartitionBytes", None)
+        with _scoped_conf(spark, "spark.sql.files.maxPartitionBytes", "32k"):
+            assert n_ranks(e) >= 3
+            multi = _trace(icf_pivots(e, _ICF_RANK))
+        assert spark.conf.get("spark.sql.files.maxPartitionBytes", None) == before
+        assert multi == single == _numpy_icf(e.collect(), _ICF_RANK)
+
+    def test_rank_without_rows(self, spark, sf_dir):
+        """Three rows over more than three ranks: the empty ranks send no
+        candidate and still join every collective."""
+        from psvm_spark.ml.icf import icf_pivots, n_ranks
+
+        e = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 3)
+        single = _trace(icf_pivots(e, 3))
+        with _scoped_conf(spark, "spark.sql.files.maxPartitionBytes", "16k"):
+            assert n_ranks(e) > 3
+            multi = _trace(icf_pivots(e, 3))
+        assert multi == single == _numpy_icf(e.collect(), 3)
+
+    def test_empty_input_raises(self, spark, sf_dir):
+        from psvm_spark.ml.icf import icf_pivots
+
+        e = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 0)
+        with pytest.raises(Exception, match="icf_pivots: the input has no rows"):
+            icf_pivots(e, 2).collect()
 
 
 class TestKmeansLloydExact:

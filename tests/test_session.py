@@ -179,3 +179,26 @@ class TestScratchDirCleanup:
         shutil.rmtree(d, ignore_errors=True)
         _SCRATCH_ROOTS.remove(d)
         assert not os.path.exists(d)
+
+
+class TestSessionDefaults:
+    def test_defaults_follow_the_box_and_env_overrides(self, monkeypatch):
+        """With neither variable set, the CPU count is the process's CPU
+        affinity and driver memory is min(16g, 3/4 of MemTotal)."""
+        import os
+
+        from psvm_spark.session import _cpus, _driver_mem
+
+        monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+        monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+        assert _cpus() == len(os.sched_getaffinity(0))
+        mem = _driver_mem()
+        assert mem.endswith("m")
+        with open("/proc/meminfo") as fh:
+            total_mb = next(int(l.split()[1]) for l in fh if l.startswith("MemTotal:")) / 1024
+        assert 0 < int(mem[:-1]) == min(16 * 1024, int(total_mb * 3 / 4))
+
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+        monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
+        assert _cpus() == 3
+        assert _driver_mem() == "2g"

@@ -71,6 +71,7 @@ def main() -> None:
     timings: dict[str, float] = {}
     housekeep_s: dict[str, float] = {}
     errors: dict[str, str] = {}
+    retried: list[str] = []
     for i, (name, fn) in enumerate(registry.QUERIES.items()):
         h0 = time.perf_counter()
         housekeep(spark, i)
@@ -79,6 +80,7 @@ def main() -> None:
         try:
             materialize(fn(spark, sf_dir))
         except Exception:  # noqa: BLE001 — one transient failure must not kill the run
+            retried.append(name)
             t0 = time.perf_counter()  # time the retry alone, not failure + retry
             try:
                 materialize(fn(spark, sf_dir))  # one retry
@@ -101,6 +103,12 @@ def main() -> None:
         "housekeep_total_sec": round(sum(housekeep_s.values()), 4),
         "housekeep_sec": housekeep_s,
     }
+    # Keys whose first attempt raised, whether or not the retry passed:
+    # a silent retry is still a failure.  Kept out of the compact line.
+    out["retried"] = retried
+    if retried:
+        print(f"bench: {len(retried)} key(s) needed a retry: {', '.join(retried)}",
+              file=sys.stderr)
     if errors:
         out["errors"] = errors
     # The driver keeps only the LAST ~2000 chars of stdout and parses the

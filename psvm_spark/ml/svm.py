@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType
@@ -163,7 +164,7 @@ def fit_eval_linear_svc(
     # clear it; the summary is recomputable and unused here.
     try:
         model._java_obj.setSummary(tr.sparkSession._jvm.scala.Option.empty())
-    except Exception:  # noqa: BLE001 — best-effort: absent on API change
+    except Py4JError:  # the method is absent on this Spark build
         pass
     pred = model.transform(te)
     acc = pred.agg(
@@ -177,9 +178,12 @@ def fit_eval_ovr_multiclass(
     sf_dir: str,
     max_iter: int = 15,
     reg_param: float = 0.01,
-    parallelism: int = 4,
+    parallelism: int | None = None,
 ):
-    """10-class OneVsRest(LinearSVC) on embeddings (SURVEY.md A10)."""
+    """10-class OneVsRest(LinearSVC) on embeddings (SURVEY.md A10).
+
+    ``parallelism`` (binary fits run at once) defaults to the session's
+    ``defaultParallelism``."""
     from pyspark.ml.classification import LinearSVC, OneVsRest
     from pyspark.ml.functions import array_to_vector
 
@@ -198,7 +202,7 @@ def fit_eval_ovr_multiclass(
         classifier=LinearSVC(maxIter=max_iter, regParam=reg_param),
         labelCol="y",
         featuresCol="features",
-        parallelism=parallelism,
+        parallelism=parallelism or spark.sparkContext.defaultParallelism,
     )
     try:
         model = ovr.fit(train)

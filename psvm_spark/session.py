@@ -85,9 +85,25 @@ def get_spark(app_name: str = "psvm_spark", cpus: int | None = None) -> SparkSes
         # expressions run interpreted (measured here: 10-25x on the
         # dedup tier late in a 229-query bench, while plain scans stay
         # 1x).  Reserve more and keep flushing enabled.
+        #
+        # The tier-4 (C2) promotion thresholds are 5x their JDK 17
+        # defaults.  A fresh JVM otherwise C2-compiles planning, codegen
+        # and streaming start-up code that is hot for a few hundred ms:
+        # in a cold local[4] perfbench pass the compiler threads used
+        # 11.8 of 20.9 CPU-s (batch_stream_sf001) and 14.1 of 23.5
+        # (psvm_train_amp10); at 5x, query CPU fell 30% and 27%.  Code
+        # stays in C1 until it has been hot 5x longer, so per-row loops
+        # over real data still reach C2 within their first few hundred
+        # thousand rows.  In local mode this JVM is also the executor.
+        # Sessions not built here (the one a caller hands to
+        # __spark_entry__, cluster deployments) keep the JVM defaults.
         .config(
             "spark.driver.extraJavaOptions",
-            "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing",
+            "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing"
+            " -XX:Tier4InvocationThreshold=25000"
+            " -XX:Tier4MinInvocationThreshold=3000"
+            " -XX:Tier4CompileThreshold=75000"
+            " -XX:Tier4BackEdgeThreshold=200000",
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.warehouse.dir", "/tmp/psvm_spark_warehouse")

@@ -202,3 +202,18 @@ class TestSessionDefaults:
         monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
         assert _cpus() == 3
         assert _driver_mem() == "2g"
+
+    def test_session_jvm_runs_the_jit_policy(self, spark):
+        """get_spark launches its JVM with the enlarged, flushing code
+        cache and tier-4 (C2) promotion thresholds at 5x the JDK 17
+        defaults."""
+        mx = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+        args = set(mx.getRuntimeMXBean().getInputArguments())
+        assert {
+            "-XX:ReservedCodeCacheSize=1g",
+            "-XX:+UseCodeCacheFlushing",
+            "-XX:Tier4InvocationThreshold=25000",
+            "-XX:Tier4MinInvocationThreshold=3000",
+            "-XX:Tier4CompileThreshold=75000",
+            "-XX:Tier4BackEdgeThreshold=200000",
+        } <= args, sorted(args)

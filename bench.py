@@ -18,7 +18,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-from psvm_spark import registry
+from psvm_spark import registry, session
 from psvm_spark.session import get_spark
 
 
@@ -61,12 +61,26 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
+    t0 = time.perf_counter()
     spark = get_spark("psvm_spark_bench")
     spark.sparkContext.setLogLevel("ERROR")
+    t1 = time.perf_counter()
     registry.load_all()
+    t2 = time.perf_counter()
 
     # Warm the JVM/codegen path once on the flagship before timing.
     materialize(registry.QUERIES["agg_pricing_summary"](spark, sf_dir))
+    # Session start-up, outside the timed region: part of the process
+    # wall time a production run pays.  "cds" says whether the JVM
+    # started from the class-data archive (session.cds_state).
+    startup = {
+        "get_spark_s": round(t1 - t0, 4),
+        "load_all_s": round(t2 - t1, 4),
+        "warmup_s": round(time.perf_counter() - t2, 4),
+        "cds": session.cds_state(),
+    }
+    print("bench: session start-up " + " ".join(f"{k}={v}" for k, v in startup.items()),
+          file=sys.stderr)
 
     timings: dict[str, float] = {}
     housekeep_s: dict[str, float] = {}
@@ -102,6 +116,7 @@ def main() -> None:
         # can account for it instead of comparing apples to oranges.
         "housekeep_total_sec": round(sum(housekeep_s.values()), 4),
         "housekeep_sec": housekeep_s,
+        "startup": startup,
     }
     # Keys whose first attempt raised, whether or not the retry passed:
     # a silent retry is still a failure.  Kept out of the compact line.

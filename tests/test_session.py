@@ -217,3 +217,155 @@ class TestSessionDefaults:
             "-XX:Tier4CompileThreshold=75000",
             "-XX:Tier4BackEdgeThreshold=200000",
         } <= args, sorted(args)
+
+
+class TestConfErrors:
+    def test_only_unsettable_confs_are_accepted(self, spark, monkeypatch):
+        """A conf Spark will not change on a live session keeps the
+        session's value; any other error (here an invalid value)
+        surfaces."""
+        import pytest
+        from pyspark.errors import IllegalArgumentException
+
+        from psvm_spark import session
+
+        monkeypatch.setitem(session._RUNTIME_CONFS, "spark.sql.warehouse.dir", "/nowhere")
+        monkeypatch.setitem(session._RUNTIME_CONFS, "spark.driver.memory", "1g")
+        ensure_session_invariants(spark)
+        assert spark.conf.get("spark.sql.warehouse.dir") != "/nowhere"
+        monkeypatch.undo()
+        monkeypatch.setitem(session._RUNTIME_CONFS, "spark.sql.adaptive.enabled", "maybe")
+        try:
+            with pytest.raises(IllegalArgumentException) as err:
+                ensure_session_invariants(spark)
+            assert err.value.getCondition() == "INVALID_CONF_VALUE.TYPE_MISMATCH"
+        finally:
+            monkeypatch.undo()
+            ensure_session_invariants(spark)
+        assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+
+# Logs written by -Xlog:cds*=info on OpenJDK 17: a launch that runs from
+# the dynamic archive, and one whose classpath no longer matches it.
+_CDS_MAPPED = """\
+[0.012s][info][cds] Mapped static  region #0 at base 0x00007ff2a1000000 top 0x00007ff2a1455000 (ReadWrite)
+[0.022s][info][cds] Mapped dynamic region #0 at base 0x00007ff2a1bca000 top 0x00007ff2a58b7000 (ReadWrite)
+[0.022s][info][cds] Mapped dynamic region #1 at base 0x00007ff2a58b7000 top 0x00007ff2ab837000 (ReadOnly)
+"""
+_CDS_MISMATCH = """\
+[0.030s][info][cds] Mapped dynamic region #0 at base 0x00007fe96dbca000 top 0x00007fe9718b7000 (ReadWrite)
+[0.163s][info][cds] UseSharedSpaces: shared class paths mismatch (hint: enable -Xlog:class+path=info to diagnose the failure)
+[0.163s][info][cds] Unmapping region #0 at base 0x00007fe96dbca000 (ReadWrite)
+[0.173s][warning][cds,dynamic] Unable to use shared archive. The top archive failed to load: /x/a.jsa
+"""
+
+# One process of the archive lifecycle test: a get_spark session with the
+# archive cache in argv[2]; stderr names the CDS state, stdout ends with
+# one line for the caller to parse.  The build limit is raised so that a
+# loaded test host cannot turn a slow build into a failed one.
+_CDS_CHILD = """\
+import sys
+from pathlib import Path
+sys.path.insert(0, sys.argv[1])
+from psvm_spark import session
+session._CDS_DIR = Path(sys.argv[2])
+session._BUILD_TIMEOUT_S = 240
+spark = session.get_spark("cds_lifecycle", cpus=2)
+args = list(spark.sparkContext._jvm.java.lang.management.ManagementFactory
+            .getRuntimeMXBean().getInputArguments())
+assert spark.range(10).count() == 10
+print("cds state:", session.cds_state(), file=sys.stderr)
+print("jvm args:", " ".join(args), file=sys.stderr)
+print("last line")
+"""
+
+
+class TestClassDataArchive:
+    def test_key_follows_options_and_jars(self, tmp_path):
+        import os
+
+        from psvm_spark.session import _cds_key
+
+        java, jars, conf = tmp_path / "java", tmp_path / "jars", tmp_path / "conf"
+        jars.mkdir()
+        java.write_bytes(b"\x7fELF")
+        for name in ("spark-core.jar", "spark-sql.jar"):
+            (jars / name).write_bytes(b"PK")
+        key = _cds_key(java, jars, "-Xa", conf)
+        assert _cds_key(java, jars, "-Xa", conf) == key
+        assert _cds_key(java, jars, "-Xa -Xb", conf) != key
+        st = (jars / "spark-sql.jar").stat()
+        os.utime(jars / "spark-sql.jar", ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+        assert _cds_key(java, jars, "-Xa", conf) != key
+
+    def test_conf_dir_with_only_templates_is_accepted(self, tmp_path, monkeypatch):
+        from psvm_spark.session import _cds_plan
+
+        conf = tmp_path / "conf"
+        conf.mkdir()
+        for name in ("spark-defaults.conf.template", "log4j2.properties.template"):
+            (conf / name).write_text("# template\n")
+        monkeypatch.setenv("SPARK_CONF_DIR", str(conf))
+        key, reason = _cds_plan(tmp_path / "cache")
+        assert key and reason == ""
+        assert (tmp_path / "cache" / "empty-conf").is_dir()
+
+    def test_real_spark_defaults_turns_cds_off(self, tmp_path, monkeypatch):
+        from psvm_spark.session import _cds_plan
+
+        conf = tmp_path / "conf"
+        conf.mkdir()
+        (conf / "spark-defaults.conf.template").write_text("# template\n")
+        (conf / "spark-defaults.conf").write_text("spark.executor.cores 2\n")
+        monkeypatch.setenv("SPARK_CONF_DIR", str(conf))
+        key, reason = _cds_plan(tmp_path / "cache")
+        assert key is None
+        assert "spark-defaults.conf" in reason and ".template" not in reason
+
+    def test_cds_log_decides_mapped(self):
+        from psvm_spark.session import _not_mapped
+
+        assert _not_mapped(_CDS_MAPPED) is None
+        assert "shared class paths mismatch" in _not_mapped(_CDS_MISMATCH)
+        assert _not_mapped("") == "no dynamic region in the CDS log"
+
+    def test_archive_lifecycle(self, tmp_path):
+        """The first process builds the archive when it exits, the second
+        maps it, and a truncated archive is moved aside with a warning
+        while the session still starts.  No CDS line reaches stdout."""
+        import os
+        import subprocess
+        import sys
+        from pathlib import Path
+
+        repo = str(Path(__file__).resolve().parents[1])
+        cache = tmp_path / "cache"
+        env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+
+        def run() -> tuple[str, str]:
+            p = subprocess.run([sys.executable, "-c", _CDS_CHILD, repo, str(cache)],
+                               capture_output=True, text=True, timeout=420, env=env,
+                               cwd=tmp_path)
+            assert p.returncode == 0, p.stderr[-3000:]
+            assert p.stdout.splitlines()[-1] == "last line", p.stdout[-2000:]
+            assert "cds" not in p.stdout.lower(), p.stdout[-2000:]
+            return next(l for l in p.stderr.splitlines() if l.startswith("cds state:")), p.stderr
+
+        state, err = run()
+        assert state == "cds state: built", err[-3000:]
+        (jsa,) = cache.glob("*.jsa")
+        assert jsa.stat().st_size == int(jsa.with_suffix(".size").read_text())
+        assert sorted(p.name for p in cache.iterdir()) == sorted(
+            ["empty-conf", jsa.name, jsa.with_suffix(".size").name])
+
+        state, err = run()
+        assert state == "cds state: mapped", err[-3000:]
+        assert f"-XX:SharedArchiveFile={jsa}" in err
+
+        os.chmod(jsa, 0o644)
+        with open(jsa, "r+b") as fh:
+            fh.truncate(jsa.stat().st_size // 2)
+        state, err = run()
+        assert state.startswith("cds state: off: ") and "bytes, published as" in state, err
+        assert "class-data archive not used" in err
+        assert not jsa.exists() and jsa.with_name(jsa.name + ".bad").exists()

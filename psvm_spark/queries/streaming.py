@@ -15,8 +15,62 @@ from pyspark.sql import functions as F
 
 from psvm_spark.catalog import load_table
 from psvm_spark.registry import query
-from psvm_spark.streaming.jobs import run_to_table, stream_documents, stream_events
+from psvm_spark.streaming.jobs import (
+    run_stream,
+    run_to_table,
+    scoped_confs,
+    stream_documents,
+    stream_events,
+)
+from psvm_spark.streaming.stateful import ROCKSDB_PROVIDER
 from psvm_spark.queries._util import local_df, scratch_dir
+
+
+def _staged_stream(spark: SparkSession, stage: str, schema) -> DataFrame:
+    """Every parquet file under ``stage`` (one sub-directory per staged
+    run) as a stream: a restart sees only the sub-directories staged
+    since its last run as new input."""
+    return (
+        spark.readStream.schema(schema)
+        .option("pathGlobFilter", "*.parquet")
+        .option("recursiveFileLookup", "true")
+        .parquet(stage)
+    )
+
+
+def _sentinel_restart(ev: DataFrame, build, event_types: list[str]) -> DataFrame:
+    """Run ``build(<ev as a stream>)`` into an append-mode parquet sink
+    twice off one checkpoint; return what the sink holds.
+
+    Run 1 streams the real rows, and append mode emits only what the
+    watermark has closed.  Then one row per event type is staged 30 days
+    after ``ev``'s last ``ts``, so run 2's watermark passes every real
+    row and the state recovered across the restart flushes.  The sink is
+    the parquet file sink because an append-mode restart needs a
+    fault-tolerant one (the memory sink can't recover the checkpoint).
+    The sentinel anchors to MAX(ts): anchoring to an arbitrary row (the
+    original limit(1) + 30 days) left the stream's last minutes inside
+    the final watermark and silently withheld their windows once the
+    span approached the margin (round-10 review catch).
+    """
+    spark = ev.sparkSession
+    stage, ckpt, out = (scratch_dir(f"psvm_flush_{d}_") for d in ("stage", "ckpt", "out"))
+    ev.write.mode("overwrite").parquet(f"{stage}/real")
+    src = _staged_stream(spark, stage, ev.schema)
+    sink = build(src).writeStream.format("parquet").outputMode("append").option("path", out)
+    run_stream(sink, ckpt)
+    sentinel = ev.agg(F.max("ts").alias("mx")).select(
+        F.explode(F.array(*[F.lit(t) for t in event_types])).alias("event_type"),
+        F.lit(-1).cast("long").alias("event_id"),
+        (F.col("mx") + F.expr("INTERVAL 30 DAYS")).alias("ts"),
+        F.lit(-1).cast("long").alias("user_id"),
+        F.lit(0.0).alias("value"),
+        F.lit("{}").alias("props"),
+    ).select(*ev.columns)
+    sentinel.coalesce(1).write.mode("overwrite").parquet(f"{stage}/flush")
+    run_stream(sink, ckpt)
+    return spark.read.parquet(out)
+
 
 # --------------------------------------------------------------------------
 # B38 — tumbling window aggregate (10-minute buckets x event_type).
@@ -42,7 +96,7 @@ def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(12,2)")).cast("double").alias("total"),
         )
     )
-    return run_to_table(agg, "complete", state_partitions=4).select(
+    return run_to_table(agg, "complete").select(
         F.col("w.start").alias("win_start"), "event_type", "n", "total"
     )
 
@@ -77,7 +131,7 @@ def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(12,2)")).cast("double").alias("total"),
         )
     )
-    return run_to_table(agg, "complete", state_partitions=4).select(
+    return run_to_table(agg, "complete").select(
         F.col("w.start").alias("win_start"), "event_type", "n", "total"
     )
 
@@ -120,7 +174,7 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(12,2)")).cast("double").alias("total"),
         )
     )
-    return run_to_table(agg, "complete", state_partitions=4).select(
+    return run_to_table(agg, "complete").select(
         "user_id",
         F.col("w.start").alias("session_start"),
         F.col("w.end").alias("session_end"),
@@ -151,7 +205,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = ev.join(F.broadcast(cust), ev.user_id == cust.c_custkey).select(
         "c_mktsegment", "event_type", "value"
     )
-    sunk = run_to_table(joined, "append", state_partitions=4)
+    sunk = run_to_table(joined, "append")
     return sunk.groupBy("c_mktsegment", "event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("value").cast("decimal(12,2)")).cast("double").alias("total"),
@@ -186,7 +240,7 @@ def stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    return run_to_table(agg, "update", state_partitions=4).select(
+    return run_to_table(agg, "update").select(
         F.col("w.start").alias("win_start"), "event_type", "n"
     )
 
@@ -214,7 +268,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = ev.withWatermark("ts", "30 minutes").dropDuplicatesWithinWatermark(
         ["user_id", "event_type"]
     )
-    out = run_to_table(deduped.select("event_id", "user_id", "event_type"), "append", state_partitions=4)
+    out = run_to_table(deduped.select("event_id", "user_id", "event_type"), "append")
     return out.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_kept"))
 
 
@@ -333,7 +387,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "purchase_id",
         F.expr("timestampdiff(MICROSECOND, click_ts, purchase_ts)").alias("gap_us"),
     )
-    return run_to_table(j, "append", state_partitions=4)
+    return run_to_table(j, "append")
 
 
 # --------------------------------------------------------------------------
@@ -386,15 +440,7 @@ def stream_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
             shutil.rmtree(target)
         os.rename(tmp, target)
 
-    ev = stream_events(spark, sf_dir)
-    ckpt = scratch_dir("psvm_ckpt_fb_")
-    q = (
-        ev.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(stream_events(spark, sf_dir).writeStream.foreachBatch(merge_batch))
     return spark.read.parquet(target).select(
         "user_id",
         F.col("ts").alias("latest_ts"),
@@ -452,7 +498,7 @@ def stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_ticks"),
         )
     )
-    return run_to_table(agg, "complete", state_partitions=4).select(
+    return run_to_table(agg, "complete").select(
         "event_type", F.col("w.start").alias("win_start"), "open", "high", "low", "close", "n_ticks"
     )
 
@@ -495,7 +541,7 @@ def stream_pyds_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("value").cast("decimal(12,2)")).cast("double").alias("total"),
     )
-    return run_to_table(agg, "complete", state_partitions=4, drain=True)
+    return run_to_table(agg, "complete", drain=True)
 
 
 # --------------------------------------------------------------------------
@@ -514,22 +560,12 @@ def stream_pyds_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("stream_file_sink_exactly_once")
 def stream_file_sink_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
-
-    from psvm_spark.streaming.jobs import stream_events
-
     ev = stream_events(spark, sf_dir).select("event_id", "user_id", "event_type")
     ckpt = scratch_dir("psvm_eo_ckpt_")
     sink = scratch_dir("psvm_eo_sink_") + "/out"
 
     def run_once():
-        q = (
-            ev.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        run_stream(ev.writeStream.format("parquet").option("path", sink), ckpt)
         return spark.read.parquet(sink).count()
 
     n_first = run_once()
@@ -570,44 +606,18 @@ FROM events GROUP BY event_type
 """,
 )
 def stream_state_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    from psvm_spark.session import ensure_session_invariants
-
-    ensure_session_invariants(spark)
     ev = load_table(spark, sf_dir, "events").select("event_id", "event_type")
     stage = scratch_dir("psvm_recov_stage_")
     ckpt = scratch_dir("psvm_recov_ckpt_")
-    half1 = ev.filter(F.col("event_id") % 2 == 0)
-    half2 = ev.filter(F.col("event_id") % 2 == 1)
-    half1.coalesce(1).write.mode("overwrite").parquet(f"{stage}/h1")
-    sink = f"psvm_recov_{uuid.uuid4().hex[:8]}"
-
-    def run_once():
-        src = (
-            spark.readStream.schema(ev.schema)
-            .option("pathGlobFilter", "*.parquet")
-            .option("recursiveFileLookup", "true")
-            .parquet(stage)
-        )
-        agg = src.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    from psvm_spark.streaming.jobs import state_partitions_ctx
-
-    with state_partitions_ctx(spark):
-        run_once()  # processes half 1, commits state, stops
-        half2.coalesce(1).write.mode("overwrite").parquet(f"{stage}/h2")
-        run_once()  # restart: new input is ONLY half 2; state must recover
-    return spark.table(sink).select("event_type", F.col("n").cast("bigint").alias("n"))
+    src = _staged_stream(spark, stage, ev.schema)
+    agg = src.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
+    # run 1 processes half 1, commits state and stops; run 2 restarts from
+    # the same checkpoint with ONLY half 2 as new input: state must recover
+    for half in (0, 1):
+        part = ev.filter(F.col("event_id") % 2 == half).coalesce(1)
+        part.write.mode("overwrite").parquet(f"{stage}/h{half + 1}")
+        out = run_to_table(agg, "complete", ckpt)
+    return out.select("event_type", F.col("n").cast("bigint").alias("n"))
 
 
 # --------------------------------------------------------------------------
@@ -644,7 +654,7 @@ def stream_sliding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = ev.groupBy(
         F.window("ts", "10 minutes", "5 minutes").alias("w"), "event_type"
     ).agg(F.count(F.lit(1)).alias("n"))
-    done = run_to_table(agg, "complete", state_partitions=4).select(
+    done = run_to_table(agg, "complete").select(
         F.col("w.start").alias("win_start"), "event_type", F.col("n").cast("bigint").alias("n")
     )
     rk = F.row_number().over(
@@ -706,7 +716,7 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("c_ts") <= F.col("e_ts") + F.expr("INTERVAL 5 MINUTES")),
         "inner",
     ).select("error_id", "user_id")
-    pairs = run_to_table(j, "append", state_partitions=4)
+    pairs = run_to_table(j, "append")
     return pairs.groupBy("error_id", "user_id").agg(
         F.count(F.lit(1)).alias("n_nearby_clicks")
     )
@@ -767,7 +777,7 @@ def stream_semi_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("c_ts") <= F.col("e_ts") + F.expr("INTERVAL 5 MINUTES")),
         "left_semi",
     ).select("error_id", "user_id")
-    return run_to_table(j, "append", state_partitions=4)
+    return run_to_table(j, "append")
 
 
 # --------------------------------------------------------------------------
@@ -833,7 +843,7 @@ def stream_asym_watermark_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("c_ts") <= F.col("e_ts") + F.expr("INTERVAL 10 MINUTES")),
         "inner",
     ).select("error_id", "user_id")
-    pairs = run_to_table(j, "append", state_partitions=4)
+    pairs = run_to_table(j, "append")
     return pairs.groupBy("error_id", "user_id").agg(
         F.count(F.lit(1)).alias("n_following_clicks")
     )
@@ -871,9 +881,7 @@ def stream_dedup_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ingest_ts", "1 hour")
         .dropDuplicatesWithinWatermark(["lang", "digest"])
     )
-    kept = run_to_table(
-        deduped.select("doc_id", "lang", "digest"), "append", state_partitions=4
-    )
+    kept = run_to_table(deduped.select("doc_id", "lang", "digest"), "append")
     return kept.groupBy("lang").agg(F.count(F.lit(1)).alias("n_kept"))
 
 
@@ -906,69 +914,21 @@ GROUP BY 1, 2
 """,
 )
 def stream_dedup_windowed_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from psvm_spark.session import ensure_session_invariants
-
-    ensure_session_invariants(spark)
-    ev = normalize_event_ts_cols(spark, sf_dir)
-    stage = scratch_dir("psvm_chain_stage_")
-    ckpt = scratch_dir("psvm_chain_ckpt_")
-    out = scratch_dir("psvm_chain_out_")
-    ev.write.mode("overwrite").parquet(f"{stage}/real")
-
-    def run_once():
-        # append-mode restart requires a fault-tolerant sink (the
-        # memory sink can't recover a checkpoint) — parquet file sink,
-        # the production choice anyway.
-        src = (
-            spark.readStream.schema(ev.schema)
-            .option("pathGlobFilter", "*.parquet")
-            .option("recursiveFileLookup", "true")
-            .parquet(stage)
-        )
+    def build(src: DataFrame) -> DataFrame:
         dd = (
             src.withWatermark("ts", "0 seconds")
             .withColumn("win", F.window("ts", "10 minutes"))
             .dropDuplicates(["user_id", "event_type", "win"])
         )
-        agg = dd.groupBy("win", "event_type").agg(
-            F.count(F.lit(1)).alias("n_users")
-        )
-        q = (
-            agg.writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        return dd.groupBy("win", "event_type").agg(F.count(F.lit(1)).alias("n_users"))
 
-    from psvm_spark.streaming.jobs import state_partitions_ctx
-
-    with state_partitions_ctx(spark):
-        run_once()  # real events: state accumulates, no window finalizes
-        # sentinel anchors to MAX(ts): anchoring to an arbitrary row (the
-        # original limit(1) + 30 days) left the stream's last minutes
-        # inside the final watermark and silently withheld their windows
-        # once the span approached the margin (round-10 review catch)
-        sentinel = ev.agg(F.max("ts").alias("mx")).select(
-            F.lit(-1).cast("long").alias("event_id"),
-            (F.col("mx") + F.expr("INTERVAL 30 DAYS")).alias("ts"),
-            F.lit(-1).cast("long").alias("user_id"),
-            F.lit("__sentinel__").alias("event_type"),
-            F.lit(0.0).alias("value"),
-            F.lit("{}").alias("props"),
-        ).select(*ev.columns)
-        sentinel.coalesce(1).write.mode("overwrite").parquet(f"{stage}/flush")
-        run_once()  # sentinel pushes the watermark: every real window emits
-    return (
-        spark.read.parquet(out)
-        .filter(F.col("event_type") != "__sentinel__")
-        .select(
-            F.col("win.start").alias("win_start"),
-            "event_type",
-            F.col("n_users").cast("bigint").alias("n_users"),
-        )
+    # run 1: state accumulates, no window finalizes; the sentinel's run 2
+    # pushes the watermark past every real window
+    rows = _sentinel_restart(normalize_event_ts_cols(spark, sf_dir), build, ["__sentinel__"])
+    return rows.filter(F.col("event_type") != "__sentinel__").select(
+        F.col("win.start").alias("win_start"),
+        "event_type",
+        F.col("n_users").cast("bigint").alias("n_users"),
     )
 
 
@@ -1018,22 +978,7 @@ GROUP BY user_id
 """,
 )
 def stream_outer_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from psvm_spark.session import ensure_session_invariants
-
-    ensure_session_invariants(spark)
-    ev = normalize_event_ts_cols(spark, sf_dir)
-    stage = scratch_dir("psvm_oij_stage_")
-    ckpt = scratch_dir("psvm_oij_ckpt_")
-    out = scratch_dir("psvm_oij_out_")
-    ev.write.mode("overwrite").parquet(f"{stage}/real")
-
-    def run_once():
-        src = (
-            spark.readStream.schema(ev.schema)
-            .option("pathGlobFilter", "*.parquet")
-            .option("recursiveFileLookup", "true")
-            .parquet(stage)
-        )
+    def build(src: DataFrame) -> DataFrame:
         errors = (
             src.filter(F.col("event_type").isin("error", "__sentinel__"))
             .select(
@@ -1049,7 +994,7 @@ def stream_outer_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("user_id").alias("c_user"), F.col("ts").alias("c_ts"))
             .withWatermark("c_ts", "0 seconds")
         )
-        j = errors.join(
+        return errors.join(
             clicks,
             (F.col("user_id") == F.col("c_user"))
             & (F.col("c_ts") >= F.col("e_ts") - F.expr("INTERVAL 5 MINUTES"))
@@ -1061,39 +1006,18 @@ def stream_outer_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             F.col("c_ts").isNotNull().alias("matched"),
         )
-        q = (
-            j.writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
 
-    from psvm_spark.streaming.jobs import state_partitions_ctx
-
-    with state_partitions_ctx(spark):
-        run_once()  # real events: inner matches emit, unmatched lefts held
-        # The query's GLOBAL watermark is the MIN across both sides'
-        # watermark operators, so the flush needs a sentinel on EACH side:
-        # one '__sentinel__' row advances the error side, one 'click' row
-        # (user -1, matches only the sentinel error, filtered below)
-        # advances the click side — otherwise errors within the band of the
-        # last real click are never proven unmatched and never emit.
-        sentinel = ev.agg(F.max("ts").alias("mx")).select(
-            F.explode(
-                F.array(F.lit("__sentinel__"), F.lit("click"))
-            ).alias("event_type"),
-            F.lit(-1).cast("long").alias("event_id"),
-            (F.col("mx") + F.expr("INTERVAL 30 DAYS")).alias("ts"),
-            F.lit(-1).cast("long").alias("user_id"),
-            F.lit(0.0).alias("value"),
-            F.lit("{}").alias("props"),
-        ).select(*ev.columns)
-        sentinel.coalesce(1).write.mode("overwrite").parquet(f"{stage}/flush")
-        run_once()  # watermark passes: retained lefts flush null-extended
-    pairs = spark.read.parquet(out).filter(F.col("event_type") == "error")
+    # Run 1: inner matches emit, unmatched lefts are held.  The query's
+    # GLOBAL watermark is the MIN across both sides' watermark operators,
+    # so the flush needs a sentinel on EACH side: one '__sentinel__' row
+    # advances the error side, one 'click' row (user -1, matches only the
+    # sentinel error, filtered below) advances the click side — otherwise
+    # errors within the band of the last real click are never proven
+    # unmatched and never emit.  Run 2 flushes the lefts null-extended.
+    rows = _sentinel_restart(
+        normalize_event_ts_cols(spark, sf_dir), build, ["__sentinel__", "click"]
+    )
+    pairs = rows.filter(F.col("event_type") == "error")
     per_error = pairs.groupBy("error_id", "user_id").agg(
         F.max(F.col("matched").cast("int")).alias("any_match")
     )
@@ -1164,7 +1088,7 @@ def stream_session_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(12,2)")).cast("double").alias("total"),
         )
     )
-    return run_to_table(agg, "complete", state_partitions=4).select(
+    return run_to_table(agg, "complete").select(
         "user_id",
         F.col("w.start").alias("session_start"),
         F.col("w.end").alias("session_end"),
@@ -1207,29 +1131,14 @@ def sink_pyds_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The events fixture is a single parquet split, so without an
     # explicit repartition the whole Python-side JSONL encode (and the
     # read-back, one task per committed shard) runs on ONE worker.
-    # Spread the micro-batch across the session's parallelism — sized
-    # by conf, not a local[32] constant (at 100 TB the knob follows
-    # target shard size).
-    n_sink = int(
-        spark.conf.get(
-            "psvm.stream.sink_partitions", str(spark.sparkContext.defaultParallelism)
-        )
-    )
+    # Spread the micro-batch across the session's parallelism.
     ev = (
         stream_events(spark, sf_dir)
         .select("event_id", "event_type", "value")
-        .repartition(n_sink)
+        .repartition(spark.sparkContext.defaultParallelism)
     )
     sink = scratch_dir("psvm_jsonl_sink_")
-    ckpt = scratch_dir("psvm_jsonl_ckpt_")
-    q = (
-        ev.writeStream.format("jsonl_stream_sink")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(ev.writeStream.format("jsonl_stream_sink").option("path", sink))
     files = committed_files(sink)
     back = spark.read.schema(_SINK_SCHEMA).json(files)
     return back.groupBy("event_type").agg(
@@ -1282,22 +1191,7 @@ FROM users u
 """,
 )
 def stream_full_outer_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from psvm_spark.session import ensure_session_invariants
-
-    ensure_session_invariants(spark)
-    ev = normalize_event_ts_cols(spark, sf_dir)
-    stage = scratch_dir("psvm_foij_stage_")
-    ckpt = scratch_dir("psvm_foij_ckpt_")
-    out = scratch_dir("psvm_foij_out_")
-    ev.write.mode("overwrite").parquet(f"{stage}/real")
-
-    def run_once():
-        src = (
-            spark.readStream.schema(ev.schema)
-            .option("pathGlobFilter", "*.parquet")
-            .option("recursiveFileLookup", "true")
-            .parquet(stage)
-        )
+    def build(src: DataFrame) -> DataFrame:
         errors = (
             src.filter(F.col("event_type").isin("error", "__sentinel__"))
             .select(
@@ -1317,44 +1211,21 @@ def stream_full_outer_interval_join(spark: SparkSession, sf_dir: str) -> DataFra
             )
             .withWatermark("c_ts", "0 seconds")
         )
-        j = errors.join(
+        return errors.join(
             clicks,
             (F.col("e_user") == F.col("c_user"))
             & (F.col("c_ts") >= F.col("e_ts") - F.expr("INTERVAL 5 MINUTES"))
             & (F.col("c_ts") <= F.col("e_ts") + F.expr("INTERVAL 5 MINUTES")),
             "fullOuter",
         ).select("error_id", "e_user", "e_type", "click_id", "c_user")
-        q = (
-            j.writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
 
-    from psvm_spark.streaming.jobs import state_partitions_ctx
-
-    with state_partitions_ctx(spark):
-        run_once()  # real events: inner matches emit, both sides retained
-        # Dual-side sentinel (stream_outer_interval_join protocol): one
-        # '__sentinel__' error and one user -1 click advance each side's
-        # watermark past every real row, flushing the retained unmatched
-        # rows from BOTH state stores.
-        sentinel = ev.agg(F.max("ts").alias("mx")).select(
-            F.explode(
-                F.array(F.lit("__sentinel__"), F.lit("click"))
-            ).alias("event_type"),
-            F.lit(-1).cast("long").alias("event_id"),
-            (F.col("mx") + F.expr("INTERVAL 30 DAYS")).alias("ts"),
-            F.lit(-1).cast("long").alias("user_id"),
-            F.lit(0.0).alias("value"),
-            F.lit("{}").alias("props"),
-        ).select(*ev.columns)
-        sentinel.coalesce(1).write.mode("overwrite").parquet(f"{stage}/flush")
-        run_once()  # watermark passes: both sides' unmatched flush
-    rows = spark.read.parquet(out)
+    # Dual-side sentinel (stream_outer_interval_join protocol): run 1
+    # emits inner matches and retains both sides; one '__sentinel__'
+    # error and one user -1 click then advance each side's watermark past
+    # every real row, flushing the unmatched rows from BOTH state stores.
+    rows = _sentinel_restart(
+        normalize_event_ts_cols(spark, sf_dir), build, ["__sentinel__", "click"]
+    )
     err_side = (
         rows.filter(F.col("e_type") == "error")
         .groupBy("error_id", F.col("e_user").alias("user_id"))
@@ -1411,74 +1282,24 @@ FROM events GROUP BY 1, 2
 """,
 )
 def stream_rocksdb_state_store(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    from psvm_spark.session import ensure_session_invariants
-
-    ensure_session_invariants(spark)
     ev = normalize_event_ts_cols(spark, sf_dir).select("event_id", "event_type", "ts")
     stage = scratch_dir("psvm_rocks_stage_")
     ckpt = scratch_dir("psvm_rocks_ckpt_")
-    half1 = ev.filter(F.col("event_id") % 2 == 0)
-    half2 = ev.filter(F.col("event_id") % 2 == 1)
-    half1.coalesce(1).write.mode("overwrite").parquet(f"{stage}/h1")
-    sink = f"psvm_rocks_{uuid.uuid4().hex[:8]}"
-
-    def run_once():
-        src = (
-            spark.readStream.schema(ev.schema)
-            .option("pathGlobFilter", "*.parquet")
-            .option("recursiveFileLookup", "true")
-            .parquet(stage)
-        )
-        agg = src.groupBy(
-            "event_type", F.date_trunc("day", "ts").alias("day")
-        ).agg(F.count(F.lit(1)).alias("n"))
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    conf = spark.conf
-    prev_provider = conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    prev_changelog = conf.get(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", None
-    )
-    conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true",
-    )
-    from psvm_spark.streaming.jobs import state_partitions_ctx
-
-    try:
-        with state_partitions_ctx(spark):
-            run_once()  # half 1 into RocksDB state, stop
-            half2.coalesce(1).write.mode("overwrite").parquet(f"{stage}/h2")
-            run_once()  # restart: RocksDB state must recover via changelog
-    finally:
-        for key, prev in (
-            ("spark.sql.streaming.stateStore.providerClass", prev_provider),
-            (
-                "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-                prev_changelog,
-            ),
-        ):
-            if prev is None:
-                conf.unset(key)
-            else:
-                conf.set(key, prev)
-    return spark.table(sink).select(
-        "event_type", "day", F.col("n").cast("bigint").alias("n")
-    )
+    agg = _staged_stream(spark, stage, ev.schema).groupBy(
+        "event_type", F.date_trunc("day", "ts").alias("day")
+    ).agg(F.count(F.lit(1)).alias("n"))
+    rocksdb = {
+        "spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER,
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
+    }
+    with scoped_confs(spark, rocksdb):
+        # run 1: half 1 into RocksDB state, stop; run 2: restart, the
+        # RocksDB state must recover via its changelog
+        for half in (0, 1):
+            part = ev.filter(F.col("event_id") % 2 == half).coalesce(1)
+            part.write.mode("overwrite").parquet(f"{stage}/h{half + 1}")
+            out = run_to_table(agg, "complete", ckpt)
+    return out.select("event_type", "day", F.col("n").cast("bigint").alias("n"))
 
 
 # --------------------------------------------------------------------------
@@ -1502,24 +1323,10 @@ FROM events GROUP BY event_type
 """,
 )
 def scan_state_store_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     ev = stream_events(spark, sf_dir)
     agg = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
     ckpt = scratch_dir("psvm_ssread_ckpt_")
-    name = f"psvm_ssread_{uuid.uuid4().hex[:8]}"
-    from psvm_spark.streaming.jobs import state_partitions_ctx
-
-    with state_partitions_ctx(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_to_table(agg, "complete", ckpt)
     state = spark.read.format("statestore").load(ckpt)
     return state.select(
         F.col("key.event_type").alias("event_type"),
@@ -1557,8 +1364,6 @@ def stream_progress_listener(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql.streaming import StreamingQueryListener
 
-    from psvm_spark.queries._util import scratch_dir
-
     seen: dict = {"progress": [], "terminated": set()}
 
     class _MetricsListener(StreamingQueryListener):
@@ -1584,25 +1389,15 @@ def stream_progress_listener(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     listener = _MetricsListener()
     spark.streams.addListener(listener)
-    sink = f"psvm_listener_{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
         agg = (
             stream_events(spark, sf_dir)
             .groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
             .agg(F.count(F.lit(1)).alias("n"))
         )
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", scratch_dir("psvm_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
+        sink = f"psvm_listener_{uuid.uuid4().hex[:8]}"
+        q = run_stream(agg.writeStream.outputMode("complete").format("memory").queryName(sink))
         qid = str(q.id)
-        q.awaitTermination()
         # drain the bus: terminated follows every progress for this id
         deadline = time.monotonic() + 60
         while qid not in seen["terminated"] and time.monotonic() < deadline:
@@ -1610,7 +1405,6 @@ def stream_progress_listener(spark: SparkSession, sf_dir: str) -> DataFrame:
         if qid not in seen["terminated"]:
             raise RuntimeError("listener bus did not deliver termination in 60s")
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         spark.streams.removeListener(listener)
     mine = [p for p in seen["progress"] if p[0] == qid]
     rows_total = sum(p[2] for p in mine)

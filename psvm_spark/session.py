@@ -300,6 +300,12 @@ def _launch_with_cds(app_name: str, n: int) -> SparkSession:
         return plain.getOrCreate()
     map_log = cache / f"map-{os.getpid()}.log"
     opts = (f"{_JVM_OPTS} -XX:SharedArchiveFile={jsa}"
+            # An archive corrupted in place makes the JVM die with SIGSEGV
+            # when it maps it.  With the archive's CRCs checked (written at
+            # every dump), it logs "UseSharedSpaces: Checksum verification
+            # failed." and starts without it, which _not_mapped reports.
+            # A crash report lands in the cache, not the working directory.
+            f" -XX:+VerifySharedSpaces -XX:ErrorFile={cache}/hs_err_%p.log"
             # CDS messages go to the log only: callers parse this
             # process's last stdout line.
             f" -Xlog:cds*=off -Xlog:cds*=info:file={map_log}")

@@ -8,24 +8,43 @@ operator can run in either mode and the driver's DuckDB oracle checks
 the *streaming* result against batch SQL — stream/batch equivalence is
 the correctness claim, not just a rows-only smoke.
 
-``run_to_table`` drives a query to completion with the availableNow
-trigger into a uniquely-named memory sink and returns the result as a
-plain DataFrame.  At production scale the same code points at a
-directory of arriving files (or Kafka) with a real checkpoint location;
-state stores shard by the grouping key across executors.
+Every streaming query in the engine starts through :func:`run_stream`
+(``run_to_table`` is its memory-sink case), under one rule:
+
+- the checkpoint is a fresh ``scratch_dir`` unless the caller passes
+  one (a restart passes the same one twice);
+- the trigger is availableNow, or processAllAvailable + stop when
+  ``drain=True`` (custom Python sources);
+- the state store gets ``STATE_PARTITIONS`` partitions, for the run only;
+- the call returns once the query has run to completion.
+
+At production scale the same code points at a directory of arriving
+files (or Kafka) with a durable checkpoint location; state stores shard
+by the grouping key across executors.
 """
 
 from __future__ import annotations
 
 import itertools
-from contextlib import contextmanager, nullcontext
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from psvm_spark.catalog import normalize_event_ts
 from psvm_spark.queries._util import scratch_dir
 from psvm_spark.session import ensure_session_invariants
+
+# A stateful operator creates one state-store instance per shuffle
+# partition, fixed at the query's first run, and store instances dominate
+# the cost of low-cardinality demos (RocksDB native init, HDFS-backed
+# delta files per store per batch).  Measured in r13: 8 -> 4 saves ~1.7 s
+# on the staged-restart interval joins and 0.2-0.4 s on memory-sink keys;
+# results are partitioning-invariant.  Sized to state cardinality, not to
+# cores: the two applyInPandasWithState keys get no Python parallelism
+# beyond it.
+STATE_PARTITIONS = 4
 
 _counter = itertools.count()
 
@@ -44,25 +63,21 @@ def _raw_schema(spark: SparkSession, path: str):
 
 
 @contextmanager
-def state_partitions_ctx(spark: SparkSession, n: int = 4):
-    """Run a streaming query with its state sized to key cardinality.
-
-    A stateful operator creates one state-store instance per shuffle
-    partition, FIXED at the query's first run; store instances dominate
-    the cost of low-cardinality demos (RocksDB native init, HDFS-backed
-    delta files per store per batch).  The default of 4 was measured in
-    r13: 8 -> 4 saves ~1.7 s on the staged-restart interval joins and
-    0.2-0.4 s on memory-sink keys, results partitioning-invariant.
-    Restores the session conf afterwards; only the streaming run inside
-    the context is affected, so batch results are unchanged (values
-    never depend on partitioning).
-    """
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+def scoped_confs(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` on the session for the body only: afterwards a key
+    that was set has its old value again and one that was unset is
+    unset again, also when the body raises."""
+    saved = {key: spark.conf.get(key, None) for key in confs}
     try:
+        for key, value in confs.items():
+            spark.conf.set(key, value)
         yield
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        for key, prev in saved.items():
+            if prev is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, prev)
 
 
 def _read_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -107,48 +122,38 @@ def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def run_to_table(
-    df: DataFrame, mode: str, state_partitions: int | None = None, drain: bool = False
-) -> DataFrame:
-    """Run a streaming DataFrame to completion (availableNow) through a
-    memory sink; return the final result as a batch DataFrame.
+def run_stream(
+    writer: DataStreamWriter, ckpt: str | None = None, drain: bool = False
+) -> StreamingQuery:
+    """Start ``writer`` (format, path and output mode already given) under
+    the module rule and return its query once it has run to completion.
 
     ``drain=True`` uses processAllAvailable()+stop() instead of the
     availableNow trigger — required for custom Python streaming sources,
     whose availableNow snapshot is taken at the FIRST offset fetch (one
     batch) rather than after the source exhausts.
-
-    ``state_partitions`` sizes the state store: a streaming aggregation
-    creates one state-store instance per shuffle partition (fixed at the
-    query's first run), so a low-cardinality keyed aggregation — a few
-    thousand windows — wastes startup and checkpoint I/O on the default
-    partition count.  Size it to state cardinality, not core count.
-    Leave it None for operators whose per-batch *compute* needs the
-    parallelism (e.g. applyInPandasWithState fans Python work across
-    partitions).  The conf is restored after the run; at 100 TB the
-    same knob is simply left at a number matched to key cardinality.
     """
-    spark = df.sparkSession
-    name = f"psvm_stream_{next(_counter)}"
-    ckpt = scratch_dir("psvm_ckpt_")
-    sized = (
-        nullcontext()
-        if state_partitions is None
-        else state_partitions_ctx(spark, state_partitions)
-    )
-    with sized:
-        writer = (
-            df.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-        )
+    writer = writer.option("checkpointLocation", ckpt or scratch_dir("psvm_ckpt_"))
+    with scoped_confs(
+        writer._spark, {"spark.sql.shuffle.partitions": str(STATE_PARTITIONS)}
+    ):
         if drain:
             q = writer.start()
             q.processAllAvailable()
             q.stop()
-            q.awaitTermination()
         else:
             q = writer.trigger(availableNow=True).start()
-            q.awaitTermination()
-    return spark.table(name)
+        q.awaitTermination()
+    return q
+
+
+def run_to_table(
+    df: DataFrame, mode: str, ckpt: str | None = None, drain: bool = False
+) -> DataFrame:
+    """Run a streaming DataFrame to completion through a uniquely named
+    memory sink (:func:`run_stream`); return the result as a batch
+    DataFrame.  A complete-mode sink restarted from ``ckpt`` under a new
+    name recovers its state."""
+    name = f"psvm_stream_{next(_counter)}"
+    run_stream(df.writeStream.outputMode(mode).format("memory").queryName(name), ckpt, drain)
+    return df.sparkSession.table(name)

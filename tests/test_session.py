@@ -258,6 +258,11 @@ _CDS_MISMATCH = """\
 [0.163s][info][cds] Unmapping region #0 at base 0x00007fe96dbca000 (ReadWrite)
 [0.173s][warning][cds,dynamic] Unable to use shared archive. The top archive failed to load: /x/a.jsa
 """
+_CDS_CHECKSUM = """\
+[0.016s][info][cds] Mapped dynamic region #0 at base 0x00007fe6c1bca000 top 0x00007fe6c59e4000 (ReadWrite)
+[0.066s][info][cds] UseSharedSpaces: Checksum verification failed.
+[0.067s][warning][cds,dynamic] Unable to use shared archive. The top archive failed to load: /x/a.jsa
+"""
 
 # One process of the archive lifecycle test: a get_spark session with the
 # archive cache in argv[2]; stderr names the CDS state, stdout ends with
@@ -327,6 +332,7 @@ class TestClassDataArchive:
 
         assert _not_mapped(_CDS_MAPPED) is None
         assert "shared class paths mismatch" in _not_mapped(_CDS_MISMATCH)
+        assert _not_mapped(_CDS_CHECKSUM) == "UseSharedSpaces: Checksum verification failed."
         assert _not_mapped("") == "no dynamic region in the CDS log"
 
     def test_archive_lifecycle(self, tmp_path):
@@ -361,6 +367,7 @@ class TestClassDataArchive:
         state, err = run()
         assert state == "cds state: mapped", err[-3000:]
         assert f"-XX:SharedArchiveFile={jsa}" in err
+        assert "-XX:+VerifySharedSpaces" in err and f"-XX:ErrorFile={cache}/hs_err_%p.log" in err
 
         os.chmod(jsa, 0o644)
         with open(jsa, "r+b") as fh:

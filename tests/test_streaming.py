@@ -13,6 +13,51 @@ from psvm_spark.catalog import load_table
 registry.load_all()
 
 
+class TestStreamRunner:
+    def test_scoped_confs_restore_set_and_unset_keys(self, spark):
+        """A key that was set gets its value back and one that was unset
+        is unset again (not set to its default), also when the body
+        raises."""
+        import pytest
+
+        from psvm_spark.streaming.jobs import scoped_confs
+
+        set_key = "spark.sql.shuffle.partitions"
+        unset_key = "spark.sql.streaming.stateStore.providerClass"
+        saved = {k: spark.conf.get(k, None) for k in (set_key, unset_key)}
+        spark.conf.set(set_key, "7")
+        spark.conf.unset(unset_key)
+        inside = {set_key: "3", unset_key: "org.example.Provider"}
+        try:
+            with scoped_confs(spark, inside):
+                assert {k: spark.conf.get(k) for k in inside} == inside
+            assert spark.conf.get(set_key) == "7"
+            assert spark.conf.get(unset_key, None) is None
+            with pytest.raises(RuntimeError, match="body failed"):
+                with scoped_confs(spark, inside):
+                    raise RuntimeError("body failed")
+            assert spark.conf.get(set_key) == "7"
+            assert spark.conf.get(unset_key, None) is None
+        finally:
+            for k, v in saved.items():
+                spark.conf.unset(k) if v is None else spark.conf.set(k, v)
+
+    def test_failed_start_restores_shuffle_partitions(self, spark, sf_dir):
+        """A query that fails inside start() leaves the session's
+        partition count as it was, not at STATE_PARTITIONS."""
+        import pytest
+        from pyspark.errors import AnalysisException
+
+        from psvm_spark.streaming.jobs import STATE_PARTITIONS, run_to_table, stream_events
+
+        before = spark.conf.get("spark.sql.shuffle.partitions")
+        assert before != str(STATE_PARTITIONS)
+        # complete mode needs a streaming aggregation: start() refuses it
+        with pytest.raises(AnalysisException, match="STREAMING_OUTPUT_MODE"):
+            run_to_table(stream_events(spark, sf_dir), "complete")
+        assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
 class TestBatchStreamEquivalence:
     def test_session_window_stream_equals_batch(self, spark, sf_dir):
         got = registry.QUERIES["stream_session"](spark, sf_dir)

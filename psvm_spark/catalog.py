@@ -11,8 +11,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from psvm_spark.session import ensure_session_invariants
-
 TABLES = (
     "region",
     "nation",
@@ -61,7 +59,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``events.ts`` is normalized to TIMESTAMP (see ``normalize_event_ts``)
     so oracle comparisons on ``ts`` agree with DuckDB.
     """
-    ensure_session_invariants(spark)
     key = (id(spark), sf_dir.rstrip("/"), name)
     if key not in _cache:
         df = spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
@@ -98,7 +95,6 @@ def load_events_range(spark: SparkSession, sf_dir: str, lo_iso: str, hi_iso: str
         dt = datetime.fromisoformat(iso).replace(tzinfo=timezone.utc)
         return int(dt.timestamp()) * 1_000_000_000
 
-    ensure_session_invariants(spark)
     df = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
     dtype = dict(df.dtypes).get("ts")
     if dtype == "bigint":

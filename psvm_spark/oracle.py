@@ -21,6 +21,7 @@ import pandas as pd
 from pyspark.sql import SparkSession
 
 from psvm_spark.catalog import TABLES
+from psvm_spark.session import SCALE_CONFS, ensure_session_invariants, scale_conf
 
 
 def duckdb_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -89,24 +90,20 @@ def compare_query(
     from psvm_spark import registry
 
     registry.load_all()
-    # Probe-family oracles (sim_*/ml_knn_classify/...) pin the DEFAULT
-    # ``psvm.sim.probe_modulo`` of 50; a raised modulus is the scale
-    # harness's amplification knob and its output is NOT what the
-    # oracles describe.  Fail loudly rather than let an amplified run
-    # masquerade as a parity check (ADVICE r8).
-    for conf, default in (
-        ("psvm.sim.probe_modulo", "50"),
-        ("psvm.lof.sample_modulo", "10"),
-        ("psvm.svm.sv_modulo", "20"),
-        ("psvm.svm.test_modulo", "20"),
-    ):
-        val = spark.conf.get(conf, default)
+    # The oracles pin every scale conf at its default; a raised one is
+    # the scale harness's amplification knob, and its output is not what
+    # the oracles describe.  Fail loudly rather than let an amplified run
+    # masquerade as a parity check.
+    for conf, default in SCALE_CONFS.items():
+        val = scale_conf(spark, conf)
         if val != default:
             raise AssertionError(
-                f"oracle-parity run with {conf}={val}: the oracles pin "
+                f"oracle-parity run with psvm.{conf}={val}: the oracles pin "
                 f"the default {default} — reset the conf before "
                 "comparing against oracles"
             )
+    # as in the driver contract's queries() wrapper
+    ensure_session_invariants(spark)
     sdf = registry.QUERIES[name](spark, sf_dir)
     spdf = sdf.toPandas()
     own_con = con is None

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from psvm_spark.catalog import load_events_range, load_table
 from psvm_spark.queries._util import local_df
 from psvm_spark.registry import query
+from psvm_spark.session import SCALE_CONFS, scale_conf
 
 # --------------------------------------------------------------------------
 # Time-series gap-fill: resample each user's event values onto a fixed
@@ -6489,21 +6490,14 @@ def ts_sma_crossover(spark: SparkSession, sf_dir: str) -> DataFrame:
 # core-core edges — dedup_components' machinery).  Coordinates are
 # salted-md5 uniforms in [0, W) at 1e-3 resolution; dist2 and the
 # eps2 = 9/16 comparison are IEEE ops on identical operands (exact
-# threshold, house float rule).  Scale: the grid side W is a conf
-# (psvm.geo.dbscan_grid) raised by the amp harness so density — and
+# threshold, house float rule).  Scale: the grid side W is the
+# geo.dbscan_grid scale conf, raised by the amp harness so density — and
 # with it per-point candidate count — stays constant as the corpus
-# grows (the psvm.graph.n_nodes recipe); oracles pin the default.
+# grows (the graph.n_nodes recipe); oracles pin the default.
 
-_DBSCAN_GRID = 24
+_DBSCAN_GRID = SCALE_CONFS["geo.dbscan_grid"]
 _DBSCAN_EPS2 = 0.5625  # 0.75^2, exact binary fraction
 _DBSCAN_MINPTS = 4
-
-
-def _dbscan_grid(spark: SparkSession) -> int:
-    try:
-        return int(spark.conf.get("psvm.geo.dbscan_grid", str(_DBSCAN_GRID)))
-    except Exception:  # noqa: BLE001 — absent conf API quirk: use default
-        return _DBSCAN_GRID
 
 
 def _dbscan_coord(prefix: str, key: str, w: int) -> str:
@@ -6547,7 +6541,7 @@ LEFT JOIN border ON cnt.k = border.k
 """,
 )
 def geo_dbscan_core(spark: SparkSession, sf_dir: str) -> DataFrame:
-    w = _dbscan_grid(spark)
+    w = scale_conf(spark, "geo.dbscan_grid")
     c = load_table(spark, sf_dir, "customer")
     pts = c.select(
         F.col("c_custkey").alias("k"),

@@ -38,28 +38,19 @@ from pyspark.sql import functions as F
 
 from psvm_spark.catalog import load_table
 from psvm_spark.registry import query
+from psvm_spark.session import SCALE_CONFS, scale_conf
 
-N_NODES = 4_000
+# Vertex-space size.  At real scale vertex ids are real entities and
+# grow with the data; on the fixture they are hash-derived into a fixed
+# id space.  The scale harness raises the ``graph.n_nodes`` scale conf
+# by the amplification factor, so the amplified graph keeps base density
+# (20x edges over 20x vertices) instead of densifying a constant-size
+# graph.  The oracles pin the default.
+N_NODES = SCALE_CONFS["graph.n_nodes"]
+
 
 # Salted md5 -> vertex id, identical in both engines (established
 # conv/substr twin pattern, see llm.py split_stable_hash).
-def _n_nodes(spark: SparkSession) -> int:
-    """Vertex-space size (default 4000).
-
-    At real scale vertex ids are real entities and GROW with the data;
-    on the fixture they are hash-derived into a fixed id space.  The
-    scale harness (scripts/measure_scale.py) raises
-    ``psvm.graph.n_nodes`` by the amplification factor so the amplified
-    graph keeps base density (20x edges over 20x vertices) instead of
-    densifying a constant-size graph.  The oracles pin 4000 and the
-    driver never overrides the conf, so parity is unaffected.
-    """
-    try:
-        return int(spark.conf.get("psvm.graph.n_nodes", str(N_NODES)))
-    except Exception:  # noqa: BLE001 — absent conf API quirk: use default
-        return N_NODES
-
-
 def _u_spark(n: int) -> str:
     return (
         "pmod(cast(conv(substring(md5(concat('gu:', l_orderkey)), 1, 8), 16, 10)"
@@ -91,7 +82,7 @@ def edge_set(spark: SparkSession, sf_dir: str, *, materialize: bool = False) -> 
     md5 scan + distinct exactly once.
     """
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 4 == 0)
-    n = _n_nodes(spark)
+    n = scale_conf(spark, "graph.n_nodes")
     uv = li.select(
         F.expr(_u_spark(n)).cast("bigint").alias("u"),
         F.expr(_v_spark(n)).cast("bigint").alias("v"),
@@ -631,7 +622,7 @@ FROM ranked WHERE rnk <= {_HITS_TOPK}
 )
 def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 4 == 0)
-    n = _n_nodes(spark)
+    n = scale_conf(spark, "graph.n_nodes")
     edges = (
         li.select(
             F.expr(_u_spark(n)).cast("bigint").alias("u"),
@@ -1187,12 +1178,12 @@ def graph_louvain_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     dn = deg.select(F.col("x").alias("n"), F.col("d").alias("dn"))
     # (degree, node) packed as d*S + n with S = next power of two past
     # the VERTEX-SPACE size, not a fixed 2^20: the scaled-vertex
-    # harness raises psvm.graph.n_nodes far beyond 2^20, where a fixed
+    # harness raises graph.n_nodes far beyond 2^20, where a fixed
     # shift would bleed node bits into the degree field and corrupt
     # the argmax.  MIN(d*S + n) % S decodes to the same (d, n)
     # lexicographic argmin for ANY valid S, so the oracle's pinned
     # 2^20 (n_nodes = 4000) stays value-identical.
-    shift = 1 << max(_n_nodes(spark) - 1, 1).bit_length()
+    shift = 1 << max(scale_conf(spark, "graph.n_nodes") - 1, 1).bit_length()
     best = (
         adj.join(du, "x")
         .join(dn, "n")
@@ -1346,12 +1337,15 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
 # intra-community adjacency + K=4 min-label refinement (r4) —
 # interpolated by BOTH graph_leiden_refine and
 # graph_leiden_aggregate so the two oracles cannot desynchronize.
-_LEIDEN_R4_DUCK = f"""WITH edges AS ({_EDGES_DUCK}),
-adj AS (
+# The reused CTEs are MATERIALIZED: each r(k) reads r(k-1) twice, so
+# DuckDB 1.0 otherwise inlines r0 2^4 times and the oracle takes
+# minutes instead of tens of milliseconds at sf0.001.
+_LEIDEN_R4_DUCK = f"""WITH edges AS MATERIALIZED ({_EDGES_DUCK}),
+adj AS MATERIALIZED (
   SELECT a AS x, b AS n FROM edges
   UNION ALL
   SELECT b AS x, a AS n FROM edges),
-deg AS (SELECT x, COUNT(*) AS d FROM adj GROUP BY x),
+deg AS MATERIALIZED (SELECT x, COUNT(*) AS d FROM adj GROUP BY x),
 m AS (SELECT COUNT(*) AS m FROM edges),
 best AS (
   SELECT a.x,
@@ -1362,29 +1356,29 @@ best AS (
   CROSS JOIN m
   WHERE 2 * m.m > du.d * dn.d
   GROUP BY a.x),
-lab AS (
+lab AS MATERIALIZED (
   SELECT d.x, COALESCE(b.move_to, d.x) AS c
   FROM deg d LEFT JOIN best b ON b.x = d.x),
-adjc AS (
+adjc AS MATERIALIZED (
   SELECT a.x, a.n
   FROM adj a
   JOIN lab lx ON lx.x = a.x
   JOIN lab ln ON ln.x = a.n
   WHERE lx.c = ln.c),
 r0 AS (SELECT x, x AS r FROM lab),
-r1 AS (
+r1 AS MATERIALIZED (
   SELECT r0.x, LEAST(MIN(r0.r), COALESCE(MIN(rn.r), MIN(r0.r))) AS r
   FROM r0 LEFT JOIN adjc ON adjc.x = r0.x LEFT JOIN r0 rn ON rn.x = adjc.n
   GROUP BY r0.x),
-r2 AS (
+r2 AS MATERIALIZED (
   SELECT r1.x, LEAST(MIN(r1.r), COALESCE(MIN(rn.r), MIN(r1.r))) AS r
   FROM r1 LEFT JOIN adjc ON adjc.x = r1.x LEFT JOIN r1 rn ON rn.x = adjc.n
   GROUP BY r1.x),
-r3 AS (
+r3 AS MATERIALIZED (
   SELECT r2.x, LEAST(MIN(r2.r), COALESCE(MIN(rn.r), MIN(r2.r))) AS r
   FROM r2 LEFT JOIN adjc ON adjc.x = r2.x LEFT JOIN r2 rn ON rn.x = adjc.n
   GROUP BY r2.x),
-r4 AS (
+r4 AS MATERIALIZED (
   SELECT r3.x, LEAST(MIN(r3.r), COALESCE(MIN(rn.r), MIN(r3.r))) AS r
   FROM r3 LEFT JOIN adjc ON adjc.x = r3.x LEFT JOIN r3 rn ON rn.x = adjc.n
   GROUP BY r3.x)"""
@@ -1469,7 +1463,7 @@ def _leiden_labels(spark: SparkSession, sf_dir: str):
     m = e.agg(F.count(F.lit(1)).alias("m"))
     du = deg.select("x", F.col("d").alias("du"))
     dn = deg.select(F.col("x").alias("n"), F.col("d").alias("dn"))
-    shift = 1 << max(_n_nodes(spark) - 1, 1).bit_length()
+    shift = 1 << max(scale_conf(spark, "graph.n_nodes") - 1, 1).bit_length()
     best = (
         adj.join(du, "x")
         .join(dn, "n")

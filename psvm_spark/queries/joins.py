@@ -24,6 +24,7 @@ from psvm_spark.operators.asof import asof_join
 from psvm_spark.operators.rangejoin import band_join
 from psvm_spark.queries._util import dmoney, drate, dsum, one
 from psvm_spark.registry import query
+from psvm_spark.session import scoped_confs
 
 # --------------------------------------------------------------------------
 # B9 — broadcast hash join: fact x small dim.
@@ -901,7 +902,6 @@ GROUP BY l.l_orderkey
 def join_runtime_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
-    conf = spark.conf
     overrides = {
         # thresholds target cluster-sized relations; open the gate on
         # the fixture so the injection PATH (not the threshold) is
@@ -911,10 +911,7 @@ def join_runtime_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "1GB",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    prev = {k: conf.get(k, None) for k in overrides}
-    for k, v in overrides.items():
-        conf.set(k, v)
-    try:
+    with scoped_confs(spark, overrides):
         dim = o.filter(
             (F.col("o_orderpriority") == "1-URGENT") & (F.col("o_orderkey") % 19 == 0)
         ).select("o_orderkey")
@@ -929,12 +926,6 @@ def join_runtime_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         # memoized localCheckpoint pins both values and physical plan
         # before the confs are restored.
         return out.localCheckpoint(eager=True)
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                conf.unset(k)
-            else:
-                conf.set(k, v)
 
 
 # --------------------------------------------------------------------------
@@ -982,10 +973,6 @@ FROM j GROUP BY pri
 """,
 )
 def join_aqe_skew_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # build FIRST: load_table applies the session invariants, which
-    # re-enable partition coalescing — overrides must land after
-    joined = build_skew_join(spark, sf_dir)
-    conf = spark.conf
     overrides = {
         # skew detection targets 256MB+ partitions; open the gate so the
         # SPLIT PATH (not the threshold) is under test on the fixture
@@ -999,17 +986,8 @@ def join_aqe_skew_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.adaptive.forceOptimizeSkewedJoin": "true",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    prev = {k: conf.get(k, None) for k in overrides}
-    for k, v in overrides.items():
-        conf.set(k, v)
-    try:
-        pinned = joined.localCheckpoint(eager=True)
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                conf.unset(k)
-            else:
-                conf.set(k, v)
+    with scoped_confs(spark, overrides):
+        pinned = build_skew_join(spark, sf_dir).localCheckpoint(eager=True)
     return pinned.groupBy("pri").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("price").cast("double").alias("revenue"),

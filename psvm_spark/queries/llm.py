@@ -30,21 +30,17 @@ from psvm_spark.queries._util import (
     local_df,
 )
 from psvm_spark.registry import query
+from psvm_spark.session import SCALE_CONFS, scale_conf
 
 
-def _probe_mod(spark: SparkSession) -> int:
-    """Probe-set modulus for the similarity queries (default 50).
-
-    The probe set is a SERVING-WORKLOAD parameter, not a corpus
-    property: the oracles pin ``vec_id % 50 = 0`` and the driver never
-    overrides the conf, so parity is unaffected.  The scale harness
-    (scripts/measure_scale.py) raises ``psvm.sim.probe_modulo`` by the
-    amplification factor to hold probe COUNT constant while the corpus
-    grows — the realistic "bigger index, same query rate" question;
-    growing probes WITH the corpus would measure workload growth
-    (probes x corpus), not engine scaling.
-    """
-    return int(spark.conf.get("psvm.sim.probe_modulo", "50"))
+# Probe-set modulus of the similarity queries.  The probe set is a
+# serving-workload parameter, not a corpus property: the oracles pin
+# ``vec_id % 50 = 0``.  The scale harness raises the ``sim.probe_modulo``
+# scale conf by the amplification factor to hold the probe count
+# constant while the corpus grows, the "bigger index, same query rate"
+# question; growing probes with the corpus would measure workload growth
+# (probes x corpus), not engine scaling.
+_PROBE_MOD = SCALE_CONFS["sim.probe_modulo"]
 
 
 # --------------------------------------------------------------------------
@@ -568,7 +564,7 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sim_topk_cosine",
     oracle=f"""
 WITH probes AS (
-  SELECT vec_id AS i, embedding AS vp FROM embeddings WHERE vec_id % 50 = 0
+  SELECT vec_id AS i, embedding AS vp FROM embeddings WHERE vec_id % {_PROBE_MOD} = 0
 ), scored AS (
   SELECT p.i, e.vec_id AS j,
          round({K.sql_dot('p.vp', 'e.embedding')}
@@ -599,7 +595,7 @@ def sim_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # inlines them — the value is identical, but per-pair recomputation
     # would triple the higher-order-function work on n_probes x n rows).
     e = load_table(spark, sf_dir, "embeddings")
-    probes = e.filter(F.col("vec_id") % _probe_mod(spark) == 0).select(
+    probes = e.filter(F.col("vec_id") % scale_conf(spark, "sim.probe_modulo") == 0).select(
         F.col("vec_id").alias("i"),
         F.col("embedding").alias("vp"),
         F.sqrt(K.dot(F.col("embedding"), F.col("embedding"))).alias("np"),
@@ -707,7 +703,7 @@ cand AS (
   FROM banded p
   JOIN banded c ON p.tbl = c.tbl AND p.bucket = c.bucket
                AND c.vec_id <> p.vec_id
-  WHERE p.vec_id % 50 = 0
+  WHERE p.vec_id % {_PROBE_MOD} = 0
 ),
 scored AS (
   SELECT cd.i, cd.j,
@@ -742,7 +738,7 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    probes_b = banded.filter(F.col("vec_id") % _probe_mod(spark) == 0).select(
+    probes_b = banded.filter(F.col("vec_id") % scale_conf(spark, "sim.probe_modulo") == 0).select(
         F.col("vec_id").alias("i"), "tbl", "bucket"
     )
     cand = (
@@ -751,7 +747,7 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("i", F.col("vec_id").alias("j"))
         .distinct()
     )
-    pv = e.filter(F.col("vec_id") % _probe_mod(spark) == 0).select(
+    pv = e.filter(F.col("vec_id") % scale_conf(spark, "sim.probe_modulo") == 0).select(
         F.col("vec_id").alias("i"), F.col("embedding").alias("vp")
     )
     cv = e.select(F.col("vec_id").alias("j"), F.col("embedding").alias("ve"))
@@ -810,8 +806,8 @@ assign AS (
   FROM embeddings e CROSS JOIN cent_arr c
 ),
 clusters AS (SELECT vec_id, embedding, clab FROM assign WHERE rk = 1),
-probe_c AS (SELECT vec_id AS i, clab FROM assign WHERE vec_id % 50 = 0 AND rk <= {_IVF_NPROBE}),
-probes AS (SELECT vec_id AS i, embedding AS vp FROM embeddings WHERE vec_id % 50 = 0),
+probe_c AS (SELECT vec_id AS i, clab FROM assign WHERE vec_id % {_PROBE_MOD} = 0 AND rk <= {_IVF_NPROBE}),
+probes AS (SELECT vec_id AS i, embedding AS vp FROM embeddings WHERE vec_id % {_PROBE_MOD} = 0),
 scored AS (
   SELECT pc.i, c.vec_id AS j,
          round({K.sql_dot('p.vp', 'c.embedding')}
@@ -865,7 +861,7 @@ def sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.element_at(ranked_cl, 1)["clab"].alias("cl_j"),
     )
     probe_c = (
-        e.filter(F.col("vec_id") % _probe_mod(spark) == 0)
+        e.filter(F.col("vec_id") % scale_conf(spark, "sim.probe_modulo") == 0)
         .select(
             F.col("vec_id").alias("i"),
             F.col("embedding").alias("vp"),
@@ -1919,12 +1915,12 @@ WITH {_kml_cte_prefix(k=_IVFK_K, iters=_IVFK_ITERS)},
 probe_nd AS (
   SELECT vec_id, cluster,
          ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cluster) AS rk
-  FROM af_d WHERE vec_id % 50 = 0),
+  FROM af_d WHERE vec_id % {_PROBE_MOD} = 0),
 probe_c AS (SELECT vec_id AS i, cluster FROM probe_nd WHERE rk <= {_IVFK_NPROBE}),
 corpus AS (
   SELECT a.vec_id AS j, e.embedding AS ve, a.cluster
   FROM af a JOIN embeddings e ON a.vec_id = e.vec_id),
-probes AS (SELECT vec_id AS i, embedding AS vp FROM embeddings WHERE vec_id % 50 = 0),
+probes AS (SELECT vec_id AS i, embedding AS vp FROM embeddings WHERE vec_id % {_PROBE_MOD} = 0),
 scored AS (
   SELECT pc.i, c.j,
          round({K.sql_dot('p.vp', 'c.ve')}
@@ -1969,7 +1965,7 @@ def sim_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{_IVFK_NPROBE})"
     )
     probe_c = (
-        qv.filter(F.col("vec_id") % _probe_mod(spark) == 0)
+        qv.filter(F.col("vec_id") % scale_conf(spark, "sim.probe_modulo") == 0)
         .withColumn("cents", lit)
         .withColumn("d", F.expr(d_expr))
         .select(
@@ -1978,7 +1974,7 @@ def sim_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("i", F.col("cl_raw").cast("int").alias("cluster"))
     )
-    probes = e.filter(F.col("vec_id") % _probe_mod(spark) == 0).select(
+    probes = e.filter(F.col("vec_id") % scale_conf(spark, "sim.probe_modulo") == 0).select(
         F.col("vec_id").alias("i"),
         F.col("embedding").alias("vp"),
         F.sqrt(K.dot(F.col("embedding"), F.col("embedding"))).alias("np"),
@@ -3353,7 +3349,7 @@ lut AS (
   SELECT p.vec_id AS i, c.s, c.c,
          CAST(round({K.sql_sq_l2('p.sv', 'c.cv')}, 9) AS DECIMAL(18,9)) AS dt
   FROM subs p JOIN cents c ON p.s = c.s
-  WHERE p.vec_id % 50 = 0),
+  WHERE p.vec_id % {_PROBE_MOD} = 0),
 scored AS (
   SELECT l.i, k.vec_id AS j, SUM(l.dt) AS adc
   FROM codes k JOIN lut l ON k.s = l.s AND k.c = l.c
@@ -3405,7 +3401,7 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes = dist.groupBy("vec_id", "s").agg(
         F.min_by("c", F.struct("d", "c")).alias("c")
     )
-    lut = dist.filter(F.col("vec_id") % _probe_mod(spark) == 0).select(
+    lut = dist.filter(F.col("vec_id") % scale_conf(spark, "sim.probe_modulo") == 0).select(
         F.col("vec_id").alias("i"),
         "s",
         "c",
@@ -3908,14 +3904,14 @@ def ml_lift_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sim_binary_hamming_topk",
-    oracle="""
+    oracle=f"""
 WITH words AS (
   SELECT vec_id,
          CAST(list_sum([CASE WHEN embedding[p + 1] > 0
                              THEN (CAST(1 AS BIGINT) << p) ELSE 0 END
                         FOR p IN generate_series(0, 62)]) AS BIGINT) AS w
   FROM embeddings),
-probes AS (SELECT vec_id AS i, w AS pw FROM words WHERE vec_id % 50 = 0),
+probes AS (SELECT vec_id AS i, w AS pw FROM words WHERE vec_id % {_PROBE_MOD} = 0),
 scored AS (
   SELECT p.i, c.vec_id AS j, bit_count(xor(p.pw, c.w)) AS hamming
   FROM probes p CROSS JOIN words c WHERE c.vec_id <> p.i),
@@ -3939,7 +3935,7 @@ def sim_binary_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             " THEN shiftleft(cast(1 as bigint), p) ELSE cast(0 as bigint) END)"
         ).alias("w"),
     )
-    probes = words.filter(F.col("vec_id") % _probe_mod(spark) == 0).select(
+    probes = words.filter(F.col("vec_id") % scale_conf(spark, "sim.probe_modulo") == 0).select(
         F.col("vec_id").alias("i"), F.col("w").alias("pw")
     )
     corpus = fan_out(words, spark).select(
@@ -4753,7 +4749,7 @@ WITH words AS (
                         FOR p IN generate_series(0, 62)]) AS BIGINT) AS w
   FROM embeddings),
 probes AS (
-  SELECT vec_id AS i, embedding AS pe, w AS pw FROM words WHERE vec_id % 50 = 0),
+  SELECT vec_id AS i, embedding AS pe, w AS pw FROM words WHERE vec_id % {_PROBE_MOD} = 0),
 stage1 AS (
   SELECT i, j, pe, ce FROM (
     SELECT p.i, c.vec_id AS j, p.pe, c.embedding AS ce,
@@ -4785,7 +4781,7 @@ def sim_two_stage_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             " THEN shiftleft(cast(1 as bigint), p) ELSE cast(0 as bigint) END)"
         ).alias("w"),
     )
-    probes = words.filter(F.col("vec_id") % _probe_mod(spark) == 0).select(
+    probes = words.filter(F.col("vec_id") % scale_conf(spark, "sim.probe_modulo") == 0).select(
         F.col("vec_id").alias("i"),
         F.col("embedding").alias("pe"),
         F.col("w").alias("pw"),
@@ -5302,7 +5298,7 @@ _NEG_POOL = _NEG_K + 10  # hash-partial depth: k + max exclusions
     "sample_negatives",
     oracle=f"""
 WITH probes AS (
-  SELECT vec_id AS i, embedding AS vp FROM embeddings WHERE vec_id % 50 = 0),
+  SELECT vec_id AS i, embedding AS vp FROM embeddings WHERE vec_id % {_PROBE_MOD} = 0),
 scored AS (
   SELECT p.i, e.vec_id AS j,
          round({K.sql_dot('p.vp', 'e.embedding')}
@@ -5325,7 +5321,7 @@ FROM negs WHERE rh <= {_NEG_K}
 )
 def sample_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
-    probes = e.filter(F.col("vec_id") % _probe_mod(spark) == 0).select(
+    probes = e.filter(F.col("vec_id") % scale_conf(spark, "sim.probe_modulo") == 0).select(
         F.col("vec_id").alias("i"),
         F.col("embedding").alias("vp"),
         F.sqrt(K.dot(F.col("embedding"), F.col("embedding"))).alias("np"),
@@ -6006,7 +6002,7 @@ _MRL_DIMS = 16
     "sim_matryoshka_topk",
     oracle=f"""
 WITH probes AS (
-  SELECT vec_id AS i, embedding AS vp FROM embeddings WHERE vec_id % 50 = 0
+  SELECT vec_id AS i, embedding AS vp FROM embeddings WHERE vec_id % {_PROBE_MOD} = 0
 ),
 scored AS (
   SELECT p.i, e.vec_id AS j,
@@ -6036,7 +6032,7 @@ GROUP BY f.i
 )
 def sim_matryoshka_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
-    probes = e.filter(F.col("vec_id") % _probe_mod(spark) == 0).select(
+    probes = e.filter(F.col("vec_id") % scale_conf(spark, "sim.probe_modulo") == 0).select(
         F.col("vec_id").alias("i"), F.col("embedding").alias("vp")
     )
     corpus = fan_out(e, spark).select(
@@ -6351,7 +6347,7 @@ WITH words AS (
                         FOR p IN generate_series(0, 62)]) AS BIGINT) AS w
   FROM embeddings),
 probes AS (SELECT vec_id AS i, embedding AS vp, nrm AS pn, w AS pw
-           FROM words WHERE vec_id % 50 = 0),
+           FROM words WHERE vec_id % {_PROBE_MOD} = 0),
 scored AS (
   SELECT p.i, c.vec_id AS j,
          round({K.sql_dot('p.vp', 'c.embedding')} / (p.pn * c.nrm), 9) AS cosine,
@@ -6388,7 +6384,7 @@ def sim_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             " THEN shiftleft(cast(1 as bigint), p) ELSE cast(0 as bigint) END)"
         ).alias("w"),
     )
-    probes = words.filter(F.col("vec_id") % _probe_mod(spark) == 0).select(
+    probes = words.filter(F.col("vec_id") % scale_conf(spark, "sim.probe_modulo") == 0).select(
         F.col("vec_id").alias("i"),
         F.col("embedding").alias("vp"),
         F.col("nrm").alias("pn"),
@@ -7377,7 +7373,7 @@ WITH qv AS (
   FROM embeddings
 ),
 pr AS (SELECT vec_id AS pid, label AS plabel, q AS pq FROM qv
-       WHERE vec_id % 100 = 7),
+       WHERE vec_id % {2 * _PROBE_MOD} = 7),
 dots AS (
   SELECT p.pid, p.plabel, c.vec_id AS cid, c.label AS clabel,
          CAST(list_sum(list_transform(range(1, len(c.q)+1),
@@ -7421,10 +7417,10 @@ def ml_retrieval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             "x -> CAST(floor(CAST(x AS DOUBLE) * 1000.0 + 0.5) AS BIGINT))"
         ).alias("q"),
     )
-    # serving-workload probe convention (_probe_mod): oracle pins
+    # serving-workload probe convention (sim.probe_modulo): oracle pins
     # % 100 = 7; the scale harness raises the conf so probe count
     # stays constant while the corpus grows (see ml_knn_classify)
-    pr = e.filter(F.col("vec_id") % (2 * _probe_mod(spark)) == 7).select(
+    pr = e.filter(F.col("vec_id") % (2 * scale_conf(spark, "sim.probe_modulo")) == 7).select(
         F.col("vec_id").alias("pid"),
         F.col("label").alias("plabel"),
         F.col("q").alias("pq"),
@@ -7524,7 +7520,7 @@ WITH RECURSIVE qv AS (
            x -> CAST(floor(CAST(x AS DOUBLE) * 1000.0 + 0.5) AS BIGINT)) AS q
   FROM embeddings
 ),
-pr AS (SELECT vec_id AS pid, q AS pq FROM qv WHERE vec_id % 100 = 7),
+pr AS (SELECT vec_id AS pid, q AS pq FROM qv WHERE vec_id % {2 * _PROBE_MOD} = 7),
 dots AS (
   SELECT p.pid, c.vec_id AS cid, c.q AS cq,
          CAST(list_sum(list_transform(range(1, len(c.q)+1),
@@ -7582,9 +7578,9 @@ def sim_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             "x -> CAST(floor(CAST(x AS DOUBLE) * 1000.0 + 0.5) AS BIGINT))"
         ).alias("q"),
     )
-    # serving-workload probe convention (_probe_mod, see ml_knn_classify)
+    # serving-workload probe convention (sim.probe_modulo, see ml_knn_classify)
     pr = e.select(F.col("vec_id").alias("pid"), F.col("q").alias("pq")).filter(
-        F.col("pid") % (2 * _probe_mod(spark)) == 7
+        F.col("pid") % (2 * scale_conf(spark, "sim.probe_modulo")) == 7
     )
     dots = (
         F.broadcast(pr)
@@ -7915,7 +7911,7 @@ codes AS (
   WHERE rk = 1),
 probe_c AS (
   SELECT a.vec_id AS i, a.clab, a.centroid
-  FROM assign a WHERE a.vec_id % 50 = 0 AND a.rk <= {_IVFPQ_NPROBE}),
+  FROM assign a WHERE a.vec_id % {_PROBE_MOD} = 0 AND a.rk <= {_IVFPQ_NPROBE}),
 pres AS (
   SELECT pc.i, pc.clab, g.s,
          list_slice(list_transform(list_zip(e.embedding, pc.centroid),
@@ -8007,7 +8003,7 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "clab", "s", "c")
     )
     probe_c = (
-        assign.filter(F.col("vec_id") % _probe_mod(spark) == 0)
+        assign.filter(F.col("vec_id") % scale_conf(spark, "sim.probe_modulo") == 0)
         .join(F.broadcast(cent), "clab")
         .select(F.col("vec_id").alias("i"), "clab", "centroid")
     )
@@ -9097,7 +9093,7 @@ WITH qv AS (
   FROM embeddings
 ),
 pr AS (SELECT vec_id AS pid, label AS plabel, q AS pq FROM qv
-       WHERE vec_id % 100 = 3),
+       WHERE vec_id % {2 * _PROBE_MOD} = 3),
 dots AS (
   SELECT p.pid, p.plabel, c.vec_id AS cid, c.label AS clabel,
          CAST(list_sum(list_transform(range(1, len(c.q)+1),
@@ -9136,12 +9132,12 @@ def ml_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
             "x -> CAST(floor(CAST(x AS DOUBLE) * 1000.0 + 0.5) AS BIGINT))"
         ).alias("q"),
     )
-    # probe set follows the serving-workload convention (_probe_mod):
+    # probe set follows the serving-workload convention (sim.probe_modulo):
     # the oracle pins % 100 = 3 (default modulo 50 x 2) and the scale
     # harness raises the conf so probe COUNT stays constant while the
     # corpus grows — without this the probe x corpus broadcast join
     # measured 207x at 20x amplification (workload growth, not engine)
-    pr = e.filter(F.col("vec_id") % (2 * _probe_mod(spark)) == 3).select(
+    pr = e.filter(F.col("vec_id") % (2 * scale_conf(spark, "sim.probe_modulo")) == 3).select(
         F.col("vec_id").alias("pid"),
         F.col("label").alias("plabel"),
         F.col("q").alias("pq"),
@@ -10719,7 +10715,7 @@ def text_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ground set by definition, so the ground set is the BUDGETED unit —
 # a fixed-size QC panel, not a corpus fraction: the scale harness
 # raises the modulus by the amplification factor to hold panel size
-# constant (the _probe_mod serving-workload convention; without it
+# constant (the sim.probe_modulo serving-workload convention; without it
 # the pair matrix grows quadratically — measured 44x at 20x before
 # the conf was added).
 # Exactness: squared-L2 distances are left-to-right folds (bit-exact
@@ -10729,13 +10725,14 @@ def text_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _LOF_K = 3
 _LOF_TOPK = 20
+_LOF_MOD = SCALE_CONFS["lof.sample_modulo"]
 
 
 @query(
     "ml_lof_outlier",
     oracle=f"""
 WITH s AS (
-  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 10 = 0),
+  SELECT vec_id, embedding FROM embeddings WHERE vec_id % {_LOF_MOD} = 0),
 pd AS (
   SELECT a.vec_id AS i, b.vec_id AS j,
          round({K.sql_sq_l2('a.embedding', 'b.embedding')}, 9) AS d2
@@ -10771,7 +10768,7 @@ LIMIT {_LOF_TOPK}
 )
 def ml_lof_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
-    mod = int(spark.conf.get("psvm.lof.sample_modulo", "10"))
+    mod = scale_conf(spark, "lof.sample_modulo")
     s = e.filter(F.col("vec_id") % mod == 0).select("vec_id", "embedding")
     a = s.select(F.col("vec_id").alias("i"), F.col("embedding").alias("ea"))
     b = s.select(F.col("vec_id").alias("j"), F.col("embedding").alias("eb"))
@@ -11090,7 +11087,7 @@ WITH q AS (
                 floor(CAST(v AS DOUBLE) * 127e0 + 5e-1))) AS BIGINT)) AS qv
   FROM embeddings),
 probes AS (
-  SELECT vec_id AS i, embedding AS vp, qv AS qp FROM q WHERE vec_id % 50 = 0),
+  SELECT vec_id AS i, embedding AS vp, qv AS qp FROM q WHERE vec_id % {_PROBE_MOD} = 0),
 cand AS (
   SELECT p.i, e.vec_id AS j, p.vp, e.embedding AS ve,
          list_aggregate(list_transform(list_zip(p.qp, e.qv),
@@ -11129,7 +11126,7 @@ def sim_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     q = e.select("vec_id", "embedding", sq8(F.col("embedding")).alias("qv"))
-    probes = q.filter(F.col("vec_id") % _probe_mod(spark) == 0).select(
+    probes = q.filter(F.col("vec_id") % scale_conf(spark, "sim.probe_modulo") == 0).select(
         F.col("vec_id").alias("i"),
         F.col("embedding").alias("vp"),
         F.col("qv").alias("qp"),
@@ -11824,10 +11821,9 @@ GROUP BY q.n_cal, q.qhat
 )
 def ml_conformal_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from psvm_spark.queries.ml import _TS_RES as _CONF_TS_RES
-    from psvm_spark.queries.ml import _sv_mods as _conf_sv_mods
 
     sv, _ = _cal_sv_test(spark, sf_dir)
-    _, ts_mod = _conf_sv_mods(spark)
+    ts_mod = scale_conf(spark, "svm.test_modulo")
     e = load_table(spark, sf_dir, "embeddings")
     panel = e.filter(
         (F.col("vec_id") % ts_mod).isin(_CONF_TS_RES, _CONF_CAL_RES)

@@ -25,6 +25,7 @@ from psvm_spark.catalog import load_table
 from psvm_spark.ml import kernels as K
 from psvm_spark.ml.icf import icf_pivots
 from psvm_spark.registry import query
+from psvm_spark.session import SCALE_CONFS, scale_conf
 from psvm_spark.queries._util import (
     lit_long_matrix,
     local_df,
@@ -119,32 +120,19 @@ def kernel_laplacian(spark: SparkSession, sf_dir: str) -> DataFrame:
 # fully SQL-expressible — exactly the reference's
 # f(x) = sum_i alpha_i y_i K(s_i, x) + b   [psvm:model.cc].
 
-_SV_MOD, _SV_RES = 20, 0  # support-vector shard (conf default)
-_TS_MOD, _TS_RES = 20, 1  # test shard (conf default)
-
-
-def _sv_mods(spark: SparkSession) -> tuple[int, int]:
-    """Serving moduli for the SV "model" and test-panel slices.
-
-    In a real deployment the support-vector set is a FIXED-SIZE model
-    artifact and the eval set a fixed panel — neither grows with the
-    corpus.  ``vec_id % 20`` slices model that on the gate fixtures,
-    but at amplification a plain modulus makes the SV x test pair
-    volume grow quadratically with the corpus (verdict r9 item 2 — the
-    ``ml_brier_decomposition`` 21x wave-4 record).  The scale harness
-    raises both confs by the amp factor so each slice stays base-sized
-    (the ``psvm.sim.probe_modulo`` / ``psvm.lof.sample_modulo``
-    precedent); all oracles pin the defaults, and ``compare_query``
-    refuses to run a parity check with either conf raised.
-    """
-    return (
-        int(spark.conf.get("psvm.svm.sv_modulo", str(_SV_MOD))),
-        int(spark.conf.get("psvm.svm.test_modulo", str(_TS_MOD))),
-    )
+# In a real deployment the support-vector set is a fixed-size model
+# artifact and the eval set a fixed panel; neither grows with the
+# corpus.  ``vec_id % 20`` slices model that on the gate fixtures, but
+# at amplification a plain modulus makes the SV x test pair volume grow
+# quadratically with the corpus.  The scale harness raises the
+# ``svm.sv_modulo`` / ``svm.test_modulo`` scale confs by the amp factor
+# so each slice stays base-sized; the oracles pin the defaults.
+_SV_MOD, _SV_RES = SCALE_CONFS["svm.sv_modulo"], 0  # support-vector shard
+_TS_MOD, _TS_RES = SCALE_CONFS["svm.test_modulo"], 1  # test shard
 
 
 def _sv_test(spark: SparkSession, sf_dir: str):
-    sv_mod, ts_mod = _sv_mods(spark)
+    sv_mod, ts_mod = scale_conf(spark, "svm.sv_modulo"), scale_conf(spark, "svm.test_modulo")
     e = load_table(spark, sf_dir, "embeddings")
     sv = e.filter(F.col("vec_id") % sv_mod == _SV_RES).select(
         F.col("vec_id").alias("sv_id"),

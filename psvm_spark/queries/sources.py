@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from psvm_spark.catalog import load_table
 from psvm_spark.registry import query
 from psvm_spark.queries._util import local_df, scratch_dir
+from psvm_spark.session import scoped_confs
 
 # --------------------------------------------------------------------------
 # B2 — CSV and JSON scans with explicit schemas.  Side files are derived
@@ -504,11 +505,11 @@ FROM orders
 """,
 )
 def scan_aggregate_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prev_v1 = spark.conf.get("spark.sql.sources.useV1SourceList")
-    prev_pd = spark.conf.get("spark.sql.parquet.aggregatePushDown", "false")
-    spark.conf.set("spark.sql.sources.useV1SourceList", "")
-    spark.conf.set("spark.sql.parquet.aggregatePushDown", "true")
-    try:
+    pushdown = {
+        "spark.sql.sources.useV1SourceList": "",
+        "spark.sql.parquet.aggregatePushDown": "true",
+    }
+    with scoped_confs(spark, pushdown):
         o = spark.read.parquet(f"{sf_dir.rstrip('/')}/orders.parquet")
         # footer-servable shapes only: COUNT(*) / MIN / MAX on plain
         # columns, no filter, no group-by
@@ -520,9 +521,6 @@ def scan_aggregate_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("o_orderkey").alias("max_key"),
         )
         row = agg.collect()[0]
-    finally:
-        spark.conf.set("spark.sql.sources.useV1SourceList", prev_v1)
-        spark.conf.set("spark.sql.parquet.aggregatePushDown", prev_pd)
     import decimal
 
     cent = lambda v: int(  # noqa: E731
@@ -655,9 +653,7 @@ def scan_pyds_filter_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     register(spark)
     out = scratch_dir("psvm_pyds_push_") + "/segments"
     write_segmented_csv(spark, sf_dir, out)
-    prev = spark.conf.get("spark.sql.python.filterPushdown.enabled", None)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    try:
+    with scoped_confs(spark, {"spark.sql.python.filterPushdown.enabled": "true"}):
         df = (
             spark.read.format("segmented_csv")
             .option("path", out)
@@ -673,8 +669,3 @@ def scan_pyds_filter_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # pin plan + values while the pushdown conf is on
         return agg.localCheckpoint(eager=True)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.python.filterPushdown.enabled")
-        else:
-            spark.conf.set("spark.sql.python.filterPushdown.enabled", prev)

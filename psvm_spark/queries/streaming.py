@@ -15,10 +15,10 @@ from pyspark.sql import functions as F
 
 from psvm_spark.catalog import load_table
 from psvm_spark.registry import query
+from psvm_spark.session import scoped_confs
 from psvm_spark.streaming.jobs import (
     run_stream,
     run_to_table,
-    scoped_confs,
     stream_documents,
     stream_events,
 )

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from psvm_spark.catalog import load_events_range, load_table
 from psvm_spark.registry import query
 from psvm_spark.queries._util import local_df, scratch_dir
+from psvm_spark.session import scoped_confs
 
 # --------------------------------------------------------------------------
 # Incremental rollup refresh: the daily (day x event_type) rollup for
@@ -1112,12 +1113,8 @@ def sink_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
         "p",
         (F.col("p") + F.lit("10.00").cast("decimal(12,2)")).cast("decimal(12,2)"),
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    with scoped_confs(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         jan.write.mode("overwrite").partitionBy("mth").parquet(out)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     back = spark.read.parquet(out)
     return back.groupBy("mth").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),

@@ -1,12 +1,20 @@
-"""SparkSession factory + session-level invariants.
+"""SparkSession factory and the one owner of session confs.
 
-The driver hands us an already-built session for ``entry``/``queries``;
-tests and bench build their own via :func:`get_spark`.  Either way,
-:func:`ensure_session_invariants` pins the *runtime* confs every query
-relies on for oracle parity (UTC timestamps — DuckDB timestamps are
-UTC-naive) and for local-mode performance (AQE on, sane shuffle
-parallelism).  Static confs (driver memory, master) can only be set at
-build time and are therefore only applied in :func:`get_spark`.
+Three rules hold for every conf the engine touches:
+
+- :func:`ensure_session_invariants` applies the *runtime* confs every
+  query relies on for oracle parity (UTC timestamps — DuckDB timestamps
+  are UTC-naive) and for local-mode performance (AQE on, sane shuffle
+  parallelism).  It runs where a session enters the engine, not inside
+  queries: in :func:`get_spark`, in the driver contract
+  (``__spark_entry__.entry`` and its ``queries()`` wrapper) and in
+  ``oracle.compare_query``.  Static confs (driver memory, master) can
+  only be set at build time and are therefore only applied in
+  :func:`get_spark`.
+- A query that needs other values for a while sets them with
+  :func:`scoped_confs`, which leaves the session as it found it.
+- The scale confs (``psvm.<name>`` in :data:`SCALE_CONFS`) are declared
+  once, with their defaults, and read through :func:`scale_conf`.
 
 The JVM that :func:`get_spark` launches starts from a class-data-sharing
 archive (JDK dynamic AppCDS) kept in ``<checkout>/.jvm_cache/``; see
@@ -27,6 +35,7 @@ import subprocess
 import sys
 import tempfile
 import time
+from contextlib import contextmanager
 from pathlib import Path
 
 from pyspark import SparkContext
@@ -50,6 +59,21 @@ _RUNTIME_CONFS = {
     # read as long ns and convert to a us timestamp in the catalog (DuckDB
     # truncates ns->us on read too, so both engines agree — FIXTURES.md).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
+
+# Scale confs, ``psvm.<name>`` -> default.  Each sizes a workload
+# parameter derived from the fixture: a probe or model-slice modulus, a
+# hash-derived id space, a grid side.  Every oracle pins the default.
+# The scale harness (scripts/measure_scale.py) raises them with the
+# amplification factor so an amplified corpus keeps the base workload's
+# shape, and oracle.compare_query refuses to run with any of them changed.
+SCALE_CONFS = {
+    "sim.probe_modulo": 50,  # similarity probe set: vec_id % m = 0
+    "lof.sample_modulo": 10,  # LOF sample: vec_id % m = 0
+    "svm.sv_modulo": 20,  # SVM support-vector model slice
+    "svm.test_modulo": 20,  # SVM test panel
+    "graph.n_nodes": 4000,  # vertex id space of the hash-derived graph
+    "geo.dbscan_grid": 24,  # side of the DBSCAN coordinate grid
 }
 
 # The conditions PySpark raises when a conf cannot be set on a live
@@ -140,6 +164,30 @@ def ensure_session_invariants(spark: SparkSession) -> SparkSession:
     if spark.conf.get("spark.sql.shuffle.partitions") == "200":
         _set_conf(spark, "spark.sql.shuffle.partitions", str(_cpus()))
     return spark
+
+
+@contextmanager
+def scoped_confs(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` on the session for the body only: afterwards a key
+    that was set has its old value again and one that was unset is
+    unset again, also when the body raises.  Plans read confs when they
+    run, so an action that must see ``confs`` runs inside the body."""
+    saved = {key: spark.conf.get(key, None) for key in confs}
+    try:
+        for key, value in confs.items():
+            spark.conf.set(key, value)
+        yield
+    finally:
+        for key, prev in saved.items():
+            if prev is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, prev)
+
+
+def scale_conf(spark: SparkSession, name: str) -> int:
+    """Scale conf ``psvm.<name>`` as set on ``spark``, else its default."""
+    return int(spark.conf.get(f"psvm.{name}", str(SCALE_CONFS[name])))
 
 
 def _builder(app_name: str, n: int, jvm_opts: str) -> SparkSession.Builder:

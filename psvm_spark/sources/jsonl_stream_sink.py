@@ -129,10 +129,4 @@ def committed_files(path: str) -> list[str]:
 
 
 def register(spark) -> None:
-    """Idempotent registration (libsvm_text.register contract)."""
-    try:
-        spark.dataSource.register(make_datasource())
-    except Exception as exc:
-        msg = str(exc).upper()
-        if "ALREADY" not in msg and "EXISTS" not in msg:
-            raise
+    spark.dataSource.register(make_datasource())

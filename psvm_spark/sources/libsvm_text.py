@@ -174,14 +174,4 @@ def make_datasource():
 
 
 def register(spark) -> None:
-    """Idempotent registration of the source with a session.
-
-    Only the duplicate-registration error is swallowed; a genuine
-    failure (API mismatch, pickling error) propagates instead of
-    resurfacing later as DATA_SOURCE_NOT_FOUND at read time."""
-    try:
-        spark.dataSource.register(make_datasource())
-    except Exception as exc:
-        msg = str(exc).upper()
-        if "ALREADY" not in msg and "EXISTS" not in msg:
-            raise
+    spark.dataSource.register(make_datasource())

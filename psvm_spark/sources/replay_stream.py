@@ -100,12 +100,4 @@ def make_replay_source():
 
 
 def register(spark) -> None:
-    """Idempotent registration; only duplicate-registration is swallowed
-    (a real failure propagates instead of becoming DATA_SOURCE_NOT_FOUND
-    later at readStream time)."""
-    try:
-        spark.dataSource.register(make_replay_source())
-    except Exception as exc:
-        msg = str(exc).upper()
-        if "ALREADY" not in msg and "EXISTS" not in msg:
-            raise
+    spark.dataSource.register(make_replay_source())

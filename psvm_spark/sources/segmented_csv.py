@@ -123,10 +123,4 @@ def make_datasource():
 
 
 def register(spark) -> None:
-    """Idempotent registration (same contract as libsvm_text.register)."""
-    try:
-        spark.dataSource.register(make_datasource())
-    except Exception as exc:
-        msg = str(exc).upper()
-        if "ALREADY" not in msg and "EXISTS" not in msg:
-            raise
+    spark.dataSource.register(make_datasource())

@@ -26,7 +26,6 @@ by the grouping key across executors.
 from __future__ import annotations
 
 import itertools
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,7 +33,7 @@ from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from psvm_spark.catalog import normalize_event_ts
 from psvm_spark.queries._util import scratch_dir
-from psvm_spark.session import ensure_session_invariants
+from psvm_spark.session import scoped_confs
 
 # A stateful operator creates one state-store instance per shuffle
 # partition, fixed at the query's first run, and store instances dominate
@@ -62,24 +61,6 @@ def _raw_schema(spark: SparkSession, path: str):
     return _schema_cache[key]
 
 
-@contextmanager
-def scoped_confs(spark: SparkSession, confs: dict[str, str]):
-    """Set ``confs`` on the session for the body only: afterwards a key
-    that was set has its old value again and one that was unset is
-    unset again, also when the body raises."""
-    saved = {key: spark.conf.get(key, None) for key in confs}
-    try:
-        for key, value in confs.items():
-            spark.conf.set(key, value)
-        yield
-    finally:
-        for key, prev in saved.items():
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
-
-
 def _read_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """``<sf_dir>/<table>.parquet`` as a stream, in either parquet layout.
 
@@ -93,7 +74,6 @@ def _read_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """
     import os
 
-    ensure_session_invariants(spark)
     root = sf_dir.rstrip("/")
     path = f"{root}/{table}.parquet"
     reader = spark.readStream.schema(_raw_schema(spark, path))

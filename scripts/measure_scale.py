@@ -71,7 +71,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 from pyspark.sql import functions as F
 
 from psvm_spark import registry
-from psvm_spark.session import get_spark
+from psvm_spark.session import SCALE_CONFS, get_spark, scoped_confs
 
 AMP = 20
 AMP_QUAD = 4
@@ -288,11 +288,8 @@ def main() -> None:
     build_graph_amplified(spark, base, out_graph, AMP)
     for name in GRAPH_QUERIES:
         b = timed(name, base)
-        spark.conf.set("psvm.graph.n_nodes", str(4000 * AMP))
-        try:
+        with scoped_confs(spark, {"psvm.graph.n_nodes": str(SCALE_CONFS["graph.n_nodes"] * AMP)}):
             a = timed(name, out_graph)
-        finally:
-            spark.conf.unset("psvm.graph.n_nodes")
         res["queries"][name] = {
             "base": b, "amp20_scaled_vertices": a, "ratio": round(a / b, 1),
             "factor": AMP,
@@ -304,11 +301,10 @@ def main() -> None:
         )
     for name in FIXED_PROBE_QUERIES:
         b = timed(name, base)
-        spark.conf.set("psvm.sim.probe_modulo", str(50 * AMP))
-        try:
+        with scoped_confs(
+            spark, {"psvm.sim.probe_modulo": str(SCALE_CONFS["sim.probe_modulo"] * AMP)}
+        ):
             a = timed(name, out20)
-        finally:
-            spark.conf.unset("psvm.sim.probe_modulo")
         res["queries"][name] = {
             "base": b, "amp20_fixed_probes": a, "ratio": round(a / b, 1),
             "factor": AMP,

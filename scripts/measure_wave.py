@@ -34,7 +34,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from psvm_spark import registry
-from psvm_spark.session import get_spark
+from psvm_spark.session import SCALE_CONFS, get_spark, scoped_confs
 
 from measure_scale import AMP, build_amplified, build_graph_amplified  # noqa: E402
 
@@ -71,30 +71,25 @@ def main() -> int:
         mat(registry.QUERIES[name](spark, sf_dir))
         return round(time.perf_counter() - t, 2)
 
+    def scaled(name, factor):
+        return {f"psvm.{name}": str(round(SCALE_CONFS[name] * factor))}
+
     confs = {
-        "graph": {"psvm.graph.n_nodes": str(4000 * AMP)},
-        "svm": {
-            "psvm.svm.sv_modulo": str(20 * AMP),
-            "psvm.svm.test_modulo": str(20 * AMP),
-        },
-        "probe": {"psvm.sim.probe_modulo": str(50 * AMP)},
+        "graph": scaled("graph.n_nodes", AMP),
+        "svm": scaled("svm.sv_modulo", AMP) | scaled("svm.test_modulo", AMP),
+        "probe": scaled("sim.probe_modulo", AMP),
         # spatial density: points grow AMP-x, so the grid SIDE grows
         # sqrt(AMP)-x to hold points-per-cell (and with it per-point
         # candidate volume) constant — the n_nodes recipe in 2-D
-        "geo": {"psvm.geo.dbscan_grid": str(round(24 * AMP ** 0.5))},
+        "geo": scaled("geo.dbscan_grid", AMP ** 0.5),
         "plain": {},
     }
     res = {"amp": AMP, "queries": {}}
     for name, proto in specs:
         b = timed(name, base)
         amp_dir = out_graph if proto == "graph" else out20
-        for k, v in confs[proto].items():
-            spark.conf.set(k, v)
-        try:
+        with scoped_confs(spark, confs[proto]):
             a = timed(name, amp_dir)
-        finally:
-            for k in confs[proto]:
-                spark.conf.unset(k)
         res["queries"][name] = {
             "base": b,
             "amp20": a,

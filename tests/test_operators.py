@@ -611,6 +611,18 @@ class TestPythonDataSource:
         df = spark.read.format("libsvm_text").option("path", path).load()
         assert df.rdd.getNumPartitions() == len(files)
 
+    def test_registering_twice_keeps_the_source_readable(self, spark, sf_dir):
+        """A second registration of the same source raises nothing and
+        reads through it still work."""
+        from psvm_spark.queries.ml import write_libsvm_dir
+        from psvm_spark.sources.libsvm_text import register
+
+        register(spark)
+        register(spark)
+        path = write_libsvm_dir(spark, sf_dir)
+        df = spark.read.format("libsvm_text").option("path", path).load()
+        assert df.count() > 0
+
     def test_roundtrip_values_exact(self, spark, sf_dir):
         """Sparse round-trip: indices/values parsed by the Python source
         must reconstruct the nonzero entries of the original embedding."""
@@ -1967,8 +1979,6 @@ class TestAqeSkewSplit:
     def test_executed_plan_splits_the_hot_partition(self, spark, sf_dir):
         from psvm_spark.queries.joins import build_skew_join
 
-        # build FIRST: load_table inside applies session invariants,
-        # which would clobber the coalesce override below
         j = build_skew_join(spark, sf_dir)
         conf = spark.conf
         overrides = {

@@ -5,6 +5,8 @@ the session arrives with hostile values preset."""
 
 from __future__ import annotations
 
+import pytest
+
 from psvm_spark import registry
 from psvm_spark.session import _RUNTIME_CONFS, ensure_session_invariants
 
@@ -23,9 +25,9 @@ class TestHostileSessionConfs:
         try:
             for k, v in _HOSTILE.items():
                 spark.conf.set(k, v)
-            # every query path runs ensure_session_invariants via
-            # load_table/stream_events; a timestamp-sensitive oracle must
-            # still hash-match bitwise
+            # compare_query applies the invariants where the session
+            # enters, as the driver contract's queries() wrapper does; a
+            # timestamp-sensitive oracle must still hash-match bitwise
             from psvm_spark.oracle import compare_query
 
             for name in ("scalar_datetime", "scan_time_range"):
@@ -37,6 +39,51 @@ class TestHostileSessionConfs:
             for k, v in saved.items():
                 spark.conf.set(k, v)
             ensure_session_invariants(spark)
+
+
+# The queries that override session confs, and every key each overrides.
+_OVERRIDES = {
+    "scan_aggregate_pushdown": (
+        "spark.sql.sources.useV1SourceList",
+        "spark.sql.parquet.aggregatePushDown",
+    ),
+    "scan_pyds_filter_pushdown": ("spark.sql.python.filterPushdown.enabled",),
+    "sink_dynamic_partition_overwrite": ("spark.sql.sources.partitionOverwriteMode",),
+    "join_runtime_bloom_filter": (
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
+        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
+        "spark.sql.autoBroadcastJoinThreshold",
+    ),
+    "join_aqe_skew_split": (
+        "spark.sql.adaptive.skewJoin.enabled",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes",
+        "spark.sql.adaptive.coalescePartitions.enabled",
+        "spark.sql.adaptive.forceOptimizeSkewedJoin",
+        "spark.sql.autoBroadcastJoinThreshold",
+    ),
+}
+
+
+class TestScopedOverrides:
+    @pytest.mark.parametrize("name", sorted(_OVERRIDES))
+    def test_override_keys_leave_the_session_as_found(self, spark, sf_dir, name):
+        """Every key a query overrides reads the same before and after
+        it: an invariant keeps its value, and a key that was unset stays
+        unset instead of coming back as its default written explicitly."""
+        keys = _OVERRIDES[name]
+        saved = {k: spark.conf.get(k, None) for k in keys}
+        try:
+            for k in keys:
+                if k not in _RUNTIME_CONFS:
+                    spark.conf.unset(k)
+            before = {k: spark.conf.get(k, None) for k in keys}
+            registry.QUERIES[name](spark, sf_dir).collect()
+            assert {k: spark.conf.get(k, None) for k in keys} == before
+        finally:
+            for k, v in saved.items():
+                spark.conf.unset(k) if v is None else spark.conf.set(k, v)
 
 
 class TestRegistrationRotation:
@@ -142,6 +189,22 @@ class TestLazyOracles:
         finally:
             spark.conf.unset("psvm.svm.sv_modulo")
         assert compare_query(spark, sf_dir, "svm_predict_score").ok
+
+    @pytest.mark.parametrize(
+        "conf,name",
+        [("psvm.graph.n_nodes", "graph_degree_stats"), ("psvm.geo.dbscan_grid", "geo_dbscan_core")],
+    )
+    def test_graph_and_geo_scale_guards_block_parity_compare(self, spark, sf_dir, conf, name):
+        """The guard covers every scale conf, the vertex space and the
+        DBSCAN grid among them."""
+        from psvm_spark.oracle import compare_query
+
+        spark.conf.set(conf, "96")
+        try:
+            with pytest.raises(AssertionError, match=f"{conf}=96"):
+                compare_query(spark, sf_dir, name)
+        finally:
+            spark.conf.unset(conf)
 
     def test_svm_modulo_conf_scales_slices(self, spark, sf_dir):
         """Raising the moduli must shrink BOTH the SV model slice and

@@ -20,7 +20,7 @@ class TestStreamRunner:
         raises."""
         import pytest
 
-        from psvm_spark.streaming.jobs import scoped_confs
+        from psvm_spark.session import scoped_confs
 
         set_key = "spark.sql.shuffle.partitions"
         unset_key = "spark.sql.streaming.stateStore.providerClass"

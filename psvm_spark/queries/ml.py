@@ -1039,6 +1039,9 @@ def ml_boosting_two_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Bounds: |M| <= 2 n^2 q^2 and per-step products |M| * VSCALE * 64
 # stay under 2^63 through sf0.1; the driver loop uses Python ints
 # (unbounded) so the Spark side can never wrap first.
+# The oracle's matrix CTE is MATERIALIZED: DuckDB 1.0 otherwise
+# re-evaluates it at every step of the recursive CTE (40.2 s instead
+# of 0.6 s at sf0.01).
 
 _PCA_ITERS = 200  # the fixture spectrum is nearly flat (gap ratio ~0.93
 # at sf0.001, ~0.987 at sf0.01): power iteration needs O(1/(1-ratio))
@@ -1079,7 +1082,7 @@ mrow AS (
   JOIN sv sb ON sb.dim = c.e
   CROSS JOIN nn
   GROUP BY c.d),
-marr AS (SELECT list(r ORDER BY d) AS m FROM mrow),
+marr AS MATERIALIZED (SELECT list(r ORDER BY d) AS m FROM mrow),
 it AS (
   SELECT 0 AS k, [{", ".join([str(_PCA_VSCALE)] * _PCA_DIM)}] AS v
   UNION ALL

@@ -11,14 +11,13 @@ chance by a wide margin — the data ceiling, not the model, binds.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from psvm_spark import registry
 from psvm_spark.catalog import load_table
+from psvm_spark.session import scoped_confs
 
 registry.load_all()
 
@@ -373,19 +372,6 @@ def _numpy_icf(rows, rank):
     return want
 
 
-@contextmanager
-def _scoped_conf(spark, key, value):
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
-
-
 def _trace(df):
     return sorted((r.step, r.pivot_vec_id, r.resid_fp) for r in df.collect())
 
@@ -426,7 +412,7 @@ class TestICF:
         assert n_ranks(e) == 1
         single = _trace(icf_pivots(e, _ICF_RANK))
         before = spark.conf.get("spark.sql.files.maxPartitionBytes", None)
-        with _scoped_conf(spark, "spark.sql.files.maxPartitionBytes", "32k"):
+        with scoped_confs(spark, {"spark.sql.files.maxPartitionBytes": "32k"}):
             assert n_ranks(e) >= 3
             multi = _trace(icf_pivots(e, _ICF_RANK))
         assert spark.conf.get("spark.sql.files.maxPartitionBytes", None) == before
@@ -439,7 +425,7 @@ class TestICF:
 
         e = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 3)
         single = _trace(icf_pivots(e, 3))
-        with _scoped_conf(spark, "spark.sql.files.maxPartitionBytes", "16k"):
+        with scoped_confs(spark, {"spark.sql.files.maxPartitionBytes": "16k"}):
             assert n_ranks(e) > 3
             multi = _trace(icf_pivots(e, 3))
         assert multi == single == _numpy_icf(e.collect(), 3)

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from psvm_spark import registry
 from psvm_spark.catalog import load_table
+from psvm_spark.session import scoped_confs
 
 registry.load_all()
 
@@ -201,9 +202,7 @@ class TestBucketedJoin:
         o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
         # at fixture scale Catalyst prefers BHJ; disable broadcast to
         # exercise the SMJ path bucketing exists for
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
+        with scoped_confs(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
             joined = bucketed_join(spark, li, o, "l_orderkey", "o_orderkey")
             buf = io.StringIO()
             with redirect_stdout(buf):
@@ -214,8 +213,6 @@ class TestBucketedJoin:
             # and it returns the same rows as the plain shuffle join
             plain = li.join(o, li.l_orderkey == o.o_orderkey).count()
             assert joined.count() == plain
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
 class TestNewQueryPlans:
@@ -1503,17 +1500,12 @@ class TestAggregatePushdown:
 
         load_all()
         row = QUERIES["scan_aggregate_pushdown"](spark, sf_dir).collect()[0]
-        prev_v1 = spark.conf.get("spark.sql.sources.useV1SourceList")
-        spark.conf.set("spark.sql.sources.useV1SourceList", "")
-        spark.conf.set("spark.sql.parquet.aggregatePushDown", "true")
-        try:
+        with scoped_confs(spark, {"spark.sql.sources.useV1SourceList": "",
+                                  "spark.sql.parquet.aggregatePushDown": "true"}):
             o = spark.read.parquet(f"{sf_dir.rstrip('/')}/orders.parquet")
             agg = o.agg(F.count(F.lit(1)), F.min("o_orderkey"))
             plan = agg._jdf.queryExecution().executedPlan().toString()
             assert "PushedAggregation" in plan
-        finally:
-            spark.conf.set("spark.sql.sources.useV1SourceList", prev_v1)
-            spark.conf.unset("spark.sql.parquet.aggregatePushDown")
         o = spark.read.parquet(f"{sf_dir.rstrip('/')}/orders.parquet")
         want = o.agg(
             F.count(F.lit(1)).alias("n"),
@@ -1620,16 +1612,12 @@ class TestRuntimeBloomFilter:
         the filter must never change values."""
         from psvm_spark.registry import QUERIES
 
-        conf = spark.conf
         overrides = {
             "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
             "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "1GB",
             "spark.sql.autoBroadcastJoinThreshold": "-1",
         }
-        prev = {k: conf.get(k, None) for k in overrides}
-        for k, v in overrides.items():
-            conf.set(k, v)
-        try:
+        with scoped_confs(spark, overrides):
             li = load_table(spark, sf_dir, "lineitem")
             o = load_table(spark, sf_dir, "orders")
             dim = o.filter(
@@ -1640,9 +1628,6 @@ class TestRuntimeBloomFilter:
                 "l_orderkey"
             ).count()
             assert "bloom_filter_agg" in _plan(joined)
-        finally:
-            for k, v in prev.items():
-                conf.unset(k) if v is None else conf.set(k, v)
         # the registered operator (checkpointed under the overrides)
         # returns the same rows as the plain join without them
         got = {
@@ -1980,7 +1965,6 @@ class TestAqeSkewSplit:
         from psvm_spark.queries.joins import build_skew_join
 
         j = build_skew_join(spark, sf_dir)
-        conf = spark.conf
         overrides = {
             "spark.sql.adaptive.skewJoin.enabled": "true",
             "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
@@ -1993,18 +1977,9 @@ class TestAqeSkewSplit:
             "spark.sql.adaptive.forceOptimizeSkewedJoin": "true",
             "spark.sql.autoBroadcastJoinThreshold": "-1",
         }
-        prev = {k: conf.get(k, None) for k in overrides}
-        for k, v in overrides.items():
-            conf.set(k, v)
-        try:
+        with scoped_confs(spark, overrides):
             j.collect()
             plan = j._jdf.queryExecution().executedPlan().toString()
-        finally:
-            for k, v in prev.items():
-                if v is None:
-                    conf.unset(k)
-                else:
-                    conf.set(k, v)
         assert "skew=true" in plan, plan[:1500]
         assert "AQEShuffleRead skewed" in plan, plan[:1500]
 
@@ -2017,9 +1992,7 @@ class TestPydsFilterPushdown:
         register(spark)
         out = str(tmp_path / "segs")
         write_segmented_csv(spark, sf_dir, out)
-        prev = spark.conf.get("spark.sql.python.filterPushdown.enabled", None)
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-        try:
+        with scoped_confs(spark, {"spark.sql.python.filterPushdown.enabled": "true"}):
             df = spark.read.format("segmented_csv").option("path", out).load()
             assert df.rdd.getNumPartitions() == 5  # all segment files
             eq = df.filter(F.col("segment") == "BUILDING")
@@ -2058,11 +2031,6 @@ class TestPydsFilterPushdown:
                 .collect()
             }
             assert got == want
-        finally:
-            if prev is None:
-                spark.conf.unset("spark.sql.python.filterPushdown.enabled")
-            else:
-                spark.conf.set("spark.sql.python.filterPushdown.enabled", prev)
 
 
 class TestArrowPythonTiers:

@@ -349,9 +349,13 @@ print("last line")
 
 
 class TestClassDataArchive:
-    def test_key_follows_options_and_jars(self, tmp_path):
+    def test_key_follows_options_and_jars(self, tmp_path, monkeypatch):
+        """The key changes with the JVM options, the jars and the warm-up:
+        an archive holds the classes its warm-up loaded, so a changed
+        warm-up must not map the old one."""
         import os
 
+        from psvm_spark import session
         from psvm_spark.session import _cds_key
 
         java, jars, conf = tmp_path / "java", tmp_path / "jars", tmp_path / "conf"
@@ -362,6 +366,10 @@ class TestClassDataArchive:
         key = _cds_key(java, jars, "-Xa", conf)
         assert _cds_key(java, jars, "-Xa", conf) == key
         assert _cds_key(java, jars, "-Xa -Xb", conf) != key
+        monkeypatch.setattr(session, "_warm_up", lambda spark, path: spark.range(1).collect())
+        assert _cds_key(java, jars, "-Xa", conf) != key
+        monkeypatch.undo()
+        assert _cds_key(java, jars, "-Xa", conf) == key
         st = (jars / "spark-sql.jar").stat()
         os.utime(jars / "spark-sql.jar", ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
         assert _cds_key(java, jars, "-Xa", conf) != key

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from psvm_spark import registry
 from psvm_spark.catalog import load_table
+from psvm_spark.session import scoped_confs
 
 registry.load_all()
 
@@ -19,8 +20,6 @@ class TestStreamRunner:
         is unset again (not set to its default), also when the body
         raises."""
         import pytest
-
-        from psvm_spark.session import scoped_confs
 
         set_key = "spark.sql.shuffle.partitions"
         unset_key = "spark.sql.streaming.stateStore.providerClass"
@@ -226,11 +225,8 @@ class TestTransformWithState:
 
         if not stateful.tws_runtime_available():
             pytest.skip("google.protobuf absent: TWS state protocol cannot run")
-        prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", stateful.ROCKSDB_PROVIDER
-        )
-        try:
+        provider = {"spark.sql.streaming.stateStore.providerClass": stateful.ROCKSDB_PROVIDER}
+        with scoped_confs(spark, provider):
             out = run_to_table(
                 stateful.spend_tracker_tws(stream_events(spark, sf_dir)), "update"
             )
@@ -245,9 +241,6 @@ class TestTransformWithState:
             assert set(got) == set(exp)
             for uid in exp:
                 assert got[uid][0] == exp[uid][0]
-        finally:
-            if prev is not None:
-                spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
 
 
 class TestStreamStreamJoin:

@@ -31,7 +31,7 @@ def housekeep(spark, i: int) -> None:
 
     A 229-query session accumulates state a long-lived production app
     would also have to clean: memory-sink tables from streaming runs,
-    localCheckpoint RDD blocks, cached relations, and broadcast refs
+    checkpointed RDD blocks, cached relations, and broadcast refs
     (freed only when the DRIVER GCs, via ContextCleaner weak refs).
     Left alone, late-run queries pay the previous 200 queries' heap —
     measured on this box as 3-6x inflation of trivially cheap scans.

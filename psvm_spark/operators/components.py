@@ -13,7 +13,7 @@ Scale (100 TB):
 - The edge set is the *pruned candidate* graph (LSH bands / inverted
   index), never all-pairs — millions of edges per billion docs, not n^2.
 - Each iteration is one shuffle (join on dst) + one map-side-combined
-  min-aggregation; `localCheckpoint` truncates lineage so plan size and
+  min-aggregation; a checkpoint per round truncates lineage so plan size and
   scheduler cost stay O(1) per iteration instead of growing with the
   loop (same pattern as ml/failsafe.py driver-iterate training).
 - Iterations = graph diameter.  Dup clusters are shallow (stars/cliques
@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from psvm_spark.queries._util import checkpoint, local_df
+
 
 def _star_components(e: DataFrame, max_rounds: int = 40) -> DataFrame:
     """Large-star/small-star contraction (Kiveris et al.) over an edge
@@ -47,13 +49,12 @@ def _star_components(e: DataFrame, max_rounds: int = 40) -> DataFrame:
     rounds are O(log^2 n) regardless of graph diameter.
     """
     # canonical orientation: a > b (edges point from larger to smaller)
-    cur = (
+    cur = checkpoint(
         e.filter(F.col("s") != F.col("d"))
         .select(F.greatest("s", "d").alias("a"), F.least("s", "d").alias("b"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    vertices = e.select(F.col("s").alias("v")).distinct().localCheckpoint(eager=True)
+    vertices = checkpoint(e.select(F.col("s").alias("v")).distinct())
     for _ in range(max_rounds):
         # large-star: every neighbor larger than u links to min(N(u) + {u})
         adj = cur.select("a", "b").union(
@@ -72,13 +73,12 @@ def _star_components(e: DataFrame, max_rounds: int = 40) -> DataFrame:
         # (and u itself) to the minimum
         adj2 = large.select(F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b"))
         mins2 = adj2.groupBy("a").agg(F.min("b").alias("m"))
-        nxt = (
+        nxt = checkpoint(
             adj2.join(mins2, "a")
             .select(F.col("b").alias("a"), F.col("m").alias("b"))
             .union(mins2.select(F.col("a"), F.col("m").alias("b")))
             .filter(F.col("a") != F.col("b"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
         # fixpoint: both distinct canonical sets equal (cheap on the
         # contracted set — by now edges ~ number of non-root vertices)
@@ -127,8 +127,6 @@ def _driver_components(e: DataFrame) -> DataFrame:
     # createDataFrame(list).coalesce(1) made every downstream action
     # replay 32 pickled slices through ONE Python worker serially —
     # measured 3.6 s per action on a 2k-row result vs 0.07 s via Arrow.
-    from psvm_spark.queries._util import local_df
-
     return local_df(e.sparkSession, rows, "v long, component long").coalesce(1)
 
 
@@ -169,7 +167,7 @@ def connected_components(
     # graphs do NOT (both orientations of a pair can appear).
     if not assume_unique:
         e = e.distinct()
-    e = e.localCheckpoint(eager=True)
+    e = checkpoint(e)
     # Size the working partitioning to the measured edge count: the loop
     # below runs O(diameter) tiny jobs, and on a small graph (the common
     # case after candidate pruning) 32-task rounds are pure scheduler
@@ -181,10 +179,10 @@ def connected_components(
         return _driver_components(e)
     if n_edges < 200_000:
         parts = max(2, spark.sparkContext.defaultParallelism // 8)
-        e = e.repartition(parts, "d").localCheckpoint(eager=True)
-    labels = (
+        e = checkpoint(e.repartition(parts, "d"))
+    labels = checkpoint(
         e.select(F.col("s").alias("v")).distinct().withColumn("label", F.col("v"))
-    ).localCheckpoint(eager=True)
+    )
     # Convergence test: labels only ever decrease, so sum(label) strictly
     # decreases until the fixpoint — a one-column aggregate on the
     # already-materialized table replaces a join-and-count per round.
@@ -200,7 +198,7 @@ def connected_components(
             .union(labels)
             .groupBy("v")
             .agg(F.min("label").alias("label"))
-        ).localCheckpoint(eager=True)
+        ).transform(checkpoint)
         cur_sum = labels.agg(F.sum("label")).first()[0]
         if cur_sum == prev_sum:
             return labels.select("v", F.col("label").alias("component"))

@@ -15,7 +15,7 @@ identical inputs are correctly rounded in both engines.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # 2-decimal money/ratio columns fit comfortably in DECIMAL(12,2); keeping
@@ -130,27 +130,47 @@ def local_df(spark, rows, schema: str):
     masks NaN to null on object columns), so rows containing NaN at any
     depth (inside arrays, structs and maps too) take the plain list
     path, which preserves it.  ``rows`` may be any iterable; it is
-    materialized once.  Falls back to the plain list path on any
-    conversion error (correctness first; the fast path is an
-    optimization)."""
-    rows = list(rows)
-    try:
-        import pandas as pd
-        from pyspark.sql.types import StructType
+    materialized once.  A conversion error raises: rows that do not fit
+    ``schema`` are the caller's bug, not a reason to change paths."""
+    import pandas as pd
+    from pyspark.sql.types import StructType
 
-        if any(_has_nan(v) for r in rows for v in r):
-            return spark.createDataFrame(rows, schema)
-        # DDL parser handles nested/parameterized types (decimal(12,2),
-        # map<string,int>, ...) that naive comma-splitting would break on
-        names = StructType.fromDDL(schema).fieldNames()
-        data = {
-            n: pd.Series([r[i] for r in rows], dtype=object)
-            for i, n in enumerate(names)
-        }
-        pdf = pd.DataFrame(data, columns=names)
-        return spark.createDataFrame(pdf, schema=schema)
-    except Exception:  # noqa: BLE001 — correctness first: fall back
+    rows = list(rows)
+    if any(_has_nan(v) for r in rows for v in r):
         return spark.createDataFrame(rows, schema)
+    # DDL parser handles nested/parameterized types (decimal(12,2),
+    # map<string,int>, ...) that naive comma-splitting would break on
+    names = StructType.fromDDL(schema).fieldNames()
+    data = {
+        n: pd.Series([r[i] for r in rows], dtype=object)
+        for i, n in enumerate(names)
+    }
+    pdf = pd.DataFrame(data, columns=names)
+    return spark.createDataFrame(pdf, schema=schema)
+
+
+def checkpoint(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` now and cut its lineage: the one rule for every
+    query that reuses a subtree or bounds a loop's plan.
+
+    Always eager, so the data is computed by exactly one job before any
+    consumer plans against it (concurrent broadcast builds would
+    otherwise each compute a lazy checkpoint's subtree).  On a local
+    master every executor lives in the driver's JVM, so
+    ``localCheckpoint`` loses nothing.  On any other master a local
+    checkpoint's blocks live only on the executor that wrote them and
+    die with it, so the data goes to Spark's ``spark.checkpoint.dir``,
+    which must be set on storage every executor can reach."""
+    sc = df.sparkSession.sparkContext
+    if sc._jsc.isLocal():
+        return df.localCheckpoint(eager=True)
+    if sc.getCheckpointDir() is None:
+        raise RuntimeError(
+            f"master {sc.master!r} is not local: set spark.checkpoint.dir to "
+            "storage every executor can reach, so a lost executor does not "
+            "lose checkpointed data"
+        )
+    return df.checkpoint(eager=True)
 
 
 def fan_out(df, spark):

@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from psvm_spark.catalog import load_events_range, load_table
-from psvm_spark.queries._util import local_df
+from psvm_spark.queries._util import checkpoint, local_df
 from psvm_spark.registry import query
 from psvm_spark.session import SCALE_CONFS, scale_conf
 
@@ -692,7 +692,7 @@ def event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bill-of-materials / org-chart traversals run at warehouse scale.
 # Depth is log_7(n) (~5 at sf0.1), so the loop is short and each
 # iteration is one small equi-join (parent maps are dimension-sized in
-# practice; AQE broadcasts them).  ``localCheckpoint`` per round keeps
+# practice; AQE broadcasts them).  A ``checkpoint`` per round keeps
 # the lineage flat (components.py pattern).  Oracle: the genuine
 # recursive CTE in DuckDB.
 
@@ -718,22 +718,20 @@ def hierarchy_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_custkey").alias("child"),
         F.expr("c_custkey div 7").alias("parent"),
     )
-    frontier = (
+    frontier = checkpoint(
         c.filter((F.col("c_custkey") % 11 == 0) & (F.col("c_custkey") >= 1))
         .select(
             F.col("c_custkey").alias("node"),
             F.expr("c_custkey div 7").alias("anc"),
             F.lit(1).alias("depth"),
         )
-        .localCheckpoint(eager=True)
     )
     acc = frontier
     for _ in range(64):  # bound >> log_7(n); loop exits on empty frontier
-        frontier = (
+        frontier = checkpoint(
             frontier.filter(F.col("anc") >= 1)
             .join(parents, frontier.anc == parents.child)
             .select("node", F.col("parent").alias("anc"), (F.col("depth") + 1).alias("depth"))
-            .localCheckpoint(eager=True)
         )
         if frontier.isEmpty():
             break
@@ -1661,9 +1659,7 @@ def graph_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     # Materialize the distinct basket items once: the self-join otherwise
     # re-scans lineitem and re-runs the distinct for each side (guide §2.4).
-    items = (
-        li.select("l_orderkey", "l_partkey").distinct().localCheckpoint(eager=True)
-    )
+    items = checkpoint(li.select("l_orderkey", "l_partkey").distinct())
     a = items.alias("a")
     b = items.alias("b")
     pairs = a.join(
@@ -1723,14 +1719,14 @@ def agg_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     # items feeds four consumers (supp, nb, both self-join sides); without
     # materialization each re-scans lineitem + re-runs the distinct.
-    items = (
-        li.select("l_orderkey", "l_partkey").distinct().localCheckpoint(eager=True)
-    )
+    items = checkpoint(li.select("l_orderkey", "l_partkey").distinct())
     supp = items.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("s"))
     nb = items.agg(F.count_distinct("l_orderkey").alias("n_orders"))
     a = items.alias("a")
     b = items.alias("b")
-    pair = (
+    # The rules union references pair twice; materialize so the basket
+    # self-join runs once, not once per direction.
+    pair = checkpoint(
         a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -1741,9 +1737,6 @@ def agg_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("n_ab"))
         .filter(F.col("n_ab") >= 3)
-        # The rules union references pair twice; materialize so the basket
-        # self-join runs once, not once per direction.
-        .localCheckpoint(eager=True)
     )
     rules = pair.select(
         F.col("pa").alias("antecedent"), F.col("pb").alias("consequent"), "n_ab"
@@ -3023,7 +3016,11 @@ FROM ranked WHERE rk = (np + 1) // 2
 def ts_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part")
-    monthly = (
+    # One corpus pass: the rollup output is <= brands x months rows, but
+    # the a/b self-join below references it twice — without materializing
+    # it each side re-runs the lineitem⋈part rollup from parquet
+    # (guide §2.4 / §3.3: materialize to dedupe expensive subtrees).
+    monthly = checkpoint(
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .groupBy(
             "p_brand",
@@ -3036,11 +3033,6 @@ def ts_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("y")
         )
-        # One corpus pass: the rollup output is <= brands x months rows, but
-        # the a/b self-join below references it twice — without materializing
-        # it each side re-runs the lineitem⋈part rollup from parquet
-        # (guide §2.4 / §3.3: materialize to dedupe expensive subtrees).
-        .localCheckpoint(eager=True)
     )
     a = monthly.select("p_brand", F.col("x").alias("x1"), F.col("y").alias("y1"))
     b = monthly.select("p_brand", F.col("x").alias("x2"), F.col("y").alias("y2"))
@@ -3991,7 +3983,10 @@ def ts_dtw_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation")
     r = load_table(spark, sf_dir, "region")
-    t = (
+    # <= |regions| x 27 rows, but its subtree is the full
+    # orders|x|customer rollup — consumed by the spine, the spine
+    # join, and both sides of the pair join (4 plannings otherwise)
+    t = checkpoint(
         o.join(c, o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
@@ -4009,10 +4004,6 @@ def ts_dtw_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("o_totalprice").cast("decimal(12,2)") * 100).cast("bigint")
             ).alias("x")
         )
-        # <= |regions| x 27 rows, but its subtree is the full
-        # orders|x|customer rollup — consumed by the spine, the spine
-        # join, and both sides of the pair join (4 plannings otherwise)
-        .localCheckpoint(eager=True)
     )
     spine = (
         t.select("rn")
@@ -6547,7 +6538,7 @@ def geo_dbscan_core(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_custkey").alias("k"),
         F.expr(_dbscan_coord("dbx:", "c_custkey", w)).alias("px"),
         F.expr(_dbscan_coord("dby:", "c_custkey", w)).alias("py"),
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
     # probes explode to their 9 neighbor cells; candidates key on their
     # own cell — pure equi-join on (ci, cj), geo_nearest_site's blocking
     probe_cells = pts.select(
@@ -6570,7 +6561,7 @@ def geo_dbscan_core(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("cast(floor(px) as bigint)").alias("ci"),
         F.expr("cast(floor(py) as bigint)").alias("cj"),
     )
-    nb = (
+    nb = checkpoint(
         probe_cells.join(cands, ["ci", "cj"])
         .filter(
             (F.col("px") - F.col("qx")) * (F.col("px") - F.col("qx"))
@@ -6578,7 +6569,6 @@ def geo_dbscan_core(spark: SparkSession, sf_dir: str) -> DataFrame:
             <= F.lit(_DBSCAN_EPS2)
         )
         .select(F.col("pk").alias("k"), "qk")
-        .localCheckpoint(eager=True)
     )
     cnt = nb.groupBy("k").agg(F.count(F.lit(1)).alias("n_nb"))
     core = cnt.filter(F.col("n_nb") >= _DBSCAN_MINPTS).select("k")
@@ -6858,15 +6848,14 @@ FROM loss GROUP BY q
 )
 def ml_quantile_pinball(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    cnt = (
+    # three consumers (min-date, train, test): pay the events scan once
+    cnt = checkpoint(
         ev.filter(F.col("event_type") == "purchase")
         .groupBy(
             F.date_trunc("day", "ts").cast("date").alias("d"),
             (F.weekday("ts") + 1).alias("wd"),
         )
         .agg(F.count(F.lit(1)).alias("x"))
-        # three consumers (min-date, train, test): pay the events scan once
-        .localCheckpoint(eager=True)
     )
     mn = cnt.agg(F.min("d").alias("md"))
     with_mn = cnt.crossJoin(F.broadcast(mn))
@@ -6950,13 +6939,12 @@ GROUP BY c.event_type, qq.n_days, qq.q1, qq.q3
 )
 def dq_iqr_fences(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    cnt = (
+    # consumed by both the rank pass and the fence join: scan once
+    cnt = checkpoint(
         ev.groupBy(
             "event_type", F.date_trunc("day", "ts").cast("date").alias("d")
         )
         .agg(F.count(F.lit(1)).alias("x"))
-        # consumed by both the rank pass and the fence join: scan once
-        .localCheckpoint(eager=True)
     )
     w = Window.partitionBy("event_type").orderBy("x", "d")
     ranked = cnt.select(

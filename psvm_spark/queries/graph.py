@@ -14,7 +14,7 @@ Scale notes (100 TB):
 - Edge building is a narrow map + one distinct (shuffle on the edge
   pair, map-side combined).  The salted-md5 vertex hash is the
   dominant per-row cost and runs entirely in whole-stage codegen.
-- Each query materializes the edge set ONCE (``localCheckpoint``) and
+- Each query materializes the edge set ONCE (``_util.checkpoint``) and
   reuses it — the naive form recomputed the md5 scan 2-6x per query
   (measured 12s/13s/41s at sf0.1; ~3/6/9s after reuse).
 - Triangle counting orients every edge low->high and joins wedges
@@ -26,9 +26,8 @@ Scale notes (100 TB):
   (|V| rows — O(V), NOT broadcastable at billions of vertices) is
   SHUFFLE-joined against the checkpointed link table on src each
   iteration, then the contributions aggregate on dst.  5 fixed
-  iterations, ``localCheckpoint`` per iteration keeps lineage flat
-  (same pattern as operators/components.py).  Driver traffic is zero
-  data rows.
+  iterations keep the lineage bounded.  Driver traffic is zero data
+  rows.
 """
 
 from __future__ import annotations
@@ -37,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from psvm_spark.catalog import load_table
+from psvm_spark.queries._util import checkpoint
 from psvm_spark.registry import query
 from psvm_spark.session import SCALE_CONFS, scale_conf
 
@@ -74,12 +74,12 @@ _EDGES_DUCK = f"""
 """
 
 
-def edge_set(spark: SparkSession, sf_dir: str, *, materialize: bool = False) -> DataFrame:
+def edge_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical undirected edge set (a < b), deduplicated.
 
-    ``materialize=True`` local-checkpoints the result so callers that
-    traverse it several times (wedge joins, rank iterations) pay the
-    md5 scan + distinct exactly once.
+    Callers that traverse it several times (wedge joins, rank
+    iterations) wrap it in ``checkpoint`` so the md5 scan + distinct
+    runs exactly once.
     """
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 4 == 0)
     n = scale_conf(spark, "graph.n_nodes")
@@ -90,7 +90,7 @@ def edge_set(spark: SparkSession, sf_dir: str, *, materialize: bool = False) -> 
     e = uv.select(
         F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b")
     ).distinct()
-    return e.localCheckpoint(eager=True) if materialize else e
+    return e
 
 
 # --------------------------------------------------------------------------
@@ -144,7 +144,7 @@ SELECT (SELECT COUNT(DISTINCT node)
 """,
 )
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = edge_set(spark, sf_dir, materialize=True)
+    e = checkpoint(edge_set(spark, sf_dir))
     n_nodes = (
         e.select(F.explode(F.array("a", "b")).alias("node"))
         .agg(F.countDistinct("node").alias("n_nodes"))
@@ -210,13 +210,13 @@ FROM (SELECT src, rank FROM it WHERE step = {_PR_ITERS}
 
 @query("graph_pagerank", oracle=_pagerank_oracle())
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = edge_set(spark, sf_dir, materialize=True)
+    e = checkpoint(edge_set(spark, sf_dir))
     out = (
         e.select(F.col("a").alias("src"), F.col("b").alias("dst"))
         .unionAll(e.select(F.col("b").alias("src"), F.col("a").alias("dst")))
     )
     deg = out.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    links = out.join(deg, "src").localCheckpoint(eager=True)
+    links = checkpoint(out.join(deg, "src"))
     n = deg.count()
     base = (3 * _PR_SCALE) // (20 * n)
     ranks = deg.select("src", F.lit(_PR_SCALE // n).cast("bigint").alias("rank"))
@@ -225,7 +225,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         # so broadcasting it each iteration would ship the whole rank
         # vector to every executor (a driver/executor-memory killer at
         # billions of vertices).  A hash join co-partitions both sides on
-        # src; links is localCheckpoint'd so only ranks (the small side
+        # src; links is checkpointed so only ranks (the small side
         # by bytes) re-shuffles per iteration.
         contrib = (
             links.join(ranks, "src")
@@ -242,7 +242,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         # coalesce(inflow, 0) can never fire.  Dropping the spine removes
         # one join + one O(E) degree re-aggregation per iteration
         # (measured 4.3s -> 2.5s at sf0.1, rows bit-identical).  No
-        # per-iteration localCheckpoint either: 5 fixed iterations keep
+        # per-iteration checkpoint either: 5 fixed iterations keep
         # the lineage bounded, and one job materializes the whole loop
         # instead of 5 checkpoint jobs + a final one.
         ranks = contrib.select(
@@ -293,9 +293,7 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct (order, part) pairs feed the support rollup AND both
     # sides of the co-occurrence self-join; materialize once (the same
     # shape graph_copurchase_pairs pins)
-    items = (
-        li.select("l_orderkey", "l_partkey").distinct().localCheckpoint(eager=True)
-    )
+    items = checkpoint(li.select("l_orderkey", "l_partkey").distinct())
     supp = items.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("s"))
     a = items.alias("a")
     b = items.alias("b")
@@ -369,14 +367,14 @@ FROM bfs GROUP BY node
 """,
 )
 def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = edge_set(spark, sf_dir, materialize=True)
+    e = checkpoint(edge_set(spark, sf_dir))
     und = e.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionAll(
         e.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     )
     nodes = e.select(F.explode(F.array("a", "b")).alias("node")).distinct()
     seed = nodes.filter(F.col("node") % _BFS_SRC_MOD == 0).select(
         "node", F.lit(0).alias("dist")
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
     # Accumulate per-hop frontiers instead of rewriting the whole
     # settled set each hop: the anti-join unions the (checkpointed)
     # hop slices lazily, saving one O(settled) materialization job per
@@ -387,13 +385,12 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         settled_ids = parts[0].select("node")
         for p in parts[1:]:
             settled_ids = settled_ids.unionAll(p.select("node"))
-        nxt = (
+        nxt = checkpoint(
             frontier.join(und, frontier.node == und.src)
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(settled_ids, "node", "left_anti")
             .select("node", F.lit(hop).alias("dist"))
-            .localCheckpoint(eager=True)
         )
         if nxt.isEmpty():
             break
@@ -417,7 +414,7 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the Spark loop early-exits at the fixpoint, which by the same
 # argument cannot change the result).  Spark shape per round: filter
 # edges to alive endpoints (two semi joins), one degree aggregation —
-# edge-linear, localCheckpoint keeps lineage flat.
+# edge-linear, a checkpoint per round keeps lineage flat.
 
 _KCORE_K = 3
 _KCORE_ROUNDS = 20
@@ -457,12 +454,11 @@ SELECT u AS vertex, CAST(COUNT(*) AS BIGINT) AS core_degree FROM (
 
 @query("graph_kcore", oracle=_kcore_oracle())
 def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = edge_set(spark, sf_dir, materialize=True)
-    alive = (
+    e = checkpoint(edge_set(spark, sf_dir))
+    alive = checkpoint(
         e.select(F.col("a").alias("v"))
         .unionAll(e.select(F.col("b").alias("v")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     n_alive = alive.count()
     for _ in range(_KCORE_ROUNDS):
@@ -476,10 +472,9 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("v")
             .agg(F.count(F.lit(1)).alias("deg"))
         )
-        alive = (
+        alive = checkpoint(
             deg.filter(F.col("deg") >= _KCORE_K)
             .select("v")
-            .localCheckpoint(eager=True)
         )
         n2 = alive.count()
         if n2 == n_alive:  # fixpoint: further rounds are the identity
@@ -533,14 +528,13 @@ SELECT seed, CAST(step AS INT) AS step, vertex FROM walk
 
 @query("graph_random_walks", oracle=_walks_oracle())
 def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = edge_set(spark, sf_dir, materialize=True)
+    e = checkpoint(edge_set(spark, sf_dir))
     sym = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
         e.select(F.col("b").alias("u"), F.col("a").alias("v"))
     )
-    adj = (
+    adj = checkpoint(
         sym.groupBy("u")
         .agg(F.sort_array(F.collect_list("v")).alias("nb"))
-        .localCheckpoint(eager=True)
     )
     pick = (
         "element_at(nb, cast(pmod(cast(conv(substring(md5("
@@ -552,10 +546,7 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     levels = [frontier]
     for _ in range(_WALK_LEN):
-        # lazy checkpoint: each level is still materialized exactly once
-        # (the next hop's join and the final union share the cached RDD),
-        # but all 4 hops ride ONE action instead of 4 eager jobs + 1
-        frontier = (
+        frontier = checkpoint(
             frontier.join(adj, adj.u == frontier.vertex)
             .select("seed", "step", "vertex", "nb")
             .select(
@@ -563,7 +554,6 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("step") + 1).alias("step"),
                 F.expr(pick).alias("vertex"),
             )
-            .localCheckpoint(eager=False)
         )
         levels.append(frontier)
     out = levels[0]
@@ -584,7 +574,7 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
 # fixed-point rescale trick from graph_pagerank's oracle applies).
 # Shape: each half-step is one equi-join edges->scores + one
 # map-side-combined aggregation on the 8-byte node key; edges are
-# localCheckpointed once.  Output = top-15 per role with (score DESC,
+# checkpointed once.  Output = top-15 per role with (score DESC,
 # node) total order.
 
 _HITS_TOPK = 15
@@ -623,14 +613,13 @@ FROM ranked WHERE rnk <= {_HITS_TOPK}
 def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 4 == 0)
     n = scale_conf(spark, "graph.n_nodes")
-    edges = (
+    edges = checkpoint(
         li.select(
             F.expr(_u_spark(n)).cast("bigint").alias("u"),
             F.expr(_v_spark(n)).cast("bigint").alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     a1 = edges.groupBy(F.col("v").alias("node")).agg(
         F.count(F.lit(1)).cast("bigint").alias("s")
@@ -672,9 +661,8 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rounds unrolled).  Per round: one co-partitioned join of the O(V)
 # label vector to the checkpointed directed edge list, one
 # (dst, label) count, one arg-max — the same scale shape as
-# graph_pagerank (never broadcast the label vector; localCheckpoint
-# truncates the loop lineage).  Output: per surviving community, size
-# + min member + membership checksum.
+# graph_pagerank (never broadcast the label vector).  Output: per
+# surviving community, size + min member + membership checksum.
 
 _LPA_ITERS = 4
 
@@ -745,11 +733,10 @@ FROM labels4 GROUP BY label
 """,
 )
 def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = edge_set(spark, sf_dir, materialize=True)
-    directed = (
+    e = checkpoint(edge_set(spark, sf_dir))
+    directed = checkpoint(
         e.select(F.col("a").alias("src"), F.col("b").alias("dst"))
         .unionAll(e.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-        .localCheckpoint(eager=True)
     )
     spine = directed.select(F.col("src").alias("node")).distinct()
     labels = spine.select("node", F.col("node").alias("label"))
@@ -771,7 +758,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         # vote — the oracle's COALESCE(r.label, s.label) can never fire
         # and winner's node set equals the spine exactly.  Removing it
         # drops one join + one distinct per iteration; no per-iteration
-        # localCheckpoint either (4 fixed iterations, bounded lineage,
+        # checkpoint either (4 fixed iterations, bounded lineage,
         # one materializing job instead of 5).
         labels = winner.select("node", F.col("new_label").alias("label"))
     return labels.groupBy(F.col("label").alias("community")).agg(
@@ -826,7 +813,7 @@ WHERE d.deg >= 2
 """,
 )
 def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = edge_set(spark, sf_dir, materialize=True)
+    e = checkpoint(edge_set(spark, sf_dir))
     e1 = e.select(F.col("a").alias("va"), F.col("b").alias("vb"))
     e2 = e.select(F.col("a").alias("x_b"), F.col("b").alias("vc"))
     wedges = e1.join(e2, e1.vb == e2.x_b).select("va", "vb", "vc")
@@ -897,7 +884,7 @@ GROUP BY support
 """,
 )
 def graph_edge_triangle_support(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = edge_set(spark, sf_dir, materialize=True)
+    e = checkpoint(edge_set(spark, sf_dir))
     adj = e.select(F.col("a").alias("x"), F.col("b").alias("n")).unionAll(
         e.select(F.col("b").alias("x"), F.col("a").alias("n"))
     )
@@ -997,14 +984,14 @@ LIMIT {_AA_TOPK}
 """,
 )
 def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = edge_set(spark, sf_dir, materialize=True)
+    e = checkpoint(edge_set(spark, sf_dir))
     adj = e.select(F.col("a").alias("x"), F.col("b").alias("n")).unionAll(
         e.select(F.col("b").alias("x"), F.col("a").alias("n"))
     )
     deg = adj.groupBy("x").agg(F.count(F.lit(1)).alias("d"))
     # NOT checkpointed: the wedge self-join's two sides are the same
     # subtree shuffled on the same key (the window already partitions
-    # by z), so Spark reuses one exchange — an eager checkpoint was
+    # by z), so Spark reuses one exchange — a checkpoint was
     # MEASURED SLOWER (5.1 s vs 3.9 s, r12 wave 5).
     capped = capped_adjacency(adj)
     a1 = capped.select(F.col("x").alias("x1"), F.col("n").alias("z"))
@@ -1073,7 +1060,7 @@ FROM m
 """,
 )
 def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = edge_set(spark, sf_dir, materialize=True)
+    e = checkpoint(edge_set(spark, sf_dir))
     adj = e.select(F.col("a").alias("x"), F.col("b").alias("n")).unionAll(
         e.select(F.col("b").alias("x"), F.col("a").alias("n"))
     )
@@ -1165,14 +1152,12 @@ FROM within, dsum, moved, m
 """,
 )
 def graph_louvain_round(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = edge_set(spark, sf_dir, materialize=True)
+    e = checkpoint(edge_set(spark, sf_dir))
     adj = e.select(F.col("a").alias("x"), F.col("b").alias("n")).unionAll(
         e.select(F.col("b").alias("x"), F.col("a").alias("n"))
     )
     # deg feeds du, dn, the label spine and the node count (4 consumers)
-    deg = adj.groupBy("x").agg(F.count(F.lit(1)).alias("d")).localCheckpoint(
-        eager=True
-    )
+    deg = checkpoint(adj.groupBy("x").agg(F.count(F.lit(1)).alias("d")))
     m = e.agg(F.count(F.lit(1)).alias("m"))
     du = deg.select(F.col("x").alias("x"), F.col("d").alias("du"))
     dn = deg.select(F.col("x").alias("n"), F.col("d").alias("dn"))
@@ -1196,7 +1181,7 @@ def graph_louvain_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumers, each re-running the best-move join otherwise)
     lab = deg.join(best, "x", "left").select(
         "x", "d", F.coalesce("move_to", F.col("x")).alias("c")
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
     la = lab.select(F.col("x").alias("a"), F.col("c").alias("ca"))
     lb = lab.select(F.col("x").alias("b"), F.col("c").alias("cb"))
     within = (
@@ -1281,14 +1266,12 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ks-crossJoin + groupBy, which replicated the degree table and the
     # edge-endpoint join output 4x through a nested-loop join (guide §2.3
     # aggregate before you shuffle; du>k AND dv>k == least(du,dv)>k).
-    e = edge_set(spark, sf_dir, materialize=True)
+    e = checkpoint(edge_set(spark, sf_dir))
     adj = e.select(F.col("a").alias("x"), F.col("b").alias("n")).unionAll(
         e.select(F.col("b").alias("x"), F.col("a").alias("n"))
     )
     # deg feeds both endpoint joins and the nk aggregate — materialize once.
-    deg = (
-        adj.groupBy("x").agg(F.count(F.lit(1)).alias("d")).localCheckpoint(eager=True)
-    )
+    deg = checkpoint(adj.groupBy("x").agg(F.count(F.lit(1)).alias("d")))
     da = deg.select(F.col("x").alias("a"), F.col("d").alias("du"))
     db = deg.select(F.col("x").alias("b"), F.col("d").alias("dv"))
     md = e.join(da, "a").join(db, "b").select(F.least("du", "dv").alias("dmin"))
@@ -1420,11 +1403,8 @@ def graph_leiden_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     lab, adjc, _e, _deg = _leiden_labels(spark, sf_dir)
     # r has two consumers (split + n_subcommunities); without the
     # checkpoint each re-plans and re-executes the 4-round label chain
-    # (same fix graph_leiden_aggregate already carries).  Eager, not
-    # lazy: both consumers are broadcast-exchange subtrees that Spark
-    # materializes in concurrent jobs — a lazy checkpoint lets them
-    # race and each compute the chain (ADVICE r12).
-    r = _leiden_rounds(lab, adjc, 4).localCheckpoint(eager=True)
+    # (same fix graph_leiden_aggregate already carries).
+    r = checkpoint(_leiden_rounds(lab, adjc, 4))
     split = (
         lab.join(r, "x")
         .groupBy("c")
@@ -1455,7 +1435,7 @@ def _leiden_labels(spark: SparkSession, sf_dir: str):
     graph_leiden_aggregate, and the convergence test — the aggregate
     step reuses the already-materialized edges/degrees instead of
     re-deriving them)."""
-    e = edge_set(spark, sf_dir, materialize=True)
+    e = checkpoint(edge_set(spark, sf_dir))
     adj = e.select(F.col("a").alias("x"), F.col("b").alias("n")).unionAll(
         e.select(F.col("b").alias("x"), F.col("a").alias("n"))
     )
@@ -1483,18 +1463,8 @@ def _leiden_labels(spark: SparkSession, sf_dir: str):
         .filter(F.col("cx") == F.col("cn"))
         .select("x", "n")
     )
-    # both sides are re-traversed once per refinement round — and the
-    # consumers are CONCURRENT (the 4 refinement-round map stages over
-    # adjc, and the broadcast-exchange subtrees over lab, are scheduled
-    # in parallel), so a lazy checkpoint can race and each consumer
-    # recompute the unpersisted chain (ADVICE r12).  Eager guarantees
-    # one materialization before anything plans against them.
-    return (
-        lab.localCheckpoint(eager=True),
-        adjc.localCheckpoint(eager=True),
-        e,
-        deg,
-    )
+    # both sides are re-traversed once per refinement round
+    return checkpoint(lab), checkpoint(adjc), e, deg
 
 
 def _leiden_rounds(lab: DataFrame, adjc: DataFrame, k: int) -> DataFrame:
@@ -1554,9 +1524,8 @@ FROM within, dsum, m
 )
 def graph_leiden_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     lab, adjc, e, deg = _leiden_labels(spark, sf_dir)
-    # eager: r's three consumers (relabel join, dsum, n_super_nodes) are
-    # concurrent broadcast-exchange jobs — see graph_leiden_refine.
-    r = _leiden_rounds(lab, adjc, 4).localCheckpoint(eager=True)
+    # r has three consumers (relabel join, dsum, n_super_nodes)
+    r = checkpoint(_leiden_rounds(lab, adjc, 4))
     m = e.agg(F.count(F.lit(1)).alias("m"))
     ra = r.select(F.col("x").alias("a"), F.col("r").alias("sa"))
     rb = r.select(F.col("x").alias("b"), F.col("r").alias("sb"))
@@ -1663,13 +1632,13 @@ FROM (SELECT src, rank FROM it WHERE step = {_PR_ITERS}
 
 @query("graph_personalized_pagerank", oracle=_ppr_oracle())
 def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = edge_set(spark, sf_dir, materialize=True)
+    e = checkpoint(edge_set(spark, sf_dir))
     out = (
         e.select(F.col("a").alias("src"), F.col("b").alias("dst"))
         .unionAll(e.select(F.col("b").alias("src"), F.col("a").alias("dst")))
     )
     deg = out.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    links = out.join(deg, "src").localCheckpoint(eager=True)
+    links = checkpoint(out.join(deg, "src"))
     is_seed = F.col("src") % _PPR_SEED_MOD == _PPR_SEED_RES
     n_seeds = deg.filter(is_seed).count()
     init = _PR_SCALE // n_seeds
@@ -1764,11 +1733,11 @@ FROM (SELECT src, score FROM it WHERE step = {_PR_ITERS}
 
 @query("graph_katz_centrality", oracle=_katz_oracle())
 def graph_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = edge_set(spark, sf_dir, materialize=True)
+    e = checkpoint(edge_set(spark, sf_dir))
     out = (
         e.select(F.col("a").alias("src"), F.col("b").alias("dst"))
         .unionAll(e.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
     spine = out.select("src").distinct()
     scores = spine.select("src", F.lit(_KATZ_SCALE).cast("bigint").alias("score"))
     for _ in range(_PR_ITERS):
@@ -1844,7 +1813,7 @@ FROM verts
 def graph_mst_boruvka(spark: SparkSession, sf_dir: str) -> DataFrame:
     we = edge_set(spark, sf_dir).select(
         "a", "b", F.expr(_MST_W_SPARK).alias("w")
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
     inc = we.select(F.col("a").alias("v"), "a", "b", "w").unionAll(
         we.select(F.col("b").alias("v"), "a", "b", "w")
     )
@@ -1907,7 +1876,7 @@ FROM wedges, tri
 """,
 )
 def graph_transitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = edge_set(spark, sf_dir, materialize=True)
+    e = checkpoint(edge_set(spark, sf_dir))
     deg = (
         e.select(F.explode(F.array("a", "b")).alias("node"))
         .groupBy("node")

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from psvm_spark.catalog import load_table
 from psvm_spark.operators.asof import asof_join
 from psvm_spark.operators.rangejoin import band_join
-from psvm_spark.queries._util import dmoney, drate, dsum, one
+from psvm_spark.queries._util import checkpoint, dmoney, drate, dsum, one
 from psvm_spark.registry import query
 from psvm_spark.session import scoped_confs
 
@@ -923,9 +923,9 @@ def join_runtime_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("revenue"),
         )
         # Materialize the plan decision under the overrides: the
-        # memoized localCheckpoint pins both values and physical plan
-        # before the confs are restored.
-        return out.localCheckpoint(eager=True)
+        # checkpoint pins both values and physical plan before the confs
+        # are restored.
+        return checkpoint(out)
 
 
 # --------------------------------------------------------------------------
@@ -947,7 +947,7 @@ def join_runtime_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # splitter 8 map outputs to slice (on a real cluster the thousands of
 # input tasks provide this for free); (b) OptimizeSkewedJoin applies
 # to the join when it is the FINAL stage, so the join materializes via
-# localCheckpoint under the overrides (the join_runtime_bloom_filter
+# a checkpoint under the overrides (the join_runtime_bloom_filter
 # pattern) and the rollup runs after, on the pinned result.  At 100 TB
 # this is the default posture: leave join skew to AQE, reserve manual
 # salting for aggregations and the cases AQE cannot see.
@@ -987,7 +987,7 @@ def join_aqe_skew_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
     with scoped_confs(spark, overrides):
-        pinned = build_skew_join(spark, sf_dir).localCheckpoint(eager=True)
+        pinned = checkpoint(build_skew_join(spark, sf_dir))
     return pinned.groupBy("pri").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("price").cast("double").alias("revenue"),

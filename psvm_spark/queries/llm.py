@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from psvm_spark.catalog import load_table
 from psvm_spark.ml import kernels as K
 from psvm_spark.queries._util import (
+    checkpoint,
     fan_out,
     lit_double_matrix,
     lit_long_array,
@@ -240,7 +241,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize the shingle pass once.
     sh = d.select(
         "doc_id", F.array_distinct(F.expr(_SHINGLE_SPARK)).alias("shingles")
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
     return _jaccard_pairs(sh).select("id_a", "id_b", "jaccard"
     )
 
@@ -362,7 +363,7 @@ def _minhash_lsh_pairs(
     # once instead of re-running the HOF explode per consumer — the same
     # r12 fix dedup_minhash_recall carries (8 parquet scans -> 0 in the
     # final plan).
-    sh = sh.localCheckpoint(eager=True)
+    sh = checkpoint(sh)
     rows_per_band = n_hash // n_bands
     sig_cols = [
         F.array_min(F.expr(f"transform({hash_src}, s -> {hash_expr(k)})")).alias(f"h{k}")
@@ -734,12 +735,11 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # banded feeds both the probe filter and the bucket join; materialize so
     # the quantize + band-hash pass over the embeddings runs once.
-    banded = (
+    banded = checkpoint(
         qv.select("vec_id", F.expr(f"explode(array({band_structs}))").alias("bb"))
         .select(
             "vec_id", F.col("bb.tbl").alias("tbl"), F.col("bb.bucket").alias("bucket")
         )
-        .localCheckpoint(eager=True)
     )
     probes_b = banded.filter(F.col("vec_id") % scale_conf(spark, "sim.probe_modulo") == 0).select(
         F.col("vec_id").alias("i"), "tbl", "bucket"
@@ -1506,7 +1506,7 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("pa.doc_id").alias("ia"), F.col("pb.doc_id").alias("ib"))
         .agg(F.count(F.lit(1)).alias("nshared"))
         .filter(F.col("nshared") >= _CC_MIN_SHARED)
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
     # ^ materialize the candidate-pair join ONCE: connected_components
     # immediately unions pairs with its own column-swap, and without the
     # checkpoint both union branches re-run the expensive shingle
@@ -2533,10 +2533,9 @@ def eval_bleu_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pairs feeds the hyp-gram counts, the ref-gram counts and the
     # corpus-length stats (3 consumers, each re-tokenizing the corpus
     # through the window otherwise) — materialize once
-    pairs = (
+    pairs = checkpoint(
         d.select("doc_id", "tk", F.lead("tk").over(w).alias("rtk"))
         .filter(F.col("rtk").isNotNull())
-        .localCheckpoint(eager=True)
     )
     # unigrams never contain a space and bigrams always do, so BOTH
     # n-gram orders ride one count table per side and one clipping
@@ -3396,10 +3395,9 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # twice.  The per-(vec, subspace) argmin is a map-side-combinable
     # min_by aggregate instead of a ranking window (no sort, partial
     # aggregation before the exchange).
-    dist = (
+    dist = checkpoint(
         subs.join(F.broadcast(cents), "s")
         .select("vec_id", "s", "c", sq_l2(F.col("sv"), F.col("cv")).alias("d"))
-        .localCheckpoint(eager=True)
     )
     codes = dist.groupBy("vec_id", "s").agg(
         F.min_by("c", F.struct("d", "c")).alias("c")
@@ -3522,7 +3520,7 @@ def decontaminate_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the corpus five times (plan showed 10 parquet scans).
     sh = d.select(
         "doc_id", F.array_distinct(F.expr(_SHINGLE_SPARK)).alias("shingles")
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
     ev = sh.filter(F.col("doc_id") % 7 == 0)
     tr = sh.filter(F.col("doc_id") % 7 != 0)
     post_e = ev.select(F.col("doc_id").alias("id_eval"), F.explode("shingles").alias("s"))
@@ -5239,7 +5237,7 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint Catalyst re-runs the regex shingling three times
     sh = d.select(
         "doc_id", F.array_distinct(F.expr(_SHINGLE_SPARK)).alias("shingles")
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
     post = sh.select("doc_id", F.explode("shingles").alias("s"))
     df_tok = post.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
     wdoc = Window.partitionBy("doc_id")
@@ -5335,7 +5333,7 @@ def sample_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sqrt(K.dot(F.col("embedding"), F.col("embedding"))).alias("ne"),
     )
     cosine = F.round(K.dot(F.col("vp"), F.col("ve")) / (F.col("np") * F.col("ne")), 9)
-    scored = (
+    scored = checkpoint(
         corpus.join(F.broadcast(probes), F.col("j") != F.col("i"))
         .select(
             "i",
@@ -5344,7 +5342,6 @@ def sample_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.md5(F.concat_ws(":", "i", "j")).alias("h"),
             F.spark_partition_id().alias("pid"),
         )
-        .localCheckpoint(eager=True)
     )
     # ^ one probes x corpus pass feeds BOTH rankings; checkpoint so the
     # exclusion branch and the candidate branch don't re-score
@@ -5531,7 +5528,7 @@ def dedup_components_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.select(
             "doc_id", F.explode(F.array_distinct(F.expr(_SHINGLE_SPARK))).alias("s")
         )
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
     is_new = F.col("doc_id") % 4 == 0
     post_old = post.filter(~is_new)
     post_new = post.filter(is_new)
@@ -5557,7 +5554,7 @@ def dedup_components_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             | (F.col("a.doc_id") < F.col("b.doc_id"))
         )
         .select(F.col("a.doc_id").alias("pa"), F.col("b.doc_id").alias("pb"))
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
 
     # "Yesterday's labels": read the persisted base CC if present,
     # otherwise backfill it once and persist (see module comment above).
@@ -5597,7 +5594,9 @@ def dedup_components_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # than an extra materialization job for this dimension-sized table
     base_cc = spark.read.parquet(cache)
     lbl = base_cc.select(F.col("v").alias("k"), F.col("component").alias("lbl"))
-    contracted = (
+    # materialize before the CC operator's symmetric union references
+    # it twice — otherwise the two label joins above run twice
+    contracted = checkpoint(
         delta_pairs.join(lbl.withColumnRenamed("k", "ia"), "ia", "left")
         .withColumnRenamed("lbl", "la")
         .join(
@@ -5611,13 +5610,9 @@ def dedup_components_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("ca") != F.col("cb"))
         .distinct()
-        # materialize before the CC operator's symmetric union references
-        # it twice — otherwise the two label joins above run twice
-        .localCheckpoint(eager=True)
     )
-    cc2 = connected_components(contracted, src="ca", dst="cb").localCheckpoint(
-        eager=True
-    )  # [v = root-or-doc, component = merged min]
+    # [v = root-or-doc, component = merged min]
+    cc2 = checkpoint(connected_components(contracted, src="ca", dst="cb"))
     # the merged-root remap is delta-sized by construction — broadcast it
     # so relabeling history never shuffles the big label table
     remap = F.broadcast(
@@ -5864,13 +5859,12 @@ def _bpe_learn(spark: SparkSession, sf_dir: str) -> list[tuple[int, str, str, in
     inherent BPE shape (see vocab_bpe_merges)."""
     sep = _BPE_SEP
     d = fan_out(load_table(spark, sf_dir, "documents"), spark)
-    words = (
+    words = checkpoint(
         d.select(F.explode(F.split("text", " ")).alias("w"))
         .filter(F.col("w") != "")
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select("w", "cnt", _bpe_char_ds("w").alias("ds"))
-        .localCheckpoint(eager=True)
     )
     merges: list[tuple[int, str, str, int]] = []
     for step in range(_BPE_STEPS):
@@ -5895,12 +5889,9 @@ def _bpe_learn(spark: SparkSession, sf_dir: str) -> list[tuple[int, str, str, in
             break
         ta, tb, tc = top[0].a, top[0].b, int(top[0].pcnt)
         merges.append((step, ta, tb, tc))
-        # lazy: the re-fold materializes inside the NEXT step's argmax
-        # job (one job per step instead of two) while still truncating
-        # lineage — each step's fold runs exactly once either way
         words = words.select(
             "w", "cnt", _bpe_merge_fold(ta, tb).alias("ds")
-        ).localCheckpoint(eager=False)
+        ).transform(checkpoint)
     return merges
 
 
@@ -6061,7 +6052,7 @@ def sim_matryoshka_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             cos_pre.alias("cos_pre"),
             F.spark_partition_id().alias("pid"),
         )
-        .localCheckpoint(eager=True)  # one pair pass feeds both rankings
+        .transform(checkpoint)  # one pair pass feeds both rankings
     )
 
     def topk(col):
@@ -6408,7 +6399,7 @@ def sim_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.bit_count(F.expr("pw ^ cw")).alias("hamming"),
             F.spark_partition_id().alias("pid"),
         )
-        .localCheckpoint(eager=True)  # one pair pass feeds both rankings
+        .transform(checkpoint)  # one pair pass feeds both rankings
     )
 
     def topk(order_cols):
@@ -6910,10 +6901,9 @@ def select_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bucket counts AND the per-doc scoring table; materializing it
     # means the corpus is tokenized ONCE (bc -> n, bc -> lr and docb
     # each re-ran the explode+hash pass before: 3 full passes).
-    dball = (
+    dball = checkpoint(
         toks.groupBy("doc_id", "lang", "tlang", "b")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
     )
     bc = dball.groupBy("b").agg(
         F.sum(F.when(F.col("lang") == F.col("tlang"), F.col("c")).otherwise(0)).alias("ct"),
@@ -7132,7 +7122,7 @@ def dedup_substring_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     # One gram-explode pass: the df-cap consumes the postings twice (hot
     # agg + anti-join) and the run finder self-joins the capped postings,
     # so the unmaterialized HOF explode ran 4x (8 scans in the before-plan).
-    grams = substring_gram_postings(d).localCheckpoint(eager=True)
+    grams = checkpoint(substring_gram_postings(d))
     capped = df_capped_postings(grams, s_col="gh", cap=_SUBSTR_GRAM_CAP)
     return substring_runs_from_postings(capped)
 
@@ -7946,13 +7936,12 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cent is consumed by the assignment pass and re-attached to both the
     # cluster residuals and the probe set below — materialize the 10-row
     # centroid table once.
-    cent = (
+    cent = checkpoint(
         dims.groupBy("label", "pos")
         .agg((F.round(F.sum("col"), 6) / F.count(F.lit(1))).alias("c"))
         .groupBy("label")
         .agg(F.array_sort(F.collect_list(F.struct("pos", "c"))).alias("pc"))
         .select(F.col("label").alias("clab"), F.col("pc.c").alias("centroid"))
-        .localCheckpoint(eager=True)
     )
     dist = F.round(K.sq_l2(F.col("embedding"), F.col("centroid")), 6)
     w_assign = Window.partitionBy("vec_id").orderBy(dist.asc(), F.col("clab").asc())
@@ -7960,23 +7949,21 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # assignment (vec_id, clab, rk) — previously this pass ran twice (once
     # for the stored clusters, once for the probe set); centroids re-attach
     # via the 10-row broadcast instead of riding the checkpoint.
-    assign = (
+    assign = checkpoint(
         e.crossJoin(F.broadcast(cent))
         .withColumn("rk", F.row_number().over(w_assign))
         .filter(F.col("rk") <= _IVFPQ_NPROBE)
         .select("vec_id", "clab", "rk")
-        .localCheckpoint(eager=True)
     )
     res_expr = F.zip_with(
         F.col("embedding").cast("array<double>"),
         F.col("centroid"),
         lambda a, b: a - b,
     )
-    clusters = (
+    clusters = checkpoint(
         e.join(assign.filter(F.col("rk") == 1), "vec_id")
         .join(F.broadcast(cent), "clab")
         .select("vec_id", "clab", res_expr.alias("res"))
-        .localCheckpoint(eager=True)
     )
     subs = clusters.select(
         "vec_id",
@@ -8190,7 +8177,7 @@ def text_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sides all re-derive the shingle HOF otherwise (24 parquet scans).
     sh = d.select(
         "doc_id", F.array_distinct(F.expr(_SHINGLE_SPARK)).alias("shingles")
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
     post = df_capped_postings(sh.select("doc_id", F.explode("shingles").alias("s")))
     cand = (
         post.alias("pa")
@@ -8303,7 +8290,7 @@ def select_facility_location(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     p = g.select(F.col("vec_id").alias("pid"), F.col("q").alias("pq"))
     s = g.select(F.col("vec_id").alias("sid"), F.col("q").alias("sq"))
-    sims = (
+    sims = checkpoint(
         p.join(F.broadcast(s), F.lit(True))
         .select(
             "pid",
@@ -8317,7 +8304,6 @@ def select_facility_location(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(0).cast("long"),
             ).alias("sim"),
         )
-        .localCheckpoint(eager=True)
     )
     first = (
         sims.groupBy("sid")
@@ -8722,7 +8708,7 @@ def select_rho_excess_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     # COALESCE(r.c_ref, 0)); materialized once because it feeds the
     # weight table AND the corpus-total scalars below — the corpus is
     # tokenized exactly twice (here + the per-doc scoring pass), not 6x.
-    cur = (
+    cur = checkpoint(
         tok.groupBy("tok")
         .agg(
             F.count(F.lit(1)).alias("c_cur"),
@@ -8730,7 +8716,6 @@ def select_rho_excess_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.when(F.col("source").isin(*_RHO_REF_SRC), 1).otherwise(0)
             ).alias("c_ref"),
         )
-        .localCheckpoint(eager=True)
     )
     wts = cur.select(
         "tok",
@@ -8892,7 +8877,7 @@ def vocab_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab = words.select("w").distinct().select("w", _bpe_char_ds("w").alias("ds"))
     for _, ta, tb, _cnt in merges:
         vocab = vocab.select("w", _bpe_merge_fold(ta, tb).alias("ds"))
-    words = words.join(vocab.localCheckpoint(eager=True), "w")
+    words = words.join(checkpoint(vocab), "w")
     return words.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_words"),
         F.sum(F.length("w")).cast("bigint").alias("n_chars"),
@@ -10100,7 +10085,10 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = toks.select(
         "doc_id", "lang", (F.col("pos") - 1).alias("pos"), F.col("w").alias("wb")
     )
-    pairs = (
+    # Materialize the co-occurrence graph ONCE: deg, nv, links and
+    # the rank seed each re-derive the token self-join otherwise
+    # (the per-iteration broadcast(nv) multiplied it to 96 scans).
+    pairs = checkpoint(
         a.join(b, ["doc_id", "lang", "pos"])
         .filter(F.col("wa") != F.col("wb"))
         .join(vocab.withColumnRenamed("w", "wa"), ["lang", "wa"], "left_semi")
@@ -10111,17 +10099,13 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.greatest("wa", "wb").alias("y"),
         )
         .distinct()
-        # Materialize the co-occurrence graph ONCE: deg, nv, links and
-        # the rank seed each re-derive the token self-join otherwise
-        # (the per-iteration broadcast(nv) multiplied it to 96 scans).
-        .localCheckpoint(eager=True)
     )
     oe = pairs.select("lang", F.col("x").alias("src"), F.col("y").alias("dst")).unionAll(
         pairs.select("lang", F.col("y").alias("src"), F.col("x").alias("dst"))
     )
     deg = oe.groupBy("lang", "src").agg(F.count(F.lit(1)).alias("outdeg"))
-    links = oe.join(deg, ["lang", "src"]).localCheckpoint(eager=True)
-    nv = deg.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    links = checkpoint(oe.join(deg, ["lang", "src"]))
+    nv = checkpoint(deg.groupBy("lang").agg(F.count(F.lit(1)).alias("n")))
     ranks = deg.join(F.broadcast(nv), "lang").select(
         "lang", "src", F.expr(f"cast({_TR_SCALE} div n as bigint)").alias("rank")
     )
@@ -10257,7 +10241,7 @@ def ml_spearman_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spend is consumed five times (twice inside each _avg_rank2 + the
     # pr spine join); materialize the customer|x|orders rollup once so
     # the join+aggregate subtree is not re-planned per consumer.
-    spend = (
+    spend = checkpoint(
         c.join(o, c.c_custkey == o.o_custkey, "left")
         .groupBy("c_custkey")
         .agg(
@@ -10270,7 +10254,6 @@ def ml_spearman_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(0),
             ).alias("sp_c"),
         )
-        .localCheckpoint(eager=True)
     )
     ra = _avg_rank2(spend, "bal_c", 16384).withColumnRenamed("r2", "x")
     rb = _avg_rank2(spend, "sp_c", 1 << 24).withColumnRenamed("r2", "y")
@@ -10786,7 +10769,7 @@ def ml_lof_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The O(n^2) pair join + ranking window feeds kd and knn, each
     # consumed twice downstream; keep only the r <= K rows (K per point)
     # and materialize them once so the quadratic subtree runs once.
-    knn_full = rk.filter(F.col("r") <= _LOF_K).localCheckpoint(eager=True)
+    knn_full = checkpoint(rk.filter(F.col("r") <= _LOF_K))
     kd = knn_full.filter(F.col("r") == _LOF_K).select("i", F.col("d2").alias("kdist"))
     knn = knn_full.select("i", "j", "d2")
     reach = knn.join(
@@ -10799,7 +10782,7 @@ def ml_lof_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.sum(F.col("rd").cast("decimal(18,9)")).cast("double"),
             9,
         ).alias("lrd")
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
     lof = (
         knn.join(lrd.select(F.col("i").alias("j"), F.col("lrd").alias("lrd_j")), "j")
         .join(lrd, "i")
@@ -11258,16 +11241,13 @@ def dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shingle pass once instead of re-running the HOF explode per consumer.
     sh = d.select(
         "doc_id", F.array_distinct(F.expr(_SHINGLE_SPARK)).alias("shingles")
-    ).localCheckpoint(eager=True)
-    # eager: truth/lsh each feed TWO concurrent broadcast-exchange jobs
-    # (their own count + the hit join) — a lazy checkpoint lets the
-    # concurrent builds race and each recompute the expensive subtree
-    # (the ADVICE-r12 leiden race, same shape).
+    ).transform(checkpoint)
+    # truth/lsh each feed two consumers (their own count + the hit join)
     truth = (
         _jaccard_pairs(sh)
         .filter(F.col("jaccard") >= 0.5)
         .select("id_a", "id_b")
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
     sig_cols = [
         F.array_min(
             F.expr(f"transform(shingles, s -> substring(md5('r{k}:' || s), 1, 16))")
@@ -11291,7 +11271,7 @@ def dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("ba.doc_id") < F.col("bb.doc_id"))
         .select(F.col("ba.doc_id").alias("id_a"), F.col("bb.doc_id").alias("id_b"))
         .distinct()
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
     n_truth = truth.agg(F.count(F.lit(1)).alias("n_truth"))
     n_lsh = lsh.agg(F.count(F.lit(1)).alias("n_lsh_pairs"))
     n_hit = truth.join(lsh, ["id_a", "id_b"]).agg(
@@ -11507,9 +11487,7 @@ def ml_auc_delong_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         "nn_s",
         F.coalesce(F.sum("nn_s").over(w_up), F.lit(0)).alias("neg_below"),
         F.coalesce(F.sum("np_s").over(w_dn), F.lit(0)).alias("pos_above"),
-        # eager: tot's broadcast build and the main ss job are concurrent
-        # consumers — lazy lets them race and recompute cum (ADVICE r12).
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
     tot = cum.agg(
         F.sum("np_s").cast("bigint").alias("m"),
         F.sum("nn_s").cast("bigint").alias("n"),
@@ -11716,7 +11694,7 @@ def ml_permutation_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         "t_vec",
         F.coalesce(F.lead("t_vec").over(w), F.first("t_vec").over(w_full)).alias("nxt"),
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
     base = shifted.select(F.lit(0).alias("dim"), "t_id", "label", F.col("t_vec").alias("v"))
     dims = local_df(spark, [(d,) for d in _PERM_DIMS], "dim int")
     perm = (
@@ -11746,7 +11724,7 @@ def ml_permutation_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     acc = scored.groupBy("dim").agg(
         F.count(F.lit(1)).alias("n_test"),
         F.sum(F.when(pred == truth, 1).otherwise(0)).cast("bigint").alias("n_correct"),
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
     b = acc.filter(F.col("dim") == 0).select(
         (F.col("n_correct").cast("double") / F.col("n_test")).alias("acc_base_raw")
     )
@@ -11953,7 +11931,7 @@ def ml_label_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         "score",
         F.row_number().over(w).alias("rn"),
         F.count(F.lit(1)).over(w_full).alias("n"),
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
     shifts = spark.range(1, _LPERM_SHIFTS + 1).select(F.col("id").cast("int").alias("s"))
     b = ranked.select(F.col("rn").alias("brn"), F.col("label").alias("plabel"))
     pred_of = lambda score: F.when(score >= 0, 1).otherwise(-1)  # noqa: E731
@@ -12685,7 +12663,7 @@ def ml_learning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("y").alias("sy"),
         F.sum(F.col("x") * F.col("y")).alias("sxy"),
         F.sum(F.col("y") * F.col("y")).alias("syy"),
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
     grid = local_df(spark, [(int(k),) for k in _LC_KS], "k bigint")
     tr = (
         grid.join(F.broadcast(bs), F.col("b") < F.col("k"))
@@ -12817,7 +12795,7 @@ def ml_kfold_cv_ridge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("y").alias("sy"),
         F.sum(F.col("x") * F.col("y")).alias("sxy"),
         F.sum(F.col("y") * F.col("y")).alias("syy"),
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
     tot = fs.agg(
         F.sum("n").alias("tn"),
         F.sum("sx").alias("tsx"),

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from psvm_spark.catalog import load_table
 from psvm_spark.registry import query
-from psvm_spark.queries._util import local_df, scratch_dir
+from psvm_spark.queries._util import checkpoint, local_df, scratch_dir
 from psvm_spark.session import scoped_confs
 
 # --------------------------------------------------------------------------
@@ -668,4 +668,4 @@ def scan_pyds_filter_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("bal_c").alias("bal_c_sum"),
         )
         # pin plan + values while the pushdown conf is on
-        return agg.localCheckpoint(eager=True)
+        return checkpoint(agg)

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from psvm_spark.catalog import load_events_range, load_table
 from psvm_spark.registry import query
-from psvm_spark.queries._util import local_df, scratch_dir
+from psvm_spark.queries._util import checkpoint, local_df, scratch_dir
 from psvm_spark.session import scoped_confs
 
 # --------------------------------------------------------------------------
@@ -2627,7 +2627,7 @@ def warehouse_merge_cow_vs_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONCE: every downstream job (cow rewrite, dv, delta, both merge
     # reads, the stats rollup) previously re-scanned the base parquet —
     # 7 scans -> 1.  After the checkpoint _file/_pos are plain columns.
-    base = (
+    base = checkpoint(
         spark.read.parquet(f"{root}/base")
         .select(
             "o_orderkey",
@@ -2636,7 +2636,6 @@ def warehouse_merge_cow_vs_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("_metadata.file_path").alias("_file"),
             F.col("_metadata.row_index").alias("_pos"),
         )
-        .localCheckpoint(eager=True)
     )
     is_upd = F.pmod("o_orderkey", F.lit(_MERGE_UPD_MOD)) == _MERGE_UPD_RES
     is_ins = F.pmod("o_orderkey", F.lit(_MERGE_INS_MOD)) == _MERGE_INS_RES
@@ -2964,10 +2963,9 @@ def warehouse_clustering_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.min("d").alias("lo"), F.max("d").alias("hi")).select(
         F.lit("by_date").alias("layout"), "f", "lo", "hi"
     )
-    # eager: manifest feeds three consumers whose map stages schedule
-    # concurrently (both union branches of pts, files, depth) — lazy
-    # lets them race on the unpersisted partitions (ADVICE r12).
-    manifest = by_cust.unionAll(by_date).localCheckpoint(eager=True)
+    # manifest feeds three consumers (both union branches of pts, files,
+    # depth)
+    manifest = checkpoint(by_cust.unionAll(by_date))
     pts = (
         manifest.select("layout", F.col("lo").alias("pt"), F.lit(1).alias("delta"))
         .unionAll(

@@ -1226,12 +1226,13 @@ class TestLouvainRound:
         same labels."""
         from pyspark.sql import functions as F
 
+        from psvm_spark.queries._util import checkpoint
         from psvm_spark.queries.graph import edge_set
         from psvm_spark.registry import QUERIES, load_all
 
         load_all()
         row = QUERIES["graph_louvain_round"](spark, sf_dir).collect()[0]
-        e = edge_set(spark, sf_dir, materialize=True)
+        e = checkpoint(edge_set(spark, sf_dir))
         m = e.count()
         adj = e.selectExpr("a as x", "b as n").unionAll(
             e.selectExpr("b as x", "a as n")

@@ -47,6 +47,8 @@ import math
 
 from pyspark.sql import DataFrame
 
+from psvm_spark.ml.kernels import SCALE
+
 _OUT_SCHEMA = "step int, pivot_vec_id bigint, resid_fp bigint"
 
 
@@ -76,6 +78,7 @@ def icf_pivots(df: DataFrame, rank: int) -> DataFrame:
 
     # NOTE: the closure must be self-contained (no psvm_spark imports) —
     # executor Python workers don't have this repo on their sys.path.
+    # The int SCALE it reads ships by value with the closure's globals.
     def run_rank(batches):
         import json
         import math
@@ -95,7 +98,7 @@ def icf_pivots(df: DataFrame, rank: int) -> DataFrame:
         X = np.zeros((0, 0))
         if frames:
             X = np.stack([np.asarray(v, np.float64) for f in frames for v in f["embedding"]])
-        Q = np.floor(X * 1000.0 + 0.5).astype(np.int64)
+        Q = np.floor(X * float(SCALE) + 0.5).astype(np.int64)
         resid = (Q * Q).sum(axis=1).astype(np.float64)
         H = np.zeros((len(ids), rank))
 

@@ -30,6 +30,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType
 
 from psvm_spark.catalog import load_table
+from psvm_spark.ml import kernels as K
+from psvm_spark.session import SCALE_CONFS, scale_conf
 
 
 def _rbf_cross(X: np.ndarray, L: np.ndarray, gamma: float) -> np.ndarray:
@@ -249,3 +251,57 @@ def rff_map(
         return pd.Series(list(feats))
 
     return df.withColumn(out_col, phi(F.col(vec_col)))
+
+
+# ---------------------------------------------------------------------------
+# The fixed synthetic model f(x) = sum_i alpha_i y_i K(s_i, x) + b
+# [psvm:model.cc] that svm_predict_score and the eval keys built on it
+# score: RBF with GAMMA, deterministic alpha_y per support vector, so
+# both the Spark side (sv_test) and the oracle (SCORE_SQL's `scored`
+# CTE) are fully relational.
+
+GAMMA = 0.5
+SVM_B = 0.05
+
+# In a real deployment the support-vector set is a fixed-size model
+# artifact and the eval set a fixed panel; neither grows with the
+# corpus.  ``vec_id % 20`` slices model that on the gate fixtures, but
+# at amplification a plain modulus makes the SV x test pair volume grow
+# quadratically with the corpus.  The scale harness raises the
+# ``svm.sv_modulo`` / ``svm.test_modulo`` scale confs by the amp factor
+# so each slice stays base-sized; the oracles pin the defaults.
+SV_MOD, SV_RES = SCALE_CONFS["svm.sv_modulo"], 0  # support-vector shard
+TS_MOD, TS_RES = SCALE_CONFS["svm.test_modulo"], 1  # test shard
+
+
+def sv_test(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(support vectors, test panel) of the fixed synthetic model."""
+    sv_mod, ts_mod = scale_conf(spark, "svm.sv_modulo"), scale_conf(spark, "svm.test_modulo")
+    e = load_table(spark, sf_dir, "embeddings")
+    sv = e.filter(F.col("vec_id") % sv_mod == SV_RES).select(
+        F.col("vec_id").alias("sv_id"),
+        F.col("embedding").alias("sv_vec"),
+        (((F.col("vec_id") % 7).cast("double") - 3.0) * 0.1).alias("alpha_y"),
+    )
+    test = e.filter(F.col("vec_id") % ts_mod == TS_RES).select(
+        F.col("vec_id").alias("t_id"), F.col("embedding").alias("t_vec"), "label"
+    )
+    return sv, test
+
+
+SCORE_SQL = f"""
+WITH sv AS (
+  SELECT vec_id AS sv_id, embedding AS sv_vec,
+         (CAST(vec_id % 7 AS DOUBLE) - 3.0) * 0.1 AS alpha_y
+  FROM embeddings WHERE vec_id % {SV_MOD} = {SV_RES}
+), tst AS (
+  SELECT vec_id AS t_id, embedding AS t_vec, label
+  FROM embeddings WHERE vec_id % {TS_MOD} = {TS_RES}
+), scored AS (
+  SELECT t.t_id, t.label,
+         round(SUM(sv.alpha_y * exp(-{GAMMA} * {K.sql_sq_l2('sv.sv_vec', 't.t_vec')}))
+               + {SVM_B}, 6) AS score
+  FROM tst t CROSS JOIN sv
+  GROUP BY t.t_id, t.label
+)
+"""

@@ -19,6 +19,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
+from pyspark.sql.types import ArrayType, MapType, StructType
 
 from psvm_spark.catalog import TABLES
 from psvm_spark.session import SCALE_CONFS, ensure_session_invariants, scale_conf
@@ -105,6 +106,18 @@ def compare_query(
     # as in the driver contract's queries() wrapper
     ensure_session_invariants(spark)
     sdf = registry.QUERIES[name](spark, sf_dir)
+    # The driver's value hasher sorts object cells and throws on arrays,
+    # maps and structs, so an oracled key must emit scalar columns only.
+    # _canon_cell would flatten them and pass; fail here instead.
+    nested = [
+        f"{f.name}: {f.dataType.simpleString()}"
+        for f in sdf.schema.fields
+        if isinstance(f.dataType, (ArrayType, MapType, StructType))
+    ]
+    if nested:
+        return CompareResult(
+            name, False, 0, 0, ["nested output column(s): " + "; ".join(nested)]
+        )
     spdf = sdf.toPandas()
     own_con = con is None
     if own_con:

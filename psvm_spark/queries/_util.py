@@ -188,12 +188,11 @@ def fan_out(df, spark):
     split-count proxy is ``df.inputFiles()``, a pure metadata call.  A
     derived plan with no file provenance returns [] and falls through
     to repartition, which is the right call for the small inputs this
-    helper is documented for."""
+    helper is documented for.  An error from ``inputFiles`` propagates:
+    a DataFrame that cannot report its files is a bug to see, not a
+    reason to guess a file count."""
     want = spark.sparkContext.defaultParallelism
-    try:
-        nfiles = len(df.inputFiles())
-    except Exception:
-        nfiles = 0
+    nfiles = len(df.inputFiles())
     return df.repartition(want) if nfiles < want else df
 
 

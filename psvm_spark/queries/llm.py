@@ -22,12 +22,18 @@ from pyspark.sql import functions as F
 
 from psvm_spark.catalog import load_table
 from psvm_spark.ml import kernels as K
+from psvm_spark.ml.kmeans import (
+    lattice_d2,
+    lloyd_exact_assign,
+    lloyd_exact_ctes,
+    lloyd_exact_train,
+)
+from psvm_spark.ml.svm import GAMMA, SCORE_SQL, SVM_B, TS_RES, sv_test
 from psvm_spark.queries._util import (
     checkpoint,
     fan_out,
     lit_double_matrix,
     lit_long_array,
-    lit_long_matrix,
     local_df,
 )
 from psvm_spark.registry import query
@@ -661,28 +667,21 @@ def _ann_rvec(t: int, h: int) -> list[int]:
     ]
 
 
-_ANN_Q = "(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000.0 + 0.5) AS BIGINT))"
-
-
 def _ann_bucket_spark(t: int) -> str:
-    parts = []
-    for h in range(_ANN_HASHES):
-        arr = ", ".join(f"{s}L" for s in _ann_rvec(t, h))
-        parts.append(
-            f"CAST((aggregate(zip_with(q, array({arr}), (x, r) -> x * r), 0L,"
-            f" (a, x) -> a + x) + {_ANN_BIAS}L) div {_ANN_W}L AS STRING)"
-        )
+    # over the projections p{t}_{h} = qdot(q, rvec(t, h)) of sim_ann_lsh
+    parts = [
+        f"CAST((p{t}_{h} + {_ANN_BIAS}L) div {_ANN_W}L AS STRING)"
+        for h in range(_ANN_HASHES)
+    ]
     return "concat_ws(':', " + ", ".join(parts) + ")"
 
 
 def _ann_bucket_duck(t: int) -> str:
     parts = []
     for h in range(_ANN_HASHES):
-        arr = ", ".join(str(s) for s in _ann_rvec(t, h))
+        rvec = "([" + ", ".join(str(s) for s in _ann_rvec(t, h)) + "])"
         parts.append(
-            f"CAST((CAST(list_sum(list_transform(range(1, {_ANN_DIM + 1}),"
-            f" i -> q[i] * ([{arr}])[i])) AS BIGINT) + {_ANN_BIAS})"
-            f" // {_ANN_W} AS VARCHAR)"
+            f"CAST(({K.sql_qdot('q', rvec)} + {_ANN_BIAS}) // {_ANN_W} AS VARCHAR)"
         )
     return " || ':' || ".join(parts)
 
@@ -696,7 +695,8 @@ def _ann_oracle() -> str:
     )
     return f"""
 WITH qv AS (
-  SELECT vec_id, list_transform{_ANN_Q} AS q FROM embeddings
+  SELECT vec_id, list_transform(embedding, x -> {K.sql_quantize('x')}) AS q
+  FROM embeddings
 ),
 banded AS MATERIALIZED (
   SELECT vec_id, bb['tbl'] AS tbl, bb['bucket'] AS bucket
@@ -728,7 +728,15 @@ SELECT i, j, l2_dist, rnk FROM ranked WHERE rnk <= 10
 @query("sim_ann_lsh", oracle=_ann_oracle())
 def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = fan_out(load_table(spark, sf_dir, "embeddings"), spark)
-    qv = e.select("vec_id", F.expr(f"transform{_ANN_Q}").alias("q"))
+    qv = e.select("vec_id", F.transform("embedding", K.quantize).alias("q"))
+    proj = qv.select(
+        "vec_id",
+        *(
+            K.qdot(F.col("q"), lit_long_array(_ann_rvec(t, h))).alias(f"p{t}_{h}")
+            for t in range(_ANN_TABLES)
+            for h in range(_ANN_HASHES)
+        ),
+    )
     band_structs = ", ".join(
         f"struct({t} AS tbl, {_ann_bucket_spark(t)} AS bucket)"
         for t in range(_ANN_TABLES)
@@ -736,7 +744,7 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # banded feeds both the probe filter and the bucket join; materialize so
     # the quantize + band-hash pass over the embeddings runs once.
     banded = checkpoint(
-        qv.select("vec_id", F.expr(f"explode(array({band_structs}))").alias("bb"))
+        proj.select("vec_id", F.expr(f"explode(array({band_structs}))").alias("bb"))
         .select(
             "vec_id", F.col("bb.tbl").alias("tbl"), F.col("bb.bucket").alias("bucket")
         )
@@ -772,7 +780,7 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # IVF-style ANN (B48 family, SQL-oracle-able variant).  Coarse quantizer
 # = per-label centroids (deterministic — no k-means RNG); every vector is
 # assigned to its nearest centroid (one broadcast of 10x64 doubles + one
-# codegen'd map pass, no shuffle); a probe searches only the nprobe
+# JVM map pass, no shuffle); a probe searches only the nprobe
 # nearest inverted lists.  At 100 TB the corpus is *stored* partitioned
 # by cluster id, so a probe touches nprobe partitions instead of all of
 # them — the candidate join below shuffles only on the small cluster key.
@@ -1148,7 +1156,7 @@ def vec_group_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "vec_centroid_dist",
-    oracle="""
+    oracle=f"""
 WITH dims AS (
   SELECT label, u.dim, u.v
   FROM embeddings,
@@ -1160,9 +1168,7 @@ WITH dims AS (
   SELECT label, list(c ORDER BY dim) AS centroid FROM cent GROUP BY label
 ), dists AS (
   SELECT e.label, e.vec_id,
-         sqrt(list_aggregate(list_transform(list_zip(e.embedding, ca.centroid),
-              p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))
-                   * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))), 'sum')) AS dist
+         sqrt({K.sql_sq_l2('e.embedding', 'ca.centroid')}) AS dist
   FROM embeddings e JOIN cent_arr ca ON e.label = ca.label
 )
 SELECT label, COUNT(*) AS n, round(SUM(dist), 6) / COUNT(*) AS mean_dist
@@ -1888,12 +1894,12 @@ def text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # of `sim_ivf` (whose label-centroid quantizer pins the IVF *query*
 # shape; this key proves the trained-quantizer pipeline end to end).
 # ORACLE-EXACT since round 8 (verdict item 2): the quantizer is the
-# integer-lattice Lloyd from queries/ml.py (lloyd_exact_train — every
+# integer-lattice Lloyd from ml/kmeans.py (lloyd_exact_train — every
 # centroid coordinate an exact integer, floor-of-mean updates with the
 # positivity-bias floor division), so corpus assignment, probe
 # nprobe-selection (integer d2, ties toward the lower cluster id on
 # both engines), and the final rounded-cosine rank all replay bitwise
-# in DuckDB via the same unrolled CTE prefix (_kml_cte_prefix(k=8)).
+# in DuckDB via the same unrolled CTE prefix (lloyd_exact_ctes(k=8)).
 #
 # Distribution shape at 100 TB: training is the psvm A10 loop (narrow
 # assignment with k x 64 centroid literals in the plan + one
@@ -1911,10 +1917,8 @@ _IVFK_ITERS = 3
 
 
 def _ivfk_oracle() -> str:
-    from psvm_spark.queries.ml import _kml_cte_prefix
-
     return f"""
-WITH {_kml_cte_prefix(k=_IVFK_K, iters=_IVFK_ITERS)},
+WITH {lloyd_exact_ctes(_IVFK_K, _IVFK_ITERS)},
 probe_nd AS (
   SELECT vec_id, cluster,
          ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cluster) AS rk
@@ -1942,12 +1946,10 @@ SELECT i, j, cosine, rank FROM ranked WHERE rank <= {_IVF_TOPK}
 
 @query("sim_ivf_kmeans", oracle=_ivfk_oracle())
 def sim_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from psvm_spark.queries.ml import _kml_assign, lloyd_exact_train
-
-    qv, cents = lloyd_exact_train(spark, sf_dir, k=_IVFK_K, iters=_IVFK_ITERS)
+    qv, cents = lloyd_exact_train(spark, sf_dir, _IVFK_K, _IVFK_ITERS)
     e = load_table(spark, sf_dir, "embeddings")
     corpus = (
-        _kml_assign(qv, cents)
+        lloyd_exact_assign(qv, cents)
         .select("vec_id", "cluster")
         .join(e, "vec_id")
         .select(
@@ -1957,11 +1959,6 @@ def sim_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cluster",
         )
     )
-    lit = lit_long_matrix(cents)
-    d_expr = (
-        "transform(cents, c -> aggregate(zip_with(q, c, (a, b) ->"
-        " (a - b) * (a - b)), 0L, (s, x) -> s + x))"
-    )
     nprobe_expr = (
         "slice(transform(array_sort(zip_with(d, sequence(0, size(d) - 1),"
         " (x, i) -> struct(x AS dist, i AS idx))), s -> s.idx), 1, "
@@ -1969,8 +1966,7 @@ def sim_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     probe_c = (
         qv.filter(F.col("vec_id") % scale_conf(spark, "sim.probe_modulo") == 0)
-        .withColumn("cents", lit)
-        .withColumn("d", F.expr(d_expr))
+        .withColumn("d", lattice_d2(cents))
         .select(
             F.col("vec_id").alias("i"),
             F.explode(F.expr(nprobe_expr)).alias("cl_raw"),
@@ -2949,17 +2945,10 @@ def sample_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per bin.  Same broadcast-SV scoring shape as svm_predict_score plus
 # one skinny aggregation.
 
-from psvm_spark.queries.ml import (  # noqa: E402
-    GAMMA as _CAL_GAMMA,
-    SVM_B as _CAL_B,
-    _SCORE_SQL as _CAL_SCORE_SQL,
-    _sv_test as _cal_sv_test,
-)
-
 
 @query(
     "ml_calibration_bins",
-    oracle=_CAL_SCORE_SQL
+    oracle=SCORE_SQL
     + """
 SELECT CAST(least(greatest(floor((score + 1.0) / 0.25), -1), 8) AS BIGINT) AS bin,
        COUNT(*) AS n,
@@ -2969,12 +2958,12 @@ FROM scored GROUP BY 1
 """,
 )
 def ml_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sv, test = _cal_sv_test(spark, sf_dir)
-    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), _CAL_GAMMA)
+    sv, test = sv_test(spark, sf_dir)
+    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
     scored = (
         test.crossJoin(F.broadcast(sv))
         .groupBy("t_id", "label")
-        .agg(F.round(F.sum(F.col("alpha_y") * k) + _CAL_B, 6).alias("score"))
+        .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
     )
     binned = scored.select(
         F.expr(
@@ -3552,7 +3541,7 @@ def decontaminate_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ml_confusion_matrix",
-    oracle=_CAL_SCORE_SQL
+    oracle=SCORE_SQL
     + """,
 cm AS (
   SELECT CAST(SUM(CASE WHEN score >= 0 AND label < 5 THEN 1 ELSE 0 END) AS BIGINT) AS tp,
@@ -3569,12 +3558,12 @@ FROM cm
 """,
 )
 def ml_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sv, test = _cal_sv_test(spark, sf_dir)
-    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), _CAL_GAMMA)
+    sv, test = sv_test(spark, sf_dir)
+    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
     scored = (
         test.crossJoin(F.broadcast(sv))
         .groupBy("t_id", "label")
-        .agg(F.round(F.sum(F.col("alpha_y") * k) + _CAL_B, 6).alias("score"))
+        .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
     )
     pred_pos = F.col("score") >= 0
     actual_pos = F.col("label") < 5
@@ -3610,7 +3599,7 @@ def ml_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ml_roc_auc",
-    oracle=_CAL_SCORE_SQL
+    oracle=SCORE_SQL
     + """,
 cnts AS (
   SELECT score,
@@ -3633,12 +3622,12 @@ FROM agg
 """,
 )
 def ml_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sv, test = _cal_sv_test(spark, sf_dir)
-    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), _CAL_GAMMA)
+    sv, test = sv_test(spark, sf_dir)
+    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
     scored = (
         test.crossJoin(F.broadcast(sv))
         .groupBy("t_id", "label")
-        .agg(F.round(F.sum(F.col("alpha_y") * k) + _CAL_B, 6).alias("score"))
+        .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
     )
     cnts = scored.groupBy("score").agg(
         F.sum((F.col("label") < 5).cast("int")).alias("np_s"),
@@ -3676,7 +3665,7 @@ def ml_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ml_pr_curve",
-    oracle=_CAL_SCORE_SQL
+    oracle=SCORE_SQL
     + """,
 cnts AS (
   SELECT score,
@@ -3700,12 +3689,12 @@ FROM cum c CROSS JOIN tot t
 """,
 )
 def ml_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sv, test = _cal_sv_test(spark, sf_dir)
-    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), _CAL_GAMMA)
+    sv, test = sv_test(spark, sf_dir)
+    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
     scored = (
         test.crossJoin(F.broadcast(sv))
         .groupBy("t_id", "label")
-        .agg(F.round(F.sum(F.col("alpha_y") * k) + _CAL_B, 6).alias("score"))
+        .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
     )
     cnts = scored.groupBy("score").agg(
         F.sum((F.col("label") < 5).cast("int")).alias("np_s"),
@@ -3825,7 +3814,7 @@ def dq_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ml_lift_deciles",
-    oracle=_CAL_SCORE_SQL
+    oracle=SCORE_SQL
     + """,
 cnts AS (
   SELECT score,
@@ -3851,12 +3840,12 @@ GROUP BY d.decile, t.npos, t.n
 """,
 )
 def ml_lift_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sv, test = _cal_sv_test(spark, sf_dir)
-    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), _CAL_GAMMA)
+    sv, test = sv_test(spark, sf_dir)
+    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
     scored = (
         test.crossJoin(F.broadcast(sv))
         .groupBy("t_id", "label")
-        .agg(F.round(F.sum(F.col("alpha_y") * k) + _CAL_B, 6).alias("score"))
+        .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
     )
     cnts = scored.groupBy("score").agg(
         F.sum((F.col("label") < 5).cast("int")).alias("np_s"),
@@ -3966,7 +3955,7 @@ def sim_binary_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ml_ks_statistic",
-    oracle=_CAL_SCORE_SQL
+    oracle=SCORE_SQL
     + """,
 cnts AS (
   SELECT score,
@@ -3993,12 +3982,12 @@ ORDER BY g.gap DESC, g.score LIMIT 1
 """,
 )
 def ml_ks_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sv, test = _cal_sv_test(spark, sf_dir)
-    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), _CAL_GAMMA)
+    sv, test = sv_test(spark, sf_dir)
+    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
     scored = (
         test.crossJoin(F.broadcast(sv))
         .groupBy("t_id", "label")
-        .agg(F.round(F.sum(F.col("alpha_y") * k) + _CAL_B, 6).alias("score"))
+        .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
     )
     cnts = scored.groupBy("score").agg(
         F.sum((F.col("label") < 5).cast("int")).alias("np_s"),
@@ -4125,7 +4114,7 @@ def pipeline_incremental_curation(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @query(
     "ml_psi_drift",
-    oracle=_CAL_SCORE_SQL
+    oracle=SCORE_SQL
     + """,
 binned AS (
   SELECT CAST(least(greatest(floor((score + 1.0) / 0.25), -1), 8) AS BIGINT) AS bin,
@@ -4150,12 +4139,12 @@ FROM terms
 """,
 )
 def ml_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sv, test = _cal_sv_test(spark, sf_dir)
-    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), _CAL_GAMMA)
+    sv, test = sv_test(spark, sf_dir)
+    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
     scored = (
         test.crossJoin(F.broadcast(sv))
         .groupBy("t_id", "label")
-        .agg(F.round(F.sum(F.col("alpha_y") * k) + _CAL_B, 6).alias("score"))
+        .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
     )
     binned = scored.select(
         F.expr(
@@ -4256,7 +4245,7 @@ def sample_class_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ml_threshold_f1max",
-    oracle=_CAL_SCORE_SQL
+    oracle=SCORE_SQL
     + """,
 cnts AS (
   SELECT score,
@@ -4283,12 +4272,12 @@ FROM f1s ORDER BY f1 DESC, score LIMIT 1
 """,
 )
 def ml_threshold_f1max(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sv, test = _cal_sv_test(spark, sf_dir)
-    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), _CAL_GAMMA)
+    sv, test = sv_test(spark, sf_dir)
+    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
     scored = (
         test.crossJoin(F.broadcast(sv))
         .groupBy("t_id", "label")
-        .agg(F.round(F.sum(F.col("alpha_y") * k) + _CAL_B, 6).alias("score"))
+        .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
     )
     cnts = scored.groupBy("score").agg(
         F.sum((F.col("label") < 5).cast("int")).alias("np_s"),
@@ -4665,7 +4654,7 @@ def dq_duplicate_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ml_ece_calibration",
-    oracle=_CAL_SCORE_SQL
+    oracle=SCORE_SQL
     + """,
 binned AS (
   SELECT CAST(least(greatest(floor((score + 1.0) / 0.25), -1), 8) AS BIGINT) AS bin,
@@ -4689,12 +4678,12 @@ FROM terms
 """,
 )
 def ml_ece_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sv, test = _cal_sv_test(spark, sf_dir)
-    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), _CAL_GAMMA)
+    sv, test = sv_test(spark, sf_dir)
+    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
     scored = (
         test.crossJoin(F.broadcast(sv))
         .groupBy("t_id", "label")
-        .agg(F.round(F.sum(F.col("alpha_y") * k) + _CAL_B, 6).alias("score"))
+        .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
     )
     binned = scored.select(
         F.expr(
@@ -5380,7 +5369,7 @@ def sample_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ml_auc_by_group",
-    oracle=_CAL_SCORE_SQL
+    oracle=SCORE_SQL
     + """,
 seg AS (
   SELECT t_id % 3 AS segment, label, score FROM scored),
@@ -5406,12 +5395,12 @@ FROM agg
 """,
 )
 def ml_auc_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sv, test = _cal_sv_test(spark, sf_dir)
-    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), _CAL_GAMMA)
+    sv, test = sv_test(spark, sf_dir)
+    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
     scored = (
         test.crossJoin(F.broadcast(sv))
         .groupBy("t_id", "label")
-        .agg(F.round(F.sum(F.col("alpha_y") * k) + _CAL_B, 6).alias("score"))
+        .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
         .select((F.col("t_id") % 3).alias("segment"), "label", "score")
     )
     cnts = scored.groupBy("segment", "score").agg(
@@ -7361,16 +7350,14 @@ for _w in _RETR_W:
     oracle=f"""
 WITH qv AS (
   SELECT vec_id, label,
-         list_transform(embedding,
-           x -> CAST(floor(CAST(x AS DOUBLE) * 1000.0 + 0.5) AS BIGINT)) AS q
+         list_transform(embedding, x -> {K.sql_quantize('x')}) AS q
   FROM embeddings
 ),
 pr AS (SELECT vec_id AS pid, label AS plabel, q AS pq FROM qv
        WHERE vec_id % {2 * _PROBE_MOD} = 7),
 dots AS (
   SELECT p.pid, p.plabel, c.vec_id AS cid, c.label AS clabel,
-         CAST(list_sum(list_transform(range(1, len(c.q)+1),
-                                      i -> c.q[i] * p.pq[i])) AS BIGINT) AS dp
+         {K.sql_qdot('c.q', 'p.pq')} AS dp
   FROM pr p JOIN qv c ON c.vec_id <> p.pid
 ),
 ranked AS (
@@ -7405,10 +7392,7 @@ def ml_retrieval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         "label",
-        F.expr(
-            "transform(embedding, "
-            "x -> CAST(floor(CAST(x AS DOUBLE) * 1000.0 + 0.5) AS BIGINT))"
-        ).alias("q"),
+        F.transform("embedding", K.quantize).alias("q"),
     )
     # serving-workload probe convention (sim.probe_modulo): oracle pins
     # % 100 = 7; the scale harness raises the conf so probe count
@@ -7426,11 +7410,7 @@ def ml_retrieval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             "plabel",
             F.col("vec_id").alias("cid"),
             F.col("label").alias("clabel"),
-            F.aggregate(
-                F.zip_with(F.col("q"), F.col("pq"), lambda x, y: x * y),
-                F.lit(0).cast("long"),
-                lambda a, x: a + x,
-            ).alias("dp"),
+            K.qdot(F.col("q"), F.col("pq")).alias("dp"),
         )
     )
     ranked = dots.withColumn(
@@ -7509,15 +7489,13 @@ _MMR_K = 4  # results selected per probe
     oracle=f"""
 WITH RECURSIVE qv AS (
   SELECT vec_id,
-         list_transform(embedding,
-           x -> CAST(floor(CAST(x AS DOUBLE) * 1000.0 + 0.5) AS BIGINT)) AS q
+         list_transform(embedding, x -> {K.sql_quantize('x')}) AS q
   FROM embeddings
 ),
 pr AS (SELECT vec_id AS pid, q AS pq FROM qv WHERE vec_id % {2 * _PROBE_MOD} = 7),
 dots AS (
   SELECT p.pid, c.vec_id AS cid, c.q AS cq,
-         CAST(list_sum(list_transform(range(1, len(c.q)+1),
-                                      i -> c.q[i] * p.pq[i])) AS BIGINT) AS dq
+         {K.sql_qdot('c.q', 'p.pq')} AS dq
   FROM pr p JOIN qv c ON c.vec_id <> p.pid
 ),
 cand AS (
@@ -7529,8 +7507,7 @@ cand AS (
 ),
 pair AS (
   SELECT a.pid, a.cid AS ca, b.cid AS cb,
-         CAST(list_sum(list_transform(range(1, len(a.cq)+1),
-                                      i -> a.cq[i] * b.cq[i])) AS BIGINT) AS dcc
+         {K.sql_qdot('a.cq', 'b.cq')} AS dcc
   FROM cand a JOIN cand b ON a.pid = b.pid AND a.cid <> b.cid
 ),
 sel AS (
@@ -7566,10 +7543,7 @@ FROM sel
 def sim_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
-        F.expr(
-            "transform(embedding, "
-            "x -> CAST(floor(CAST(x AS DOUBLE) * 1000.0 + 0.5) AS BIGINT))"
-        ).alias("q"),
+        F.transform("embedding", K.quantize).alias("q"),
     )
     # serving-workload probe convention (sim.probe_modulo, see ml_knn_classify)
     pr = e.select(F.col("vec_id").alias("pid"), F.col("q").alias("pq")).filter(
@@ -7582,11 +7556,7 @@ def sim_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             "pid",
             F.col("vec_id").alias("cid"),
             F.col("q").alias("cq"),
-            F.aggregate(
-                F.zip_with(F.col("q"), F.col("pq"), lambda x, y: x * y),
-                F.lit(0).cast("long"),
-                lambda a, x: a + x,
-            ).alias("dq"),
+            K.qdot(F.col("q"), F.col("pq")).alias("dq"),
         )
     )
     cand = dots.withColumn(
@@ -7653,18 +7623,14 @@ def sim_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (max distance DESC, then lowest vec_id), and the radius sequence.
 
 _KC_K = 8
-_KC_Q = "(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000.0 + 0.5) AS BIGINT))"
-_KC_D2_DUCK = (
-    "CAST(list_sum(list_transform(range(1, 65),"
-    " i -> (v.q[i] - c.q[i]) * (v.q[i] - c.q[i]))) AS BIGINT)"
-)
 
 
 @query(
     "select_kcenter_coreset",
     oracle=f"""
 WITH RECURSIVE qv AS (
-  SELECT vec_id, list_transform{_KC_Q} AS q FROM embeddings
+  SELECT vec_id, list_transform(embedding, x -> {K.sql_quantize('x')}) AS q
+  FROM embeddings
 ),
 c1 AS (SELECT vec_id, q FROM qv ORDER BY vec_id LIMIT 1),
 sel AS (
@@ -7677,7 +7643,7 @@ sel AS (
            ROW_NUMBER() OVER (PARTITION BY g.step
                               ORDER BY g.md DESC, g.vec_id) AS r
     FROM (
-      SELECT s.step, s.selected, v.vec_id, MIN({_KC_D2_DUCK}) AS md
+      SELECT s.step, s.selected, v.vec_id, MIN({K.sql_qsq_l2('v.q', 'c.q')}) AS md
       FROM sel s
       JOIN qv v ON NOT list_contains(s.selected, v.vec_id)
       JOIN qv c ON list_contains(s.selected, c.vec_id)
@@ -7694,24 +7660,16 @@ FROM sel
 )
 def select_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.expr(f"transform{_KC_Q}").alias("q")
+        "vec_id", F.transform("embedding", K.quantize).alias("q")
     )
     first = qv.orderBy("vec_id").limit(1).collect()[0]
     centers: list[list[int]] = [[int(v) for v in first.q]]
     picked = [int(first.vec_id)]
     out = [(1, int(first.vec_id), 0)]
     for step in range(2, _KC_K + 1):
-        cents_lit = lit_long_matrix(centers)
         rows = (
             qv.filter(~F.col("vec_id").isin(picked))
-            .withColumn("cents", cents_lit)
-            .withColumn(
-                "mind",
-                F.expr(
-                    "array_min(transform(cents, c -> aggregate(zip_with(q, c,"
-                    " (a, b) -> (a - b) * (a - b)), 0L, (s, x) -> s + x)))"
-                ),
-            )
+            .withColumn("mind", F.array_min(lattice_d2(centers)))
             .orderBy(F.desc("mind"), "vec_id")
             .limit(1)
             .select("vec_id", "q", "mind")
@@ -8233,22 +8191,18 @@ def text_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _FL_K = 6
 _FL_MOD = 10
-_FL_Q = "(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000.0 + 0.5) AS BIGINT))"
-_FL_DOT_DUCK = (
-    "CAST(greatest(list_sum(list_transform(range(1, 65),"
-    " i -> p.q[i] * s.q[i])), 0) AS BIGINT)"
-)
 
 
 @query(
     "select_facility_location",
     oracle=f"""
 WITH RECURSIVE g AS (
-  SELECT vec_id, list_transform{_FL_Q} AS q
+  SELECT vec_id, list_transform(embedding, x -> {K.sql_quantize('x')}) AS q
   FROM embeddings WHERE vec_id % {_FL_MOD} = 0
 ),
 sims AS (
-  SELECT p.vec_id AS pid, s.vec_id AS sid, {_FL_DOT_DUCK} AS sim
+  SELECT p.vec_id AS pid, s.vec_id AS sid,
+         greatest({K.sql_qdot('p.q', 's.q')}, 0) AS sim
   FROM g p JOIN g s ON TRUE
 ),
 sel AS (
@@ -8286,7 +8240,7 @@ def select_facility_location(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = (
         load_table(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") % _FL_MOD == 0)
-        .select("vec_id", F.expr(f"transform{_FL_Q}").alias("q"))
+        .select("vec_id", F.transform("embedding", K.quantize).alias("q"))
     )
     p = g.select(F.col("vec_id").alias("pid"), F.col("q").alias("pq"))
     s = g.select(F.col("vec_id").alias("sid"), F.col("q").alias("sq"))
@@ -8295,14 +8249,7 @@ def select_facility_location(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "pid",
             "sid",
-            F.greatest(
-                F.aggregate(
-                    F.zip_with(F.col("pq"), F.col("sq"), lambda a, b: a * b),
-                    F.lit(0).cast("long"),
-                    lambda acc, x: acc + x,
-                ),
-                F.lit(0).cast("long"),
-            ).alias("sim"),
+            F.greatest(K.qdot(F.col("pq"), F.col("sq")), F.lit(0).cast("long")).alias("sim"),
         )
     )
     first = (
@@ -9076,16 +9023,14 @@ _KNN_K = 9
     oracle=f"""
 WITH qv AS (
   SELECT vec_id, label,
-         list_transform(embedding,
-           x -> CAST(floor(CAST(x AS DOUBLE) * 1000.0 + 0.5) AS BIGINT)) AS q
+         list_transform(embedding, x -> {K.sql_quantize('x')}) AS q
   FROM embeddings
 ),
 pr AS (SELECT vec_id AS pid, label AS plabel, q AS pq FROM qv
        WHERE vec_id % {2 * _PROBE_MOD} = 3),
 dots AS (
   SELECT p.pid, p.plabel, c.vec_id AS cid, c.label AS clabel,
-         CAST(list_sum(list_transform(range(1, len(c.q)+1),
-                                      i -> c.q[i] * p.pq[i])) AS BIGINT) AS dp
+         {K.sql_qdot('c.q', 'p.pq')} AS dp
   FROM pr p JOIN qv c ON c.vec_id <> p.pid
 ),
 ranked AS (
@@ -9115,10 +9060,7 @@ def ml_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         "label",
-        F.expr(
-            "transform(embedding, "
-            "x -> CAST(floor(CAST(x AS DOUBLE) * 1000.0 + 0.5) AS BIGINT))"
-        ).alias("q"),
+        F.transform("embedding", K.quantize).alias("q"),
     )
     # probe set follows the serving-workload convention (sim.probe_modulo):
     # the oracle pins % 100 = 3 (default modulo 50 x 2) and the scale
@@ -9138,11 +9080,7 @@ def ml_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
             "plabel",
             F.col("vec_id").alias("cid"),
             F.col("label").alias("clabel"),
-            F.aggregate(
-                F.zip_with(F.col("q"), F.col("pq"), lambda x, y: x * y),
-                F.lit(0).cast("long"),
-                lambda a, x: a + x,
-            ).alias("dp"),
+            K.qdot(F.col("q"), F.col("pq")).alias("dp"),
         )
     )
     ranked = dots.withColumn(
@@ -10855,7 +10793,7 @@ def sample_exact_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ml_brier_decomposition",
-    oracle=_CAL_SCORE_SQL
+    oracle=SCORE_SQL
     + """
 , probs AS (
   SELECT round(least(greatest((score + 1.0) / 2.0, 0.0), 1.0), 6) AS p,
@@ -10897,12 +10835,12 @@ FROM g CROSS JOIN terms t
 """,
 )
 def ml_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sv, test = _cal_sv_test(spark, sf_dir)
-    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), _CAL_GAMMA)
+    sv, test = sv_test(spark, sf_dir)
+    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
     scored = (
         test.crossJoin(F.broadcast(sv))
         .groupBy("t_id", "label")
-        .agg(F.round(F.sum(F.col("alpha_y") * k) + _CAL_B, 6).alias("score"))
+        .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
     )
     probs = scored.select(
         F.round(
@@ -10988,7 +10926,7 @@ def ml_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ml_mcnemar_test",
-    oracle=_CAL_SCORE_SQL
+    oracle=SCORE_SQL
     + """,
 paired AS (
   SELECT CASE WHEN score >= 0 THEN 1 ELSE -1 END AS pred_a,
@@ -11010,12 +10948,12 @@ FROM cells
 """,
 )
 def ml_mcnemar_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sv, test = _cal_sv_test(spark, sf_dir)
-    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), _CAL_GAMMA)
+    sv, test = sv_test(spark, sf_dir)
+    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
     scored = (
         test.crossJoin(F.broadcast(sv))
         .groupBy("t_id", "label")
-        .agg(F.round(F.sum(F.col("alpha_y") * k) + _CAL_B, 6).alias("score"))
+        .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
     )
     pred_a = F.when(F.col("score") >= 0, 1).otherwise(-1)
     pred_b = F.when(F.col("t_id") % 3 == 0, 1).otherwise(-1)
@@ -11076,8 +11014,7 @@ probes AS (
   SELECT vec_id AS i, embedding AS vp, qv AS qp FROM q WHERE vec_id % {_PROBE_MOD} = 0),
 cand AS (
   SELECT p.i, e.vec_id AS j, p.vp, e.embedding AS ve,
-         list_aggregate(list_transform(list_zip(p.qp, e.qv),
-           z -> z[1] * z[2]), 'sum') AS qdot
+         {K.sql_qdot('p.qp', 'e.qv')} AS qdot
   FROM probes p CROSS JOIN q e
   WHERE e.vec_id <> p.i),
 top50 AS (
@@ -11122,11 +11059,7 @@ def sim_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("ve"),
         F.col("qv").alias("qc"),
     )
-    qdot = F.aggregate(
-        F.zip_with(F.col("qp"), F.col("qc"), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
+    qdot = K.qdot(F.col("qp"), F.col("qc"))
     pairs = corpus.join(F.broadcast(probes), F.col("j") != F.col("i")).select(
         "i", "j", "vp", "ve", qdot.alias("qdot"),
         F.spark_partition_id().alias("pid"),
@@ -11419,7 +11352,7 @@ def text_quality_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ml_auc_delong_ci",
-    oracle=_CAL_SCORE_SQL
+    oracle=SCORE_SQL
     + """,
 cnts AS (
   SELECT score,
@@ -11467,12 +11400,12 @@ FROM fin
 """,
 )
 def ml_auc_delong_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sv, test = _cal_sv_test(spark, sf_dir)
-    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), _CAL_GAMMA)
+    sv, test = sv_test(spark, sf_dir)
+    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
     scored = (
         test.crossJoin(F.broadcast(sv))
         .groupBy("t_id", "label")
-        .agg(F.round(F.sum(F.col("alpha_y") * k) + _CAL_B, 6).alias("score"))
+        .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
     )
     cnts = scored.groupBy("score").agg(
         F.sum((F.col("label") < 5).cast("int")).alias("np_s"),
@@ -11554,7 +11487,7 @@ def ml_auc_delong_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ml_hosmer_lemeshow",
-    oracle=_CAL_SCORE_SQL
+    oracle=SCORE_SQL
     + """,
 dec AS (
   SELECT NTILE(10) OVER (ORDER BY score, t_id) AS decile,
@@ -11576,12 +11509,12 @@ FROM g
 """,
 )
 def ml_hosmer_lemeshow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sv, test = _cal_sv_test(spark, sf_dir)
-    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), _CAL_GAMMA)
+    sv, test = sv_test(spark, sf_dir)
+    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
     scored = (
         test.crossJoin(F.broadcast(sv))
         .groupBy("t_id", "label")
-        .agg(F.round(F.sum(F.col("alpha_y") * k) + _CAL_B, 6).alias("score"))
+        .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
     )
     dscore = F.col("score").cast("decimal(18,6)")
     p = (
@@ -11664,8 +11597,8 @@ variants AS (
   FROM shifted s, dims d
 ), scored AS (
   SELECT v.dim, v.t_id, v.label,
-         round(SUM(sv.alpha_y * exp(-{_CAL_GAMMA} * {K.sql_sq_l2('sv.sv_vec', 'v.v')}))
-               + {_CAL_B}, 6) AS score
+         round(SUM(sv.alpha_y * exp(-{GAMMA} * {K.sql_sq_l2('sv.sv_vec', 'v.v')}))
+               + {SVM_B}, 6) AS score
   FROM variants v CROSS JOIN sv
   GROUP BY v.dim, v.t_id, v.label
 ), acc AS (
@@ -11685,7 +11618,7 @@ WHERE a.dim <> 0
 """,
 )
 def ml_permutation_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sv, test = _cal_sv_test(spark, sf_dir)
+    sv, test = sv_test(spark, sf_dir)
     w = Window.orderBy("t_id")
     w_full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     # panel-sized; feeds both the base and the permuted variant branch
@@ -11710,11 +11643,11 @@ def ml_permutation_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     variants = base.unionByName(perm)
-    k = K.rbf_kernel(F.col("sv_vec"), F.col("v"), _CAL_GAMMA)
+    k = K.rbf_kernel(F.col("sv_vec"), F.col("v"), GAMMA)
     scored = (
         variants.crossJoin(F.broadcast(sv))
         .groupBy("dim", "t_id", "label")
-        .agg(F.round(F.sum(F.col("alpha_y") * k) + _CAL_B, 6).alias("score"))
+        .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
     )
     pred = F.when(F.col("score") >= 0, 1).otherwise(-1)
     truth = F.when(F.col("label") % 2 == 0, 1).otherwise(-1)
@@ -11797,17 +11730,15 @@ SELECT CAST(q.n_cal AS BIGINT) AS n_cal,
 FROM (SELECT * FROM nonconf WHERE part = 'test') t CROSS JOIN q
 GROUP BY q.n_cal, q.qhat
 """.format(
-        g=_CAL_GAMMA, b=_CAL_B, l2=K.sql_sq_l2("sv.sv_vec", "p.t_vec")
+        g=GAMMA, b=SVM_B, l2=K.sql_sq_l2("sv.sv_vec", "p.t_vec")
     ),
 )
 def ml_conformal_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from psvm_spark.queries.ml import _TS_RES as _CONF_TS_RES
-
-    sv, _ = _cal_sv_test(spark, sf_dir)
+    sv, _ = sv_test(spark, sf_dir)
     ts_mod = scale_conf(spark, "svm.test_modulo")
     e = load_table(spark, sf_dir, "embeddings")
     panel = e.filter(
-        (F.col("vec_id") % ts_mod).isin(_CONF_TS_RES, _CONF_CAL_RES)
+        (F.col("vec_id") % ts_mod).isin(TS_RES, _CONF_CAL_RES)
     ).select(
         F.col("vec_id").alias("t_id"),
         F.col("embedding").alias("t_vec"),
@@ -11816,11 +11747,11 @@ def ml_conformal_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("test")
         .alias("part"),
     )
-    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), _CAL_GAMMA)
+    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
     scored = (
         panel.crossJoin(F.broadcast(sv))
         .groupBy("t_id", "label", "part")
-        .agg(F.round(F.sum(F.col("alpha_y") * k) + _CAL_B, 6).alias("score"))
+        .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
     )
     y = F.when(F.col("label") % 2 == 0, 1).otherwise(-1)
     nonconf = scored.select(
@@ -11880,7 +11811,7 @@ _LPERM_SHIFTS = 8
 
 @query(
     "ml_label_permutation_test",
-    oracle=_CAL_SCORE_SQL
+    oracle=SCORE_SQL
     + f""",
 ranked AS (
   SELECT t_id, label, score,
@@ -11917,12 +11848,12 @@ GROUP BY t.n_test, t.n_correct
 """,
 )
 def ml_label_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sv, test = _cal_sv_test(spark, sf_dir)
-    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), _CAL_GAMMA)
+    sv, test = sv_test(spark, sf_dir)
+    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
     scored = (
         test.crossJoin(F.broadcast(sv))
         .groupBy("t_id", "label")
-        .agg(F.round(F.sum(F.col("alpha_y") * k) + _CAL_B, 6).alias("score"))
+        .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
     )
     w = Window.orderBy("t_id")
     w_full = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -12077,7 +12008,7 @@ _FAIR_GROUPS = 3
 
 @query(
     "ml_fairness_gaps",
-    oracle=_CAL_SCORE_SQL
+    oracle=SCORE_SQL
     + f""",
 cls AS (
   SELECT t_id % {_FAIR_GROUPS} AS grp,
@@ -12115,12 +12046,12 @@ FROM g CROSS JOIN tot t
 """,
 )
 def ml_fairness_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sv, test = _cal_sv_test(spark, sf_dir)
-    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), _CAL_GAMMA)
+    sv, test = sv_test(spark, sf_dir)
+    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
     scored = (
         test.crossJoin(F.broadcast(sv))
         .groupBy("t_id", "label")
-        .agg(F.round(F.sum(F.col("alpha_y") * k) + _CAL_B, 6).alias("score"))
+        .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
     )
     cls = scored.select(
         (F.col("t_id") % _FAIR_GROUPS).alias("grp"),

@@ -24,18 +24,13 @@ from pyspark.sql import functions as F
 from psvm_spark.catalog import load_table
 from psvm_spark.ml import kernels as K
 from psvm_spark.ml.icf import icf_pivots
+from psvm_spark.ml.kmeans import lloyd_exact_assign, lloyd_exact_ctes, lloyd_exact_train
+from psvm_spark.ml.svm import GAMMA, SCORE_SQL, SVM_B, TS_MOD, TS_RES, sv_test
 from psvm_spark.registry import query
-from psvm_spark.session import SCALE_CONFS, scale_conf
-from psvm_spark.queries._util import (
-    lit_long_matrix,
-    local_df,
-    scratch_dir,
-)
+from psvm_spark.queries._util import local_df, scratch_dir
 
-GAMMA = 0.5
 POLY_COEF = 1.0
 POLY_DEG = 3
-SVM_B = 0.05
 
 # deterministic pair sample: |A| = |B| = n/25 rows -> n^2/625 pairs
 _A_MOD, _A_RES = 25, 0
@@ -120,52 +115,9 @@ def kernel_laplacian(spark: SparkSession, sf_dir: str) -> DataFrame:
 # fully SQL-expressible — exactly the reference's
 # f(x) = sum_i alpha_i y_i K(s_i, x) + b   [psvm:model.cc].
 
-# In a real deployment the support-vector set is a fixed-size model
-# artifact and the eval set a fixed panel; neither grows with the
-# corpus.  ``vec_id % 20`` slices model that on the gate fixtures, but
-# at amplification a plain modulus makes the SV x test pair volume grow
-# quadratically with the corpus.  The scale harness raises the
-# ``svm.sv_modulo`` / ``svm.test_modulo`` scale confs by the amp factor
-# so each slice stays base-sized; the oracles pin the defaults.
-_SV_MOD, _SV_RES = SCALE_CONFS["svm.sv_modulo"], 0  # support-vector shard
-_TS_MOD, _TS_RES = SCALE_CONFS["svm.test_modulo"], 1  # test shard
-
-
-def _sv_test(spark: SparkSession, sf_dir: str):
-    sv_mod, ts_mod = scale_conf(spark, "svm.sv_modulo"), scale_conf(spark, "svm.test_modulo")
-    e = load_table(spark, sf_dir, "embeddings")
-    sv = e.filter(F.col("vec_id") % sv_mod == _SV_RES).select(
-        F.col("vec_id").alias("sv_id"),
-        F.col("embedding").alias("sv_vec"),
-        (((F.col("vec_id") % 7).cast("double") - 3.0) * 0.1).alias("alpha_y"),
-    )
-    test = e.filter(F.col("vec_id") % ts_mod == _TS_RES).select(
-        F.col("vec_id").alias("t_id"), F.col("embedding").alias("t_vec"), "label"
-    )
-    return sv, test
-
-
-_SCORE_SQL = f"""
-WITH sv AS (
-  SELECT vec_id AS sv_id, embedding AS sv_vec,
-         (CAST(vec_id % 7 AS DOUBLE) - 3.0) * 0.1 AS alpha_y
-  FROM embeddings WHERE vec_id % {_SV_MOD} = {_SV_RES}
-), tst AS (
-  SELECT vec_id AS t_id, embedding AS t_vec, label
-  FROM embeddings WHERE vec_id % {_TS_MOD} = {_TS_RES}
-), scored AS (
-  SELECT t.t_id, t.label,
-         round(SUM(sv.alpha_y * exp(-{GAMMA} * {K.sql_sq_l2('sv.sv_vec', 't.t_vec')}))
-               + {SVM_B}, 6) AS score
-  FROM tst t CROSS JOIN sv
-  GROUP BY t.t_id, t.label
-)
-"""
-
-
 @query(
     "svm_predict_score",
-    oracle=_SCORE_SQL
+    oracle=SCORE_SQL
     + """
 SELECT t_id, score,
        CASE WHEN score >= 0 THEN 1 ELSE -1 END AS pred
@@ -173,7 +125,7 @@ FROM scored
 """,
 )
 def svm_predict_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sv, test = _sv_test(spark, sf_dir)
+    sv, test = sv_test(spark, sf_dir)
     k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
     scored = (
         test.crossJoin(F.broadcast(sv))
@@ -193,7 +145,7 @@ def svm_predict_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "eval_accuracy",
-    oracle=_SCORE_SQL
+    oracle=SCORE_SQL
     + """
 SELECT COUNT(*) AS n_test,
        CAST(SUM(CASE WHEN (CASE WHEN score >= 0 THEN 1 ELSE -1 END)
@@ -203,7 +155,7 @@ FROM scored
 """,
 )
 def eval_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sv, test = _sv_test(spark, sf_dir)
+    sv, test = sv_test(spark, sf_dir)
     k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
     scored = (
         test.crossJoin(F.broadcast(sv))
@@ -337,12 +289,12 @@ def svm_nystrom_train_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 SELECT CAST(COUNT(*) AS BIGINT) AS n_scored,
        CAST(COUNT(*) AS BIGINT) AS n_equal
-FROM embeddings WHERE vec_id % {_TS_MOD} = {_TS_RES}
+FROM embeddings WHERE vec_id % {TS_MOD} = {TS_RES}
 """,
 )
 def svm_model_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
-    sv, test = _sv_test(spark, sf_dir)
+    sv, test = sv_test(spark, sf_dir)
     path = scratch_dir("psvm_model_") + "/model_sv"
     sv.write.mode("overwrite").parquet(path)
     sv2 = spark.read.parquet(path)
@@ -664,13 +616,9 @@ _ICF_RANK = 5
     "ml_icf_factor",
     oracle=f"""
 WITH RECURSIVE b2 AS (
-  SELECT vec_id, q,
-         CAST(list_sum(list_transform(range(1, len(q)+1), i -> q[i] * q[i]))
-              AS DOUBLE) AS resid
+  SELECT vec_id, q, CAST({K.sql_qdot('q', 'q')} AS DOUBLE) AS resid
   FROM (
-    SELECT vec_id,
-           list_transform(embedding,
-             x -> CAST(floor(CAST(x AS DOUBLE) * 1000.0 + 0.5) AS BIGINT)) AS q
+    SELECT vec_id, list_transform(embedding, x -> {K.sql_quantize('x')}) AS q
     FROM embeddings WHERE vec_id < {_ICF_CAP})
 ),
 it AS (
@@ -684,8 +632,7 @@ it AS (
          pid2 AS pid, presid2 AS presid
   FROM (
     SELECT step, vec_id, q, h, resid, pid2, presid2,
-           (CAST(list_sum(list_transform(range(1, len(q)+1),
-                                          i -> q[i] * pq2[i])) AS DOUBLE)
+           (CAST({K.sql_qdot('q', 'pq2')} AS DOUBLE)
             - list_reduce(
                 list_prepend(CAST(0 AS DOUBLE),
                   list_transform(range(1, len(h)+1), i -> h[i] * ph2[i])),
@@ -718,93 +665,19 @@ def ml_icf_factor(spark: SparkSession, sf_dir: str) -> DataFrame:
 # round-6 verdict's rows-only gap for the iterative-clustering family:
 # ml_kmeans_cluster (MLlib-shaped, float means) stays the production
 # form, ml_kmeans_assign_first pins the first pass, and THIS key proves
-# the full multi-iteration loop cross-engine.  The trick is an
-# integer-lattice Lloyd: embeddings quantize to thousandths (bigint),
-# and each centroid update takes the per-dimension FLOOR of the mean,
-# so every centroid coordinate, squared distance, argmin, and the final
-# inertia are exact integers — no float sum-order anywhere.  Python's
-# `s // c` is floor division; the oracle gets the identical floor via
-# the positivity bias (s + BIG*c) // c - BIG because DuckDB's `//`
-# truncates toward zero on negatives (verified: -7//2 = -3 there, -4 in
-# Python).  Ties in the argmin break toward the lowest cluster id on
-# both sides (array_position-of-min vs ORDER BY d2, cluster).
-#
-# Distribution shape per iteration (the psvm A10 "distributed pass +
-# tiny driver solve" loop, same as ml/kmeans.py lloyd): assignment is a
-# NARROW map with the k x 64 centroid literal embedded in the plan (no
-# join, scan-speed at 100 TB); the update is one map-side-combined
-# posexplode shuffle of k*64 integer cells, collected to the driver
-# (256 rows — the bounded rank-0 reduction) and re-embedded as the next
-# literal.  The oracle unrolls all three updates + final assignment as
-# straight-line CTEs.  Empty clusters would silently diverge from the
-# unrolled oracle, so the Spark loop asserts k stays full (loud, never
-# wrong).
+# the full multi-iteration loop cross-engine with the lattice Lloyd of
+# ml/kmeans.py (every centroid coordinate an exact integer).  Ties in
+# the argmin break toward the lowest cluster id on both sides
+# (array_position-of-min vs ORDER BY d2, cluster).  The oracle unrolls
+# all three updates + final assignment as straight-line CTEs.
 
 _KML_K = 4
 _KML_ITERS = 3
-_KML_DIM = 64
-_KML_BIG = 10_000_000  # positivity bias: |sum(q_d)| < BIG * count always
-
-_KML_Q = "(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000.0 + 0.5) AS BIGINT))"
-
-
-def _kml_cte_prefix(k: int = _KML_K, iters: int = _KML_ITERS) -> str:
-    """WITH-body prefix: quantized vectors, init centroids, `iters`
-    unrolled assign/update steps, ending in the final assignment CTEs
-    ``af_d`` (all (vec, cluster, d2) distances) and ``af`` (argmin rows).
-
-    Parameterized so sim_ivf_kmeans (queries/llm.py) can train its IVF
-    coarse quantizer with the identical exact recipe at a different k.
-    """
-
-    def assign(prev_cent: str, name: str) -> str:
-        return f"""
-{name}_d AS (
-  SELECT v.vec_id, v.label, v.q, c.cluster,
-         CAST(list_sum(list_transform(range(1, {_KML_DIM + 1}),
-              i -> (v.q[i] - c.carr[i]) * (v.q[i] - c.carr[i]))) AS BIGINT) AS d2
-  FROM qv v CROSS JOIN {prev_cent} c
-),
-{name} AS (
-  SELECT vec_id, label, q, cluster, d2 FROM (
-    SELECT vec_id, label, q, cluster, d2,
-           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cluster) AS rk
-    FROM {name}_d) WHERE rk = 1
-)"""
-
-    def cent(assigned: str, name: str) -> str:
-        return f"""
-{name} AS (
-  SELECT cluster, list(cd ORDER BY dim) AS carr FROM (
-    SELECT cluster, dim, (s + {_KML_BIG} * c) // c - {_KML_BIG} AS cd FROM (
-      SELECT a.cluster, u.dim, SUM(u.v) AS s, COUNT(*) AS c
-      FROM {assigned} a,
-           LATERAL (SELECT unnest(generate_series(1, {_KML_DIM})) AS dim,
-                           unnest(a.q) AS v) u
-      GROUP BY a.cluster, u.dim))
-  GROUP BY cluster
-)"""
-
-    steps = ""
-    prev = "c0"
-    for it in range(1, iters + 1):
-        steps += "," + assign(prev, f"a{it}")
-        steps += "," + cent(f"a{it}", f"c{it}")
-        prev = f"c{it}"
-    steps += "," + assign(prev, "af")
-    return f"""qv AS (
-  SELECT vec_id, label, list_transform{_KML_Q} AS q FROM embeddings
-),
-c0 AS (
-  SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS INT) AS cluster,
-         q AS carr
-  FROM (SELECT vec_id, q FROM qv ORDER BY vec_id LIMIT {k})
-){steps}"""
 
 
 def _kml_oracle() -> str:
     return f"""
-WITH {_kml_cte_prefix()}
+WITH {lloyd_exact_ctes(_KML_K, _KML_ITERS)}
 SELECT cluster,
        CAST(COUNT(*) AS BIGINT) AS n,
        CAST(SUM(d2) AS BIGINT) AS inertia_q,
@@ -813,68 +686,11 @@ FROM af GROUP BY cluster
 """
 
 
-def _kml_assign(qv: DataFrame, cents: list[list[int]]) -> DataFrame:
-    lit = lit_long_matrix(cents)
-    return (
-        qv.withColumn("cents", lit)
-        .withColumn(
-            "d",
-            F.expr(
-                "transform(cents, c -> aggregate(zip_with(q, c, (a, b) ->"
-                " (a - b) * (a - b)), 0L, (s, x) -> s + x))"
-            ),
-        )
-        .select(
-            "vec_id",
-            "label",
-            "q",
-            (F.expr("array_position(d, array_min(d))").cast("int") - 1).alias("cluster"),
-            F.expr("array_min(d)").alias("d2"),
-        )
-    )
-
-
-def lloyd_exact_train(
-    spark: SparkSession, sf_dir: str, k: int = _KML_K, iters: int = _KML_ITERS
-) -> tuple[DataFrame, list[list[int]]]:
-    """Integer-lattice Lloyd training: (quantized vectors, centroids).
-
-    The distributed shape per iteration is the psvm A10 loop — narrow
-    assignment with the centroids as plan literals, one map-side-combined
-    k x 64 cell shuffle, bounded driver fold — and every centroid
-    coordinate is an exact integer, so callers can build straight-line
-    DuckDB oracles via :func:`_kml_cte_prefix` with the same (k, iters).
-    """
-    qv = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", F.expr(f"transform{_KML_Q}").alias("q")
-    )
-    cents = [
-        [int(v) for v in r.q]
-        for r in qv.orderBy("vec_id").limit(k).select("q").collect()
-    ]
-    for _ in range(iters):
-        cells = (
-            _kml_assign(qv, cents)
-            .select("cluster", F.posexplode("q").alias("dim", "v"))
-            .groupBy("cluster", "dim")
-            .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("c"))
-            .collect()
-        )
-        by_cluster: dict[int, dict[int, int]] = {}
-        for r in cells:
-            by_cluster.setdefault(r.cluster, {})[r.dim] = r.s // r.c
-        assert len(by_cluster) == k, (
-            "empty cluster: the unrolled oracle assumes k stays full"
-        )
-        cents = [[by_cluster[c][d] for d in range(_KML_DIM)] for c in range(k)]
-    return qv, cents
-
-
 @query("ml_kmeans_lloyd_exact", oracle=_kml_oracle())
 def ml_kmeans_lloyd_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    qv, cents = lloyd_exact_train(spark, sf_dir)
+    qv, cents = lloyd_exact_train(spark, sf_dir, _KML_K, _KML_ITERS)
     return (
-        _kml_assign(qv, cents)
+        lloyd_exact_assign(qv, cents)
         .groupBy("cluster")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -1054,7 +870,8 @@ _PCA_DIM = 64
 def _pca_oracle() -> str:
     return f"""
 WITH RECURSIVE qv AS (
-  SELECT vec_id, list_transform{_KML_Q} AS q FROM embeddings
+  SELECT vec_id, list_transform(embedding, x -> {K.sql_quantize('x')}) AS q
+  FROM embeddings
 ),
 nn AS (SELECT COUNT(*) AS n FROM qv),
 sv AS (
@@ -1116,7 +933,7 @@ def ml_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread the 2080-cell triangle explode runs on a single core.
     qv = fan_out(
         load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", F.expr(f"transform{_KML_Q}").alias("q")
+            "vec_id", F.transform("embedding", K.quantize).alias("q")
         ),
         spark,
     )
@@ -1199,12 +1016,13 @@ def ml_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ttest_oracle() -> str:
     return f"""
 WITH qv AS (
-  SELECT CAST(label % 2 AS INT) AS cls, list_transform{_KML_Q} AS q
+  SELECT CAST(label % 2 AS INT) AS cls,
+         list_transform(embedding, x -> {K.sql_quantize('x')}) AS q
   FROM embeddings
 ),
 cells AS (
   SELECT u.dim, cls, COUNT(*) AS n, SUM(u.v) AS s, SUM(u.v * u.v) AS s2
-  FROM qv, LATERAL (SELECT unnest(generate_series(1, {_KML_DIM})) AS dim,
+  FROM qv, LATERAL (SELECT unnest(generate_series(1, len(q))) AS dim,
                            unnest(q) AS v) u
   GROUP BY u.dim, cls),
 sides AS (
@@ -1231,7 +1049,7 @@ FROM st
 def ml_feature_ttest_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = load_table(spark, sf_dir, "embeddings").select(
         (F.col("label") % 2).cast("int").alias("cls"),
-        F.expr(f"transform{_KML_Q}").alias("q"),
+        F.transform("embedding", K.quantize).alias("q"),
     )
     cells = (
         qv.select("cls", F.posexplode("q").alias("pos", "v"))
@@ -1296,7 +1114,7 @@ _PAV_W = 32  # bin width: (511 + 512 + 1) / 32 -> bins 0..31
     "ml_isotonic_pav",
     oracle=f"""
 WITH RECURSIVE q AS (
-  SELECT CAST((least(greatest(list_transform{_KML_Q}[1], {_PAV_CLL}),
+  SELECT CAST((least(greatest({K.sql_quantize('embedding[1]')}, {_PAV_CLL}),
                      {_PAV_CLH}) + {-_PAV_CLL}) // {_PAV_W} AS INT) AS bin,
          CAST(label < 5 AS INT) AS y
   FROM embeddings),
@@ -1347,13 +1165,9 @@ def ml_isotonic_pav(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Integer `div`, never float `/` + cast, when mirroring DuckDB `//`
     # (repo float-parity rule; ADVICE r8).  The shifted operand is in
     # [0, 1023] so div == // with no negative-truncation asymmetry.
-    binned = e.select(
-        F.expr(
-            "cast((least(greatest(cast(floor(cast(embedding[0] as double)"
-            f" * 1000.0 + 0.5) as bigint), {_PAV_CLL}), {_PAV_CLH})"
-            f" + {-_PAV_CLL}) div {_PAV_W} as int)"
-        ).alias("bin"),
-        (F.col("label") < 5).cast("int").alias("y"),
+    x = F.least(F.greatest(K.quantize(F.col("embedding")[0]), F.lit(_PAV_CLL)), F.lit(_PAV_CLH))
+    binned = e.select(x.alias("x"), (F.col("label") < 5).cast("int").alias("y")).select(
+        F.expr(f"cast((x + {-_PAV_CLL}) div {_PAV_W} as int)").alias("bin"), "y"
     )
     g = sorted(
         binned.groupBy("bin")
@@ -1432,7 +1246,7 @@ _IRLS_CL = 1024  # score clamp: guarantees the bounded stat domain
     "ml_logistic_irls",
     oracle=f"""
 WITH RECURSIVE q AS (
-  SELECT least(greatest(list_transform{_KML_Q}[1], {-_IRLS_CL}),
+  SELECT least(greatest({K.sql_quantize('embedding[1]')}, {-_IRLS_CL}),
                {_IRLS_CL - 1}) AS x,
          CAST(label < 5 AS INT) AS y
   FROM embeddings),
@@ -1478,9 +1292,7 @@ def ml_logistic_irls(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
     e = load_table(spark, sf_dir, "embeddings")
-    s_expr = F.expr(
-        "cast(floor(cast(embedding[0] as double) * 1000.0 + 0.5) as bigint)"
-    )
+    s_expr = K.quantize(F.col("embedding")[0])
     stats = [
         (int(r.x), int(r.n), int(r.sy))
         for r in e.select(
@@ -1541,7 +1353,7 @@ _GMM_V0 = 65_536  # init variance (score units squared)
     "ml_gmm_em",
     oracle=f"""
 WITH RECURSIVE q AS (
-  SELECT least(greatest(list_transform{_KML_Q}[1], -1024), 1023) AS x
+  SELECT least(greatest({K.sql_quantize('embedding[1]')}, -1024), 1023) AS x
   FROM embeddings),
 stats AS (SELECT x, COUNT(*) AS n FROM q GROUP BY x),
 tot AS (SELECT SUM(n) AS nn FROM stats),
@@ -1593,9 +1405,7 @@ def ml_gmm_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
     e = load_table(spark, sf_dir, "embeddings")
-    s_expr = F.expr(
-        "cast(floor(cast(embedding[0] as double) * 1000.0 + 0.5) as bigint)"
-    )
+    s_expr = K.quantize(F.col("embedding")[0])
     stats = [
         (int(r.x), int(r.n))
         for r in e.select(
@@ -1685,7 +1495,7 @@ _SVM_XSC = 1024  # feature scale: z = x / XSC in [-1, 1)
     "svm_hinge_fixed_iter",
     oracle=f"""
 WITH RECURSIVE q AS (
-  SELECT least(greatest(list_transform{_KML_Q}[1], {-_IRLS_CL}),
+  SELECT least(greatest({K.sql_quantize('embedding[1]')}, {-_IRLS_CL}),
                {_IRLS_CL - 1}) AS x,
          CAST(label < 5 AS INT) * 2 - 1 AS y
   FROM embeddings),
@@ -1729,9 +1539,7 @@ def svm_hinge_fixed_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
     e = load_table(spark, sf_dir, "embeddings")
-    s_expr = F.expr(
-        "cast(floor(cast(embedding[0] as double) * 1000.0 + 0.5) as bigint)"
-    )
+    s_expr = K.quantize(F.col("embedding")[0])
     stats = [
         (int(r.x), int(r.y), int(r.n))
         for r in e.select(

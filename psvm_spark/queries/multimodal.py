@@ -56,6 +56,46 @@ _WAV_HEADER_HEX = (
 ).hex()
 
 
+def media_codecs():
+    """The pure-NumPy decoders ``(decode_ppm, decode_wav)``.
+
+    Call this on the driver and let the executor closure capture the
+    result: cloudpickle ships nested functions by value, while a
+    module-level function would pickle as a reference to this module,
+    which Spark Python workers cannot import (the repo is not on their
+    sys.path when the driver runs from another cwd)."""
+
+    def decode_ppm(buf: bytes):
+        """Binary PPM (P6, maxval 255) -> (h, w, 3) uint8 array."""
+        if buf[:2] != b"P6":
+            raise ValueError("not a P6 PPM")
+        # header = magic, width, height, maxval — whitespace-separated
+        parts, idx = [], 2
+        while len(parts) < 3:
+            while buf[idx] in b" \t\r\n":
+                idx += 1
+            start = idx
+            while buf[idx] not in b" \t\r\n":
+                idx += 1
+            parts.append(int(buf[start:idx]))
+        idx += 1  # single whitespace after maxval
+        w, h, maxval = parts
+        if maxval != 255:
+            raise ValueError("only maxval=255 supported")
+        px = np.frombuffer(buf, dtype=np.uint8, count=w * h * 3, offset=idx)
+        return px.reshape(h, w, 3)
+
+    def decode_wav(buf: bytes):
+        """RIFF/WAVE PCM16 mono payload -> (sample_rate, int16[n])."""
+        if buf[:4] != b"RIFF" or buf[8:12] != b"WAVE":
+            raise ValueError("not a RIFF/WAVE payload")
+        sr = int.from_bytes(buf[24:28], "little")
+        data_size = int.from_bytes(buf[40:44], "little")
+        return sr, np.frombuffer(buf, dtype="<i2", count=data_size // 2, offset=44)
+
+    return decode_ppm, decode_wav
+
+
 def media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthesize the media fixture: one row per document, kind by
     doc_id%3, payload a real PPM/WAV/frame-stream (see module doc),
@@ -203,43 +243,11 @@ def mm_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes every feature from the digest hex characters alone (see
     _decode_features_oracle) — a full differential test across the
     binary decode boundary; pixel/sample-level NumPy reference checks
-    stay in tests/test_multimodal.py.
-
-    The pure-NumPy PPM/WAV decoders are defined INSIDE the closure so
-    cloudpickle ships them by value — Spark Python workers do not have
-    this repo on sys.path when the driver runs from another cwd, and a
-    module-level function would pickle as an unresolvable reference."""
+    stay in tests/test_multimodal.py."""
     m = media_table(spark, sf_dir)
+    decode_ppm, decode_wav = media_codecs()
 
     def extract(batches):
-        def decode_ppm(buf: bytes):
-            """Binary PPM (P6, maxval 255) -> (h, w, 3) uint8 array."""
-            if buf[:2] != b"P6":
-                raise ValueError("not a P6 PPM")
-            # header = magic, width, height, maxval — whitespace-separated
-            parts, idx = [], 2
-            while len(parts) < 3:
-                while buf[idx] in b" \t\r\n":
-                    idx += 1
-                start = idx
-                while buf[idx] not in b" \t\r\n":
-                    idx += 1
-                parts.append(int(buf[start:idx]))
-            idx += 1  # single whitespace after maxval
-            w, h, maxval = parts
-            if maxval != 255:
-                raise ValueError("only maxval=255 supported")
-            px = np.frombuffer(buf, dtype=np.uint8, count=w * h * 3, offset=idx)
-            return px.reshape(h, w, 3)
-
-        def decode_wav(buf: bytes):
-            """RIFF/WAVE PCM16 mono payload -> (sample_rate, int16[n])."""
-            if buf[:4] != b"RIFF" or buf[8:12] != b"WAVE":
-                raise ValueError("not a RIFF/WAVE payload")
-            sr = int.from_bytes(buf[24:28], "little")
-            data_size = int.from_bytes(buf[40:44], "little")
-            return sr, np.frombuffer(buf, dtype="<i2", count=data_size // 2, offset=44)
-
         for pdf in batches:
             rows = []
             for mid, kind, buf in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
@@ -400,25 +408,9 @@ def mm_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "media_id", "payload"
     )
 
-    def ahash(batches):
-        def decode_ppm(buf: bytes):
-            if buf[:2] != b"P6":
-                raise ValueError("not a P6 PPM")
-            parts, idx = [], 2
-            while len(parts) < 3:
-                while buf[idx] in b" \t\r\n":
-                    idx += 1
-                start = idx
-                while buf[idx] not in b" \t\r\n":
-                    idx += 1
-                parts.append(int(buf[start:idx]))
-            idx += 1
-            w, h, maxval = parts
-            if maxval != 255:
-                raise ValueError("only maxval=255 supported")
-            px = np.frombuffer(buf, dtype=np.uint8, count=w * h * 3, offset=idx)
-            return px.reshape(h, w, 3)
+    decode_ppm, _ = media_codecs()
 
+    def ahash(batches):
         for pdf in batches:
             ids, hashes = [], []
             for mid, buf in zip(pdf["media_id"], pdf["payload"]):
@@ -525,25 +517,9 @@ def mm_resize_avgpool(spark: SparkSession, sf_dir: str) -> DataFrame:
         "media_id", "payload"
     )
 
-    def pool(batches):
-        def decode_ppm(buf: bytes):
-            if buf[:2] != b"P6":
-                raise ValueError("not a P6 PPM")
-            parts, idx = [], 2
-            while len(parts) < 3:
-                while buf[idx] in b" \t\r\n":
-                    idx += 1
-                start = idx
-                while buf[idx] not in b" \t\r\n":
-                    idx += 1
-                parts.append(int(buf[start:idx]))
-            idx += 1
-            w, h, maxval = parts
-            if maxval != 255:
-                raise ValueError("only maxval=255 supported")
-            px = np.frombuffer(buf, dtype=np.uint8, count=w * h * 3, offset=idx)
-            return px.reshape(h, w, 3)
+    decode_ppm, _ = media_codecs()
 
+    def pool(batches):
         for pdf in batches:
             ids, poss, vals = [], [], []
             for mid, buf in zip(pdf["media_id"], pdf["payload"]):
@@ -803,17 +779,13 @@ SELECT media_id, frame_idx, rms, rms >= {_VAD_THRESH} AS active FROM fr
 def mm_audio_vad_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = media_table(spark, sf_dir).filter(F.col("kind") == "audio")
 
-    def frames(batches):
-        def decode_wav(buf: bytes):
-            if buf[:4] != b"RIFF" or buf[8:12] != b"WAVE":
-                raise ValueError("not a RIFF/WAVE payload")
-            data_size = int.from_bytes(buf[40:44], "little")
-            return np.frombuffer(buf, dtype="<i2", count=data_size // 2, offset=44)
+    _, decode_wav = media_codecs()
 
+    def frames(batches):
         for pdf in batches:
             rows = []
             for mid, buf in zip(pdf["media_id"], pdf["payload"]):
-                x = decode_wav(bytes(buf)).astype(np.float64) / 32768.0
+                x = decode_wav(bytes(buf))[1].astype(np.float64) / 32768.0
                 for f in range(len(x) // _VAD_FRAME):
                     w = x[_VAD_FRAME * f : _VAD_FRAME * (f + 1)]
                     rows.append((int(mid), f, float(np.sqrt((w * w).mean()))))
@@ -996,24 +968,9 @@ def mm_image_patch_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "media_id", "payload"
     )
 
-    def patchify(batches):
-        def decode_ppm(buf: bytes):
-            if buf[:2] != b"P6":
-                raise ValueError("not a P6 PPM")
-            parts, idx = [], 2
-            while len(parts) < 3:
-                while buf[idx] in b" \t\r\n":
-                    idx += 1
-                start = idx
-                while buf[idx] not in b" \t\r\n":
-                    idx += 1
-                parts.append(int(buf[start:idx]))
-            idx += 1
-            w, h, _ = parts
-            return np.frombuffer(
-                buf, dtype=np.uint8, count=w * h * 3, offset=idx
-            ).reshape(h, w, 3)
+    decode_ppm, _ = media_codecs()
 
+    def patchify(batches):
         for pdf in batches:
             rows = []
             for mid, buf in zip(pdf["media_id"], pdf["payload"]):
@@ -1081,15 +1038,14 @@ def mm_audio_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "media_id", "payload"
     )
 
+    _, decode_wav = media_codecs()
+
     def downsample(batches):
         for pdf in batches:
             rows = []
             for mid, buf in zip(pdf["media_id"], pdf["payload"]):
-                buf = bytes(buf)
-                n = int.from_bytes(buf[40:44], "little") // 2
-                smp = np.frombuffer(buf, dtype="<i2", count=n, offset=44).astype(
-                    np.int64
-                )
+                smp = decode_wav(bytes(buf))[1].astype(np.int64)
+                n = len(smp)
                 ys = [
                     (int(smp[2 * j]) + int(smp[2 * j + 1]) + 2 * _ADS_BIG) // 2
                     - _ADS_BIG
@@ -1153,24 +1109,9 @@ def mm_image_channel_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
         "media_id", "payload"
     )
 
-    def hist(batches):
-        def decode_ppm(buf: bytes):
-            if buf[:2] != b"P6":
-                raise ValueError("not a P6 PPM")
-            parts, idx = [], 2
-            while len(parts) < 3:
-                while buf[idx] in b" \t\r\n":
-                    idx += 1
-                start = idx
-                while buf[idx] not in b" \t\r\n":
-                    idx += 1
-                parts.append(int(buf[start:idx]))
-            idx += 1
-            w, h, _ = parts
-            return np.frombuffer(
-                buf, dtype=np.uint8, count=w * h * 3, offset=idx
-            ).reshape(h, w, 3)
+    decode_ppm, _ = media_codecs()
 
+    def hist(batches):
         for pdf in batches:
             rows = []
             for mid, buf in zip(pdf["media_id"], pdf["payload"]):

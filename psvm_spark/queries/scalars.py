@@ -148,7 +148,9 @@ def scalar_math(spark: SparkSession, sf_dir: str) -> DataFrame:
 # B34 — array functions incl. higher-order transform/filter/aggregate.
 # Exercised on embeddings.embedding (array<float>).  Element values are
 # floats cast to double identically in both engines; zip_with/aggregate
-# run in whole-stage codegen, not Python.
+# run in the JVM, not Python, but outside whole-stage codegen: the
+# higher-order functions are CodegenFallback expressions, interpreted
+# one element at a time.
 
 
 @query(

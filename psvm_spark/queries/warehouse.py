@@ -567,8 +567,8 @@ def sink_zorder_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
 # files).  The xy->d index is the standard iterative rotate-and-fold
 # (16 levels for two 16-bit dims), expressed as ONE Spark
 # ``aggregate`` higher-order fold over descending bit positions with a
-# (d, x, y) struct accumulator — pure codegen'd JVM expression, no
-# UDF.  DuckDB has no typed-accumulator fold, so the oracle iterates
+# (d, x, y) struct accumulator — a pure JVM expression (interpreted:
+# `aggregate` is a CodegenFallback), no UDF.  DuckDB has no typed-accumulator fold, so the oracle iterates
 # the identical 16 steps via a recursive CTE.  The written layout
 # partitions by the top-6-bit Hilbert bucket and sorts by d within
 # files (the same contract the Z-order key proves); the aggregate is

@@ -13,10 +13,11 @@ blow-up of the *fixture*, not the engine:
   the realistic 100 TB shape (facts grow, dims don't).
 - events: event_id AND user_id shift, so the band join's per-user
   click density is copy-invariant.
-- documents: doc_id shifts; text goes through one of 20 distinct
-  letter-rotation transforms (5 vowel x 4 consonant rotations), so
+- documents: doc_id shifts; copy k's text goes through its own
+  letter-rotation transform (5 vowel x 4 'snrt' x 3 'ldcm' rotations,
+  60 distinct; the 'ldcm' rotation is the identity for k < 20), so
   4-word shingles almost never collide across copies and the dedup
-  tier sees 20x the corpora, not 20 identical corpora.
+  tier sees n times the corpora, not n identical corpora.
 - embeddings: vec_id shifts; each copy applies its own deterministic
   per-dimension sign-flip pattern.  Sign flips cancel inside a copy
   (cos(s.x, s.y) == cos(x, y): within-copy geometry is EXACTLY the
@@ -141,6 +142,7 @@ QUAD_QUERIES = ["dedup_embedding"]
 
 VOWELS = "aeiou"
 CONS = "snrt"
+CONS2 = "ldcm"
 
 
 def _offset(df, key) -> int:
@@ -152,15 +154,16 @@ def _with_copies(spark, df, n):
     return df.crossJoin(spark.range(n).toDF("cp"))
 
 
-def _rotated_text(col, cp):
-    """One of 20 distinct letter-rotation transforms keyed by cp."""
+def _rotated_text(col, cp, n):
+    """Copy cp's letter rotation, for cp < n (distinct for n <= 60)."""
     # one WHEN branch per copy: translate's pattern args must be literals
     out = None
-    for k in range(AMP):
-        ra, rb = k % 5, k // 5
+    for k in range(n):
+        ra, rb, rc = k % 5, (k // 5) % 4, k // 20
         va = VOWELS[ra:] + VOWELS[:ra]
         cb = CONS[rb:] + CONS[:rb]
-        t = F.translate(F.translate(col, VOWELS, va), CONS, cb)
+        cc = CONS2[rc:] + CONS2[:rc]
+        t = F.translate(F.translate(F.translate(col, VOWELS, va), CONS, cb), CONS2, cc)
         out = F.when(cp == k, t) if out is None else out.when(cp == k, t)
     return out.otherwise(col)
 
@@ -208,7 +211,7 @@ def build_amplified(spark, base: str, out: str, n: int) -> None:
     amp_docs = (
         _with_copies(spark, docs, n)
         .withColumn("doc_id", F.col("doc_id") + F.col("cp") * did_off)
-        .withColumn("text", _rotated_text(F.col("text"), F.col("cp")))
+        .withColumn("text", _rotated_text(F.col("text"), F.col("cp"), n))
         .drop("cp")
     )
     w(amp_docs, "documents")

@@ -3,15 +3,13 @@ path (round-6 verdict item 8): pressure-test the `_SHINGLE_DF_CAP` and
 probe-modulo constants one tier beyond the standing 20x measurement
 before quoting the 100x story.
 
-Amplification semantics are identical to measure_scale.py (new
-ENTITIES, not denser keys): doc_id/vec_id shift per copy; text goes
-through one of 60 distinct letter-rotation transforms (5 vowel x 4
-'snrt' x 3 'ldcm' rotations) so shingles almost never collide across
-copies; embeddings get per-copy deterministic sign-flip patterns
-(within-copy geometry exact, cross-copy cosines ~0).  Only documents
-and embeddings are amplified — the measured queries read nothing else —
-and the remaining fixture tables are symlinked from the base dir so
-load_table still resolves.
+The amplifier is measure_scale.build_amplified at n = 50 (new ENTITIES,
+not denser keys): every fact table is amplified, doc_id/vec_id shift
+per copy, text goes through one of 60 distinct letter-rotation
+transforms so shingles almost never collide across copies, and
+embeddings get per-copy deterministic sign-flip patterns (within-copy
+geometry exact, cross-copy cosines ~0).  The graph tier uses
+measure_scale.build_graph_amplified.
 
 Expected shapes at 50x:
 - df-capped posting joins (dedup_ngram_jaccard, dedup_components,
@@ -30,24 +28,18 @@ out_dir to force a rebuild).
 from __future__ import annotations
 
 import json
-import os
 import sys
 import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from pyspark.sql import functions as F
+from measure_scale import build_amplified, build_graph_amplified
 
 from psvm_spark import registry
 from psvm_spark.session import SCALE_CONFS, get_spark, scoped_confs
 
 AMP = 50
-MOD = 25200  # lcm(2..10) * 50 — keeps every `id % m` subset copy-invariant
-
-VOWELS = "aeiou"
-CONS = "snrt"
-CONS2 = "ldcm"
 
 DF_CAP_QUERIES = [
     "dedup_ngram_jaccard",
@@ -64,92 +56,6 @@ FIXED_PROBE_QUERIES = ["sim_ann_lsh"]
 # not fixture densification).
 GRAPH_QUERIES = ["graph_kcore", "graph_random_walks", "graph_pagerank"]
 
-SYMLINK_TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events",
-]
-
-
-def _offset(df, key) -> int:
-    mx = df.agg(F.max(key)).collect()[0][0] or 0
-    return ((mx // MOD) + 1) * MOD
-
-
-def _rotated_text(col, cp):
-    """One of 60 distinct letter-rotation transforms keyed by cp."""
-    out = None
-    for k in range(AMP):
-        ra, rb, rc = k % 5, (k // 5) % 4, k // 20
-        va = VOWELS[ra:] + VOWELS[:ra]
-        cb = CONS[rb:] + CONS[:rb]
-        cc = CONS2[rc:] + CONS2[:rc]
-        t = F.translate(F.translate(F.translate(col, VOWELS, va), CONS, cb), CONS2, cc)
-        out = F.when(cp == k, t) if out is None else out.when(cp == k, t)
-    return out.otherwise(col)
-
-
-def build(spark, base: str, out: str) -> None:
-    if os.path.isdir(out) and os.path.exists(os.path.join(out, "_DONE")):
-        return
-    os.makedirs(out, exist_ok=True)
-    for t in SYMLINK_TABLES:
-        dst = f"{out}/{t}.parquet"
-        if not os.path.exists(dst):
-            os.symlink(f"{base.rstrip('/')}/{t}.parquet", dst)
-
-    copies = spark.range(AMP).toDF("cp")
-
-    docs = spark.read.parquet(f"{base}/documents.parquet")
-    did_off = _offset(docs, "doc_id")
-    (
-        docs.crossJoin(copies)
-        .withColumn("doc_id", F.col("doc_id") + F.col("cp") * did_off)
-        .withColumn("text", _rotated_text(F.col("text"), F.col("cp")))
-        .drop("cp")
-        .write.mode("overwrite")
-        .parquet(f"{out}/documents.parquet")
-    )
-
-    emb = spark.read.parquet(f"{base}/embeddings.parquet")
-    vid_off = _offset(emb, "vec_id")
-    sign = lambda i: F.when(  # noqa: E731
-        F.pmod(F.xxhash64(F.col("cp") * F.lit(1000003) + i), F.lit(2)) == 0,
-        F.lit(1.0),
-    ).otherwise(F.lit(-1.0))
-    (
-        emb.crossJoin(copies)
-        .withColumn("vec_id", F.col("vec_id") + F.col("cp") * vid_off)
-        .withColumn(
-            "embedding",
-            F.transform("embedding", lambda x, i: (x * sign(i)).cast("float")),
-        )
-        .drop("cp")
-        .write.mode("overwrite")
-        .parquet(f"{out}/embeddings.parquet")
-    )
-    Path(out, "_DONE").touch()
-
-
-def build_graph(spark, base: str, out: str) -> None:
-    """Lineitem-only graph variant: both endpoint keys shift per copy so
-    the derived vertex set grows with the data (measure_scale.py's
-    build_graph_amplified at AMP=50)."""
-    if os.path.isdir(out) and os.path.exists(os.path.join(out, "_DONE")):
-        return
-    os.makedirs(out, exist_ok=True)
-    li = spark.read.parquet(f"{base}/lineitem.parquet")
-    okey_off = _offset(li, "l_orderkey")
-    pkey_off = _offset(li, "l_partkey")
-    (
-        li.crossJoin(spark.range(AMP).toDF("cp"))
-        .withColumn("l_orderkey", F.col("l_orderkey") + F.col("cp") * okey_off)
-        .withColumn("l_partkey", F.col("l_partkey") + F.col("cp") * pkey_off)
-        .drop("cp")
-        .write.mode("overwrite")
-        .parquet(f"{out}/lineitem.parquet")
-    )
-    Path(out, "_DONE").touch()
-
 
 def main() -> None:
     base = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
@@ -159,7 +65,7 @@ def main() -> None:
     registry.load_all()
 
     t0 = time.perf_counter()
-    build(spark, base, out)
+    build_amplified(spark, base, out, AMP)
     build_s = round(time.perf_counter() - t0, 1)
 
     def mat(df):
@@ -196,7 +102,7 @@ def main() -> None:
             file=sys.stderr,
         )
     out_graph = out.rstrip("/") + "_graph"
-    build_graph(spark, base, out_graph)
+    build_graph_amplified(spark, base, out_graph, AMP)
     for name in GRAPH_QUERIES:
         b = timed(name, base)
         with scoped_confs(spark, {"psvm.graph.n_nodes": str(SCALE_CONFS["graph.n_nodes"] * AMP)}):

@@ -1895,7 +1895,7 @@ class TestDelongCI:
         raw scored panel (placement values per row)."""
         from pyspark.sql import functions as F
 
-        from psvm_spark.queries.ml import SVM_B, GAMMA, _sv_test
+        from psvm_spark.ml.svm import GAMMA, SVM_B, sv_test
         from psvm_spark.ml import kernels as K
         from psvm_spark.registry import QUERIES, load_all
 
@@ -1903,7 +1903,7 @@ class TestDelongCI:
         row = QUERIES["ml_auc_delong_ci"](spark, sf_dir).collect()[0]
         auc_ref = QUERIES["ml_roc_auc"](spark, sf_dir).collect()[0].auc
         assert abs(row.auc - auc_ref) < 1e-9
-        sv, test = _sv_test(spark, sf_dir)
+        sv, test = sv_test(spark, sf_dir)
         k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
         scored = (
             test.crossJoin(F.broadcast(sv))

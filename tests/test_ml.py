@@ -64,6 +64,77 @@ class TestKernels:
         assert np.mean(errs) < 0.05, np.mean(errs)
 
 
+    def test_lattice_twins_agree(self, spark, sf_dir, tmp_path):
+        """quantize / qdot / qsq_l2 equal their DuckDB twins and NumPy,
+        row by row: every embedding paired with the next one, plus
+        negatives, +-0.0 and float32 neighbours of the .0005 rounding
+        boundaries."""
+        import duckdb
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from psvm_spark.ml import kernels as K
+
+        rows = load_table(spark, sf_dir, "embeddings").orderBy("vec_id").collect()
+        vecs = [np.asarray(r.embedding, np.float32) for r in rows]
+        edges = [0.0, -0.0, 0.0005, -0.0005, 0.0015, -0.0025, 1.0005, -0.9995, 0.1235, 3.0]
+        picked = []
+        for e in np.asarray(edges, np.float32):
+            picked += [e, np.nextafter(e, np.float32(1)), np.nextafter(e, np.float32(-1))]
+        picked = np.resize(np.asarray(picked, np.float32), 64)
+        vecs += [picked, -picked, picked[::-1].copy()]
+        a = vecs
+        b = vecs[1:] + vecs[:1]
+        path = str(tmp_path / "pairs.parquet")
+        lf = pa.list_(pa.float32())
+        pq.write_table(
+            pa.table({
+                "id": pa.array(range(len(a)), pa.int64()),
+                "a": pa.array([v.tolist() for v in a], lf),
+                "b": pa.array([v.tolist() for v in b], lf),
+            }),
+            path,
+        )
+
+        sdf = spark.read.parquet(path).select(
+            "id",
+            F.transform("a", K.quantize).alias("qa"),
+            F.transform("b", K.quantize).alias("qb"),
+        )
+        got_spark = {
+            r.id: (list(r.qa), list(r.qb), r.dot, r.d2)
+            for r in sdf.select(
+                "id", "qa", "qb",
+                K.qdot(F.col("qa"), F.col("qb")).alias("dot"),
+                K.qsq_l2(F.col("qa"), F.col("qb")).alias("d2"),
+            ).collect()
+        }
+        con = duckdb.connect()
+        got_duck = {
+            i: (list(qa), list(qb), dot, d2)
+            for i, qa, qb, dot, d2 in con.execute(f"""
+                SELECT id, qa, qb, {K.sql_qdot('qa', 'qb')}, {K.sql_qsq_l2('qa', 'qb')}
+                FROM (SELECT id,
+                             list_transform(a, x -> {K.sql_quantize('x')}) AS qa,
+                             list_transform(b, x -> {K.sql_quantize('x')}) AS qb
+                      FROM read_parquet('{path}'))""").fetchall()
+        }
+        con.close()
+        want = {}
+        for i, (va, vb) in enumerate(zip(a, b)):
+            qa = np.floor(va.astype(np.float64) * K.SCALE + 0.5).astype(np.int64)
+            qb = np.floor(vb.astype(np.float64) * K.SCALE + 0.5).astype(np.int64)
+            pa_, pb_ = qa.tolist(), qb.tolist()
+            want[i] = (
+                pa_, pb_,
+                sum(x * y for x, y in zip(pa_, pb_)),
+                sum((x - y) * (x - y) for x, y in zip(pa_, pb_)),
+            )
+        assert len(want) == len(rows) + 3
+        assert got_spark == want
+        assert got_duck == want
+
+
 class TestSVM:
     @pytest.fixture(scope="class")
     def train_result(self, spark, sf_dir):
@@ -443,7 +514,7 @@ class TestKmeansLloydExact:
         """The exact-oracle Lloyd must equal a NumPy replay of the same
         integer-lattice algorithm: thousandth-quantized points, floor-of-
         mean centroid updates, argmin with lowest-cluster tie-break."""
-        from psvm_spark.queries.ml import _KML_DIM, _KML_ITERS, _KML_K
+        from psvm_spark.queries.ml import _KML_ITERS, _KML_K
 
         e = (
             load_table(spark, sf_dir, "embeddings")
@@ -492,7 +563,8 @@ class TestPcaPowerIteration:
         two directions > 0.9999 after 200 max-norm steps)."""
         import numpy as np
 
-        from psvm_spark.queries.ml import _KML_Q, _PCA_DIM
+        from psvm_spark.ml.kernels import quantize
+        from psvm_spark.queries.ml import _PCA_DIM
         from psvm_spark.registry import QUERIES
 
         rows = QUERIES["ml_pca_power_iteration"](spark, sf_dir).collect()
@@ -503,7 +575,7 @@ class TestPcaPowerIteration:
             [
                 r.q
                 for r in spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-                .selectExpr(f"transform{_KML_Q} AS q")
+                .select(F.transform("embedding", quantize).alias("q"))
                 .collect()
             ],
             dtype=np.int64,
@@ -518,7 +590,7 @@ class TestPcaPowerIteration:
     def test_diag_cells_match_numpy(self, spark, sf_dir):
         import numpy as np
 
-        from psvm_spark.queries.ml import _KML_Q
+        from psvm_spark.ml.kernels import quantize
         from psvm_spark.registry import QUERIES
 
         rows = QUERIES["ml_pca_power_iteration"](spark, sf_dir).collect()
@@ -526,7 +598,7 @@ class TestPcaPowerIteration:
             [
                 r.q
                 for r in spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-                .selectExpr(f"transform{_KML_Q} AS q")
+                .select(F.transform("embedding", quantize).alias("q"))
                 .collect()
             ],
             dtype=np.int64,
@@ -542,12 +614,13 @@ class TestFeatureTtestScreen:
     def test_matches_numpy_welch(self, spark, sf_dir):
         import numpy as np
 
-        from psvm_spark.queries.ml import _KML_Q
+        from psvm_spark.ml.kernels import quantize
         from psvm_spark.registry import QUERIES
 
         rows = QUERIES["ml_feature_ttest_screen"](spark, sf_dir).collect()
-        data = spark.read.parquet(f"{sf_dir}/embeddings.parquet").selectExpr(
-            "CAST(label % 2 AS INT) AS cls", f"transform{_KML_Q} AS q"
+        data = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+            (F.col("label") % 2).cast("int").alias("cls"),
+            F.transform("embedding", quantize).alias("q"),
         ).collect()
         q = np.array([r.q for r in data], dtype=np.int64)
         cls = np.array([r.cls for r in data])
@@ -692,13 +765,13 @@ class TestMcNemar:
         panel; the statistic must recompute from (b, c)."""
         from pyspark.sql import functions as F
 
-        from psvm_spark.queries.ml import SVM_B, GAMMA, _sv_test
+        from psvm_spark.ml.svm import GAMMA, SVM_B, sv_test
         from psvm_spark.ml import kernels as K
         from psvm_spark.registry import QUERIES, load_all
 
         load_all()
         row = QUERIES["ml_mcnemar_test"](spark, sf_dir).collect()[0]
-        sv, test = _sv_test(spark, sf_dir)
+        sv, test = sv_test(spark, sf_dir)
         k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
         scored = (
             test.crossJoin(F.broadcast(sv))
@@ -721,7 +794,7 @@ class TestMcNemar:
 
 class TestHosmerLemeshow:
     def test_deciles_partition_panel_and_contrib_recomputes(self, spark, sf_dir):
-        from psvm_spark.queries.ml import _sv_test
+        from psvm_spark.ml.svm import sv_test
         from psvm_spark.registry import QUERIES, load_all
 
         load_all()
@@ -730,7 +803,7 @@ class TestHosmerLemeshow:
             key=lambda r: r.decile,
         )
         assert [r.decile for r in rows] == list(range(1, 11))
-        _, test = _sv_test(spark, sf_dir)
+        _, test = sv_test(spark, sf_dir)
         n_panel = test.count()
         assert sum(r.n for r in rows) == n_panel
         # ntile: first (n mod 10) deciles get the extra row

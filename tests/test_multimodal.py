@@ -1,8 +1,8 @@
 """Multimodal plumbing tests: binary payload synthesis, mapInPandas
 batch shapes, pixel/sample-level decode vs an independent reference.
 
-The reference implementations here deliberately do NOT call
-psvm_spark.queries.multimodal.decode_ppm/decode_wav — they re-derive
+The reference implementations here deliberately do NOT call the
+decoders of psvm_spark.queries.multimodal.media_codecs — they re-derive
 the payload from the document text with hashlib/struct/NumPy so a bug
 in the shared decoder cannot self-validate.
 """
@@ -13,10 +13,11 @@ import hashlib
 import struct
 
 import numpy as np
+import pytest
 
 from psvm_spark import registry
 from psvm_spark.catalog import load_table
-from psvm_spark.queries.multimodal import media_table
+from psvm_spark.queries.multimodal import media_codecs, media_table
 
 registry.load_all()
 
@@ -35,6 +36,28 @@ def _ref_payload(doc_id: int, text: str) -> bytes:
     if kind == 1:  # audio: WAV header + 128 PCM16 bytes
         return WAV_HEADER + digest * 8
     return digest * 12  # video: 12 x 16-byte frames
+
+
+class TestMediaCodecs:
+    def test_decoders_round_trip_reference_payloads(self):
+        decode_ppm, decode_wav = media_codecs()
+        px = decode_ppm(_ref_payload(0, "x"))
+        assert px.shape == (6, 8, 3) and px.dtype == np.uint8
+        sr, smp = decode_wav(_ref_payload(1, "x"))
+        assert sr == 8000 and smp.shape == (64,)
+
+    def test_ppm_rejects_ascii_and_16_bit_payloads(self):
+        decode_ppm, _ = media_codecs()
+        ascii_p3 = b"P3\n8 6\n255\n" + b"0 " * 144
+        wide = b"P6\n8 6\n65535\n" + bytes(288)
+        for buf in (ascii_p3, wide):
+            with pytest.raises(ValueError):
+                decode_ppm(buf)
+
+    def test_wav_rejects_non_riff_payloads(self):
+        _, decode_wav = media_codecs()
+        with pytest.raises(ValueError):
+            decode_wav(PPM_HEADER + bytes(144))
 
 
 class TestMediaTable:

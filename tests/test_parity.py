@@ -35,6 +35,21 @@ def test_oracle_parity(spark, sf_dir, name):
     assert res.ok, str(res)
 
 
+@pytest.mark.parametrize(
+    "expr", ["array(1, 2)", "map('a', 1)", "named_struct('a', 1)"]
+)
+def test_nested_output_fails(spark, sf_dir, monkeypatch, expr):
+    from psvm_spark.oracle import compare_query
+
+    monkeypatch.setitem(
+        registry.QUERIES, "fake_nested", lambda s, d: s.sql(f"SELECT 1 AS id, {expr} AS v")
+    )
+    monkeypatch.setitem(registry.ORACLES, "fake_nested", "SELECT 1 AS id, [1, 2] AS v")
+    res = compare_query(spark, sf_dir, "fake_nested")
+    assert not res.ok
+    assert "nested output column(s): v:" in str(res)
+
+
 def test_all_oracle_keys_have_queries():
     assert set(registry.ORACLES) <= set(registry.QUERIES)
 

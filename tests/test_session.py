@@ -210,14 +210,14 @@ class TestLazyOracles:
         """Raising the moduli must shrink BOTH the SV model slice and
         the test panel — the fixed-size-model-artifact protocol that
         keeps the SV x test pair volume flat at amplification."""
-        from psvm_spark.queries.ml import _sv_test
+        from psvm_spark.ml.svm import sv_test
 
-        sv_b, test_b = _sv_test(spark, sf_dir)
+        sv_b, test_b = sv_test(spark, sf_dir)
         n_sv_b, n_t_b = sv_b.count(), test_b.count()
         spark.conf.set("psvm.svm.sv_modulo", "100")
         spark.conf.set("psvm.svm.test_modulo", "100")
         try:
-            sv_w, test_w = _sv_test(spark, sf_dir)
+            sv_w, test_w = sv_test(spark, sf_dir)
             n_sv_w, n_t_w = sv_w.count(), test_w.count()
         finally:
             spark.conf.unset("psvm.svm.sv_modulo")

@@ -24,7 +24,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType
@@ -164,10 +163,7 @@ def fit_eval_linear_svc(
     # LinearSVC transform fails with "Task not serializable".  Scala
     # private[spark] setSummary is public at the JVM level, so py4j can
     # clear it; the summary is recomputable and unused here.
-    try:
-        model._java_obj.setSummary(tr.sparkSession._jvm.scala.Option.empty())
-    except Py4JError:  # the method is absent on this Spark build
-        pass
+    model._java_obj.setSummary(tr.sparkSession._jvm.scala.Option.empty())
     pred = model.transform(te)
     acc = pred.agg(
         F.avg((F.col("prediction") == F.col(label_col)).cast("double")).alias("acc")
@@ -257,8 +253,9 @@ def rff_map(
 # The fixed synthetic model f(x) = sum_i alpha_i y_i K(s_i, x) + b
 # [psvm:model.cc] that svm_predict_score and the eval keys built on it
 # score: RBF with GAMMA, deterministic alpha_y per support vector, so
-# both the Spark side (sv_test) and the oracle (SCORE_SQL's `scored`
-# CTE) are fully relational.
+# it is fully relational.  ``score`` (Spark) and ``sql_score`` over the
+# ``SV_SQL`` CTE (DuckDB) are its two twins; every key and oracle that
+# scores the model goes through them.
 
 GAMMA = 0.5
 SVM_B = 0.05
@@ -289,18 +286,39 @@ def sv_test(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     return sv, test
 
 
-SCORE_SQL = f"""
-WITH sv AS (
+def score(panel: DataFrame, sv: DataFrame) -> DataFrame:
+    """f(t_vec) rounded to 6 dp as ``score``, one row per panel row.
+
+    The panel's ``t_vec`` is scored against the broadcast SV table; every
+    other panel column is the grouping key and passes through."""
+    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
+    return (
+        panel.crossJoin(F.broadcast(sv))
+        .groupBy(*[c for c in panel.columns if c != "t_vec"])
+        .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
+    )
+
+
+# DuckDB twins: SV_SQL is the body of the ``sv`` CTE, and sql_score(vec)
+# the aggregate over ``<panel> CROSS JOIN sv`` grouped by the panel key.
+SV_SQL = f"""
   SELECT vec_id AS sv_id, embedding AS sv_vec,
          (CAST(vec_id % 7 AS DOUBLE) - 3.0) * 0.1 AS alpha_y
   FROM embeddings WHERE vec_id % {SV_MOD} = {SV_RES}
-), tst AS (
+"""
+
+
+def sql_score(vec: str) -> str:
+    l2 = K.sql_sq_l2("sv.sv_vec", vec)
+    return f"round(SUM(sv.alpha_y * exp(-{GAMMA} * {l2})) + {SVM_B}, 6)"
+
+
+SCORE_SQL = f"""
+WITH sv AS ({SV_SQL}), tst AS (
   SELECT vec_id AS t_id, embedding AS t_vec, label
   FROM embeddings WHERE vec_id % {TS_MOD} = {TS_RES}
 ), scored AS (
-  SELECT t.t_id, t.label,
-         round(SUM(sv.alpha_y * exp(-{GAMMA} * {K.sql_sq_l2('sv.sv_vec', 't.t_vec')}))
-               + {SVM_B}, 6) AS score
+  SELECT t.t_id, t.label, {sql_score("t.t_vec")} AS score
   FROM tst t CROSS JOIN sv
   GROUP BY t.t_id, t.label
 )

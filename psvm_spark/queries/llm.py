@@ -28,7 +28,7 @@ from psvm_spark.ml.kmeans import (
     lloyd_exact_ctes,
     lloyd_exact_train,
 )
-from psvm_spark.ml.svm import GAMMA, SCORE_SQL, SVM_B, TS_RES, sv_test
+from psvm_spark.ml.svm import SCORE_SQL, SV_SQL, TS_MOD, TS_RES, score, sql_score, sv_test
 from psvm_spark.queries._util import (
     checkpoint,
     fan_out,
@@ -2959,12 +2959,7 @@ FROM scored GROUP BY 1
 )
 def ml_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     sv, test = sv_test(spark, sf_dir)
-    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
-    scored = (
-        test.crossJoin(F.broadcast(sv))
-        .groupBy("t_id", "label")
-        .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
-    )
+    scored = score(test, sv)
     binned = scored.select(
         F.expr(
             "cast(least(greatest(floor((score + 1.0) / 0.25), -1), 8) as bigint)"
@@ -3559,12 +3554,7 @@ FROM cm
 )
 def ml_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     sv, test = sv_test(spark, sf_dir)
-    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
-    scored = (
-        test.crossJoin(F.broadcast(sv))
-        .groupBy("t_id", "label")
-        .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
-    )
+    scored = score(test, sv)
     pred_pos = F.col("score") >= 0
     actual_pos = F.col("label") < 5
     cm = scored.agg(
@@ -3623,12 +3613,7 @@ FROM agg
 )
 def ml_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     sv, test = sv_test(spark, sf_dir)
-    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
-    scored = (
-        test.crossJoin(F.broadcast(sv))
-        .groupBy("t_id", "label")
-        .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
-    )
+    scored = score(test, sv)
     cnts = scored.groupBy("score").agg(
         F.sum((F.col("label") < 5).cast("int")).alias("np_s"),
         F.count(F.lit(1)).alias("n_s"),
@@ -3690,12 +3675,7 @@ FROM cum c CROSS JOIN tot t
 )
 def ml_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     sv, test = sv_test(spark, sf_dir)
-    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
-    scored = (
-        test.crossJoin(F.broadcast(sv))
-        .groupBy("t_id", "label")
-        .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
-    )
+    scored = score(test, sv)
     cnts = scored.groupBy("score").agg(
         F.sum((F.col("label") < 5).cast("int")).alias("np_s"),
         F.count(F.lit(1)).alias("n_s"),
@@ -3841,12 +3821,7 @@ GROUP BY d.decile, t.npos, t.n
 )
 def ml_lift_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     sv, test = sv_test(spark, sf_dir)
-    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
-    scored = (
-        test.crossJoin(F.broadcast(sv))
-        .groupBy("t_id", "label")
-        .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
-    )
+    scored = score(test, sv)
     cnts = scored.groupBy("score").agg(
         F.sum((F.col("label") < 5).cast("int")).alias("np_s"),
         F.count(F.lit(1)).alias("n_s"),
@@ -3983,12 +3958,7 @@ ORDER BY g.gap DESC, g.score LIMIT 1
 )
 def ml_ks_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:
     sv, test = sv_test(spark, sf_dir)
-    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
-    scored = (
-        test.crossJoin(F.broadcast(sv))
-        .groupBy("t_id", "label")
-        .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
-    )
+    scored = score(test, sv)
     cnts = scored.groupBy("score").agg(
         F.sum((F.col("label") < 5).cast("int")).alias("np_s"),
         F.sum((F.col("label") >= 5).cast("int")).alias("nn_s"),
@@ -4140,12 +4110,7 @@ FROM terms
 )
 def ml_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     sv, test = sv_test(spark, sf_dir)
-    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
-    scored = (
-        test.crossJoin(F.broadcast(sv))
-        .groupBy("t_id", "label")
-        .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
-    )
+    scored = score(test, sv)
     binned = scored.select(
         F.expr(
             "cast(least(greatest(floor((score + 1.0) / 0.25), -1), 8) as bigint)"
@@ -4273,12 +4238,7 @@ FROM f1s ORDER BY f1 DESC, score LIMIT 1
 )
 def ml_threshold_f1max(spark: SparkSession, sf_dir: str) -> DataFrame:
     sv, test = sv_test(spark, sf_dir)
-    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
-    scored = (
-        test.crossJoin(F.broadcast(sv))
-        .groupBy("t_id", "label")
-        .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
-    )
+    scored = score(test, sv)
     cnts = scored.groupBy("score").agg(
         F.sum((F.col("label") < 5).cast("int")).alias("np_s"),
         F.count(F.lit(1)).alias("n_s"),
@@ -4679,12 +4639,7 @@ FROM terms
 )
 def ml_ece_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     sv, test = sv_test(spark, sf_dir)
-    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
-    scored = (
-        test.crossJoin(F.broadcast(sv))
-        .groupBy("t_id", "label")
-        .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
-    )
+    scored = score(test, sv)
     binned = scored.select(
         F.expr(
             "cast(least(greatest(floor((score + 1.0) / 0.25), -1), 8) as bigint)"
@@ -5396,13 +5351,7 @@ FROM agg
 )
 def ml_auc_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     sv, test = sv_test(spark, sf_dir)
-    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
-    scored = (
-        test.crossJoin(F.broadcast(sv))
-        .groupBy("t_id", "label")
-        .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
-        .select((F.col("t_id") % 3).alias("segment"), "label", "score")
-    )
+    scored = score(test, sv).select((F.col("t_id") % 3).alias("segment"), "label", "score")
     cnts = scored.groupBy("segment", "score").agg(
         F.sum((F.col("label") < 5).cast("int")).alias("np_s"),
         F.count(F.lit(1)).alias("n_s"),
@@ -10784,11 +10733,16 @@ def sample_exact_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The SVM margin maps to a [0,1] "probability" p = clamp((s+1)/2) and
 # Brier = mean (p-y)^2 decomposes over bins as REL - RES + UNC
 # (reliability / resolution / uncertainty; Murphy 1973).  Exactness:
-# p is 6-dp derived from the deterministic 6-dp score, so sum(p),
-# sum(p^2), sum(p*y) are exact DECIMAL sums; the per-bin REL/RES
-# terms are round9 decimals summed over <= 10 bins; every final value
-# is one fixed-shape double expression.  Same broadcast-SV scoring
-# shape as ml_calibration_bins plus two skinny aggregates.
+# the 6-dp score, clamped to [-1, 1], is cast to DECIMAL(18,6) and
+# p = (s + 1) * 0.5 is exact at 7 dp, then rounded half-up to 6 dp on
+# both engines.  In double, a 7th-digit 5 is a tie that Spark (through
+# Double.toString) and DuckDB (in binary) round apart.  The clamp runs
+# on the double (an exact selection): DuckDB's least/greatest turn
+# DECIMAL arguments into DOUBLE.  sum(p), sum(p^2), sum(p*y) are then
+# exact DECIMAL sums; the per-bin REL/RES terms are round9 decimals
+# summed over <= 10 bins; every final value is one fixed-shape double
+# expression.  Same broadcast-SV scoring shape as ml_calibration_bins
+# plus two skinny aggregates.
 
 
 @query(
@@ -10796,7 +10750,8 @@ def sample_exact_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=SCORE_SQL
     + """
 , probs AS (
-  SELECT round(least(greatest((score + 1.0) / 2.0, 0.0), 1.0), 6) AS p,
+  SELECT round((CAST(least(greatest(score, -1.0), 1.0) AS DECIMAL(18,6)) + 1.0)
+               * 0.5, 6) AS p,
          CASE WHEN label < 5 THEN 1 ELSE 0 END AS y
   FROM scored),
 g AS (
@@ -10836,16 +10791,12 @@ FROM g CROSS JOIN terms t
 )
 def ml_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     sv, test = sv_test(spark, sf_dir)
-    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
-    scored = (
-        test.crossJoin(F.broadcast(sv))
-        .groupBy("t_id", "label")
-        .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
-    )
+    scored = score(test, sv)
+    clamped = F.least(F.greatest(F.col("score"), F.lit(-1.0)), F.lit(1.0))
+    dscore = clamped.cast("decimal(18,6)")
     probs = scored.select(
         F.round(
-            F.least(F.greatest((F.col("score") + 1.0) / 2.0, F.lit(0.0)), F.lit(1.0)),
-            6,
+            (dscore + F.lit(1.0).cast("decimal(2,1)")) * F.lit(0.5).cast("decimal(2,1)"), 6
         ).alias("p"),
         (F.col("label") < 5).cast("int").alias("y"),
     )
@@ -10920,7 +10871,7 @@ def ml_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
 # statistic (b - c)^2 / (b + c), the classic model-comparison gate a
 # training pipeline runs before swapping classifiers.  Truth and the
 # SVM scoring reuse the eval_accuracy machinery (conf-budgeted SV/test
-# slices, ml.py _sv_test); every count is an exact integer and only
+# slices, ml/svm.py sv_test and score); every count is an exact integer and only
 # the final statistic is a rounded double.
 
 
@@ -10949,12 +10900,7 @@ FROM cells
 )
 def ml_mcnemar_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     sv, test = sv_test(spark, sf_dir)
-    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
-    scored = (
-        test.crossJoin(F.broadcast(sv))
-        .groupBy("t_id", "label")
-        .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
-    )
+    scored = score(test, sv)
     pred_a = F.when(F.col("score") >= 0, 1).otherwise(-1)
     pred_b = F.when(F.col("t_id") % 3 == 0, 1).otherwise(-1)
     truth = F.when(F.col("label") % 2 == 0, 1).otherwise(-1)
@@ -11401,12 +11347,7 @@ FROM fin
 )
 def ml_auc_delong_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     sv, test = sv_test(spark, sf_dir)
-    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
-    scored = (
-        test.crossJoin(F.broadcast(sv))
-        .groupBy("t_id", "label")
-        .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
-    )
+    scored = score(test, sv)
     cnts = scored.groupBy("score").agg(
         F.sum((F.col("label") < 5).cast("int")).alias("np_s"),
         F.sum((F.col("label") >= 5).cast("int")).alias("nn_s"),
@@ -11510,12 +11451,7 @@ FROM g
 )
 def ml_hosmer_lemeshow(spark: SparkSession, sf_dir: str) -> DataFrame:
     sv, test = sv_test(spark, sf_dir)
-    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
-    scored = (
-        test.crossJoin(F.broadcast(sv))
-        .groupBy("t_id", "label")
-        .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
-    )
+    scored = score(test, sv)
     dscore = F.col("score").cast("decimal(18,6)")
     p = (
         (F.least(F.greatest(dscore, F.lit(-0.98).cast("decimal(18,6)")),
@@ -11567,19 +11503,15 @@ def ml_hosmer_lemeshow(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PERM_DIMS = (1, 9, 17, 25)  # 1-based probed dimensions
 
 
-# The oracle pins the conf DEFAULT moduli (20) like every _sv_test
-# consumer: compare_query refuses a parity run with the confs raised.
+# The oracle pins the conf DEFAULT moduli (SV_SQL, TS_MOD) like every
+# sv_test consumer: compare_query refuses a parity run with the confs raised.
 @query(
     "ml_permutation_importance",
     oracle=f"""
 WITH tst AS (
   SELECT vec_id AS t_id, embedding AS t_vec, label
-  FROM embeddings WHERE vec_id % 20 = 1
-), sv AS (
-  SELECT vec_id AS sv_id, embedding AS sv_vec,
-         (CAST(vec_id % 7 AS DOUBLE) - 3.0) * 0.1 AS alpha_y
-  FROM embeddings WHERE vec_id % 20 = 0
-), shifted AS (
+  FROM embeddings WHERE vec_id % {TS_MOD} = {TS_RES}
+), sv AS ({SV_SQL}), shifted AS (
   SELECT t_id, label, t_vec,
          COALESCE(LEAD(t_vec) OVER (ORDER BY t_id),
                   FIRST_VALUE(t_vec) OVER (ORDER BY t_id
@@ -11596,9 +11528,7 @@ variants AS (
                                        ELSE x END) AS v
   FROM shifted s, dims d
 ), scored AS (
-  SELECT v.dim, v.t_id, v.label,
-         round(SUM(sv.alpha_y * exp(-{GAMMA} * {K.sql_sq_l2('sv.sv_vec', 'v.v')}))
-               + {SVM_B}, 6) AS score
+  SELECT v.dim, v.t_id, v.label, {sql_score("v.v")} AS score
   FROM variants v CROSS JOIN sv
   GROUP BY v.dim, v.t_id, v.label
 ), acc AS (
@@ -11628,7 +11558,7 @@ def ml_permutation_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
         "t_vec",
         F.coalesce(F.lead("t_vec").over(w), F.first("t_vec").over(w_full)).alias("nxt"),
     ).transform(checkpoint)
-    base = shifted.select(F.lit(0).alias("dim"), "t_id", "label", F.col("t_vec").alias("v"))
+    base = shifted.select(F.lit(0).alias("dim"), "t_id", "label", "t_vec")
     dims = local_df(spark, [(d,) for d in _PERM_DIMS], "dim int")
     perm = (
         shifted.crossJoin(F.broadcast(dims))
@@ -11639,16 +11569,11 @@ def ml_permutation_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(
                 "transform(t_vec, (x, i) -> case when i = dim - 1"
                 " then element_at(nxt, dim) else x end)"
-            ).alias("v"),
+            ).alias("t_vec"),
         )
     )
     variants = base.unionByName(perm)
-    k = K.rbf_kernel(F.col("sv_vec"), F.col("v"), GAMMA)
-    scored = (
-        variants.crossJoin(F.broadcast(sv))
-        .groupBy("dim", "t_id", "label")
-        .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
-    )
+    scored = score(variants, sv)
     pred = F.when(F.col("score") >= 0, 1).otherwise(-1)
     truth = F.when(F.col("label") % 2 == 0, 1).otherwise(-1)
     # |dims|+1 rows, but the subtree is the full variants x SV scoring
@@ -11697,18 +11622,12 @@ _CONF_CAL_RES = 2
 @query(
     "ml_conformal_coverage",
     oracle=f"""
-WITH sv AS (
-  SELECT vec_id AS sv_id, embedding AS sv_vec,
-         (CAST(vec_id % 7 AS DOUBLE) - 3.0) * 0.1 AS alpha_y
-  FROM embeddings WHERE vec_id % 20 = 0
-), panel AS (
+WITH sv AS ({SV_SQL}), panel AS (
   SELECT vec_id AS t_id, embedding AS t_vec, label,
-         CASE WHEN vec_id % 20 = {_CONF_CAL_RES} THEN 'cal' ELSE 'test' END AS part
-  FROM embeddings WHERE vec_id % 20 IN (1, {_CONF_CAL_RES})
+         CASE WHEN vec_id % {TS_MOD} = {_CONF_CAL_RES} THEN 'cal' ELSE 'test' END AS part
+  FROM embeddings WHERE vec_id % {TS_MOD} IN ({TS_RES}, {_CONF_CAL_RES})
 ), scored AS (
-  SELECT p.t_id, p.label, p.part,
-         round(SUM(sv.alpha_y * exp(-{{g}} * {{l2}}))
-               + {{b}}, 6) AS score
+  SELECT p.t_id, p.label, p.part, {sql_score("p.t_vec")} AS score
   FROM panel p CROSS JOIN sv
   GROUP BY p.t_id, p.label, p.part
 ), nonconf AS (
@@ -11729,9 +11648,7 @@ SELECT CAST(q.n_cal AS BIGINT) AS n_cal,
              / COUNT(*), 9) AS coverage
 FROM (SELECT * FROM nonconf WHERE part = 'test') t CROSS JOIN q
 GROUP BY q.n_cal, q.qhat
-""".format(
-        g=GAMMA, b=SVM_B, l2=K.sql_sq_l2("sv.sv_vec", "p.t_vec")
-    ),
+""",
 )
 def ml_conformal_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     sv, _ = sv_test(spark, sf_dir)
@@ -11747,12 +11664,7 @@ def ml_conformal_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("test")
         .alias("part"),
     )
-    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
-    scored = (
-        panel.crossJoin(F.broadcast(sv))
-        .groupBy("t_id", "label", "part")
-        .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
-    )
+    scored = score(panel, sv)
     y = F.when(F.col("label") % 2 == 0, 1).otherwise(-1)
     nonconf = scored.select(
         "t_id", "part", F.round(-y * F.col("score"), 6).alias("s")
@@ -11849,12 +11761,7 @@ GROUP BY t.n_test, t.n_correct
 )
 def ml_label_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     sv, test = sv_test(spark, sf_dir)
-    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
-    scored = (
-        test.crossJoin(F.broadcast(sv))
-        .groupBy("t_id", "label")
-        .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
-    )
+    scored = score(test, sv)
     w = Window.orderBy("t_id")
     w_full = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     ranked = scored.select(
@@ -12047,12 +11954,7 @@ FROM g CROSS JOIN tot t
 )
 def ml_fairness_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     sv, test = sv_test(spark, sf_dir)
-    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
-    scored = (
-        test.crossJoin(F.broadcast(sv))
-        .groupBy("t_id", "label")
-        .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
-    )
+    scored = score(test, sv)
     cls = scored.select(
         (F.col("t_id") % _FAIR_GROUPS).alias("grp"),
         (F.col("score") >= 0).cast("int").alias("pos_pred"),

@@ -25,7 +25,7 @@ from psvm_spark.catalog import load_table
 from psvm_spark.ml import kernels as K
 from psvm_spark.ml.icf import icf_pivots
 from psvm_spark.ml.kmeans import lloyd_exact_assign, lloyd_exact_ctes, lloyd_exact_train
-from psvm_spark.ml.svm import GAMMA, SCORE_SQL, SVM_B, TS_MOD, TS_RES, sv_test
+from psvm_spark.ml.svm import GAMMA, SCORE_SQL, TS_MOD, TS_RES, score, sv_test
 from psvm_spark.registry import query
 from psvm_spark.queries._util import local_df, scratch_dir
 
@@ -126,12 +126,7 @@ FROM scored
 )
 def svm_predict_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     sv, test = sv_test(spark, sf_dir)
-    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
-    scored = (
-        test.crossJoin(F.broadcast(sv))
-        .groupBy("t_id", "label")
-        .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
-    )
+    scored = score(test, sv)
     return scored.select(
         "t_id",
         "score",
@@ -156,12 +151,7 @@ FROM scored
 )
 def eval_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     sv, test = sv_test(spark, sf_dir)
-    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
-    scored = (
-        test.crossJoin(F.broadcast(sv))
-        .groupBy("t_id", "label")
-        .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
-    )
+    scored = score(test, sv)
     pred = F.when(F.col("score") >= 0, 1).otherwise(-1)
     truth = F.when(F.col("label") % 2 == 0, 1).otherwise(-1)
     return scored.agg(
@@ -293,24 +283,14 @@ FROM embeddings WHERE vec_id % {TS_MOD} = {TS_RES}
 """,
 )
 def svm_model_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-
     sv, test = sv_test(spark, sf_dir)
     path = scratch_dir("psvm_model_") + "/model_sv"
     sv.write.mode("overwrite").parquet(path)
     sv2 = spark.read.parquet(path)
-    k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
-
-    def score(svdf):
-        return (
-            test.crossJoin(F.broadcast(svdf))
-            .groupBy("t_id")
-            .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
-        )
-
-    a = score(sv).withColumnRenamed("score", "score_orig")
-    b = score(sv2).withColumnRenamed("score", "score_reloaded")
+    a = score(test, sv).withColumnRenamed("score", "score_orig")
+    b = score(test, sv2).withColumnRenamed("score", "score_reloaded")
     return (
-        a.join(b, "t_id")
+        a.join(b, ["t_id", "label"])
         .agg(
             F.count(F.lit(1)).alias("n_scored"),
             F.sum((F.col("score_orig") == F.col("score_reloaded")).cast("long")).alias("n_equal"),

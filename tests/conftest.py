@@ -25,3 +25,9 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def sf_dir_bench():
+    """The scale bench.py runs at."""
+    return str(Path(SF_DIR).with_name("sf0.1"))

@@ -1893,10 +1893,7 @@ class TestDelongCI:
         """The point estimate must equal ml_roc_auc's AUC exactly, and
         the DeLong variance must match a direct python replay over the
         raw scored panel (placement values per row)."""
-        from pyspark.sql import functions as F
-
-        from psvm_spark.ml.svm import GAMMA, SVM_B, sv_test
-        from psvm_spark.ml import kernels as K
+        from psvm_spark.ml.svm import score, sv_test
         from psvm_spark.registry import QUERIES, load_all
 
         load_all()
@@ -1904,12 +1901,7 @@ class TestDelongCI:
         auc_ref = QUERIES["ml_roc_auc"](spark, sf_dir).collect()[0].auc
         assert abs(row.auc - auc_ref) < 1e-9
         sv, test = sv_test(spark, sf_dir)
-        k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
-        scored = (
-            test.crossJoin(F.broadcast(sv))
-            .groupBy("t_id", "label")
-            .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
-        ).collect()
+        scored = score(test, sv).collect()
         pos = sorted(r.score for r in scored if r.label < 5)
         neg = sorted(r.score for r in scored if r.label >= 5)
         import bisect

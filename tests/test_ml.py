@@ -285,6 +285,23 @@ class TestMulticlassHinge:
         assert res.accuracy > 0.9, res
 
 
+class TestLinearSVCAfterObserve:
+    def test_fit_eval_after_observe(self, spark, sf_dir):
+        """Once any df.observe has run, the session's ObservationManager
+        rides into every task that captures the fitted model's training
+        summary; fit_eval_linear_svc must clear it and still evaluate."""
+        from pyspark.sql import Observation
+
+        from psvm_spark.ml.svm import binary_train_test, fit_eval_linear_svc
+
+        obs = Observation("svc_probe")
+        spark.range(10).observe(obs, F.count(F.lit(1)).alias("n")).collect()
+        assert obs.get["n"] == 10
+        train, test, _ = binary_train_test(spark, sf_dir)
+        _, acc = fit_eval_linear_svc(train, test, "embedding", max_iter=5)
+        assert 0.0 <= acc <= 1.0
+
+
 class TestClassWeights:
     def test_positive_weight_shifts_predictions(self, spark, sf_dir):
         """The reference's -positive_weight/-negative_weight knob: an
@@ -763,21 +780,13 @@ class TestMcNemar:
         """b + c must equal the number of test rows where exactly one
         classifier is right, recomputed independently from the scored
         panel; the statistic must recompute from (b, c)."""
-        from pyspark.sql import functions as F
-
-        from psvm_spark.ml.svm import GAMMA, SVM_B, sv_test
-        from psvm_spark.ml import kernels as K
+        from psvm_spark.ml.svm import score, sv_test
         from psvm_spark.registry import QUERIES, load_all
 
         load_all()
         row = QUERIES["ml_mcnemar_test"](spark, sf_dir).collect()[0]
         sv, test = sv_test(spark, sf_dir)
-        k = K.rbf_kernel(F.col("sv_vec"), F.col("t_vec"), GAMMA)
-        scored = (
-            test.crossJoin(F.broadcast(sv))
-            .groupBy("t_id", "label")
-            .agg(F.round(F.sum(F.col("alpha_y") * k) + SVM_B, 6).alias("score"))
-        ).collect()
+        scored = score(test, sv).collect()
         b = c = 0
         for r in scored:
             pa = 1 if r.score >= 0 else -1
